@@ -259,14 +259,42 @@ object Kernels {
     sig
   }
 
-  /** MinHash signature: min over shingles of pmod(pmod(xxh64(s),p)*a+b, p)
-    * per permutation — parity with the transform/array_min formulation.
+  private final class Md5State {
+    val md: java.security.MessageDigest = java.security.MessageDigest.getInstance("MD5")
+    val out = new Array[Byte](16)
+  }
+  private val md5State = ThreadLocal.withInitial[Md5State](() => new Md5State)
+
+  /** The first 60 bits of md5(utf8(s)) as a non-negative long — the
+    * engine-portable hash, the kernel form of Sampling.portableHash60
+    * (`conv(substring(md5(s), 1, 15), 16, 10)`).
     */
-  def minhashSig(shingles: ArrayData, a: Array[Long], b: Array[Long], p: Long): ArrayData = {
+  private def md5Prefix60(s: UTF8String): Long = {
+    val m = md5State.get
+    m.md.update(s.getBytes)
+    m.md.digest(m.out, 0, 16)
+    var h = 0L
+    var i = 0
+    while (i < 8) { h = (h << 8) | (m.out(i) & 0xffL); i += 1 }
+    h >>> 4
+  }
+
+  /** MinHash signature: min over shingles of pmod(pmod(hash(s),p)*a+b, p)
+    * per permutation. The shingle hash is xxh64 by default (parity with
+    * the transform/array_min formulation) and [[md5Prefix60]] when
+    * `portable` (parity with the md5/conv/min SQL an external engine
+    * replays).
+    */
+  def minhashSig(shingles: ArrayData, a: Array[Long], b: Array[Long], p: Long,
+                 portable: Boolean = false): ArrayData = {
     val n = shingles.numElements()
     val hashes = new Array[Long](n)
     var i = 0
-    while (i < n) { hashes(i) = pmod(xxh64(shingles.getUTF8String(i)), p); i += 1 }
+    while (i < n) {
+      val s = shingles.getUTF8String(i)
+      hashes(i) = pmod(if (portable) md5Prefix60(s) else xxh64(s), p)
+      i += 1
+    }
     val sig = new Array[Long](a.length)
     var k = 0
     while (k < a.length) {
@@ -898,7 +926,8 @@ object Kernels {
     * (and the oracle's list_sum replay): the dot sums products
     * left-to-right, and a null element or a length mismatch — which the
     * HOF turns into a NULL dot via zip_with's null padding — leaves the
-    * bit unset exactly as `WHEN null >= 0` does.
+    * bit unset exactly as `WHEN null >= 0` does, and a NaN dot sets it
+    * exactly as `WHEN NaN >= 0` does. Asserted in ExpressionsSpec.
     */
   def planeSigs(vec: ArrayData, planes: Array[Array[Double]], bits: Int): ArrayData = {
     val tables = planes.length / bits
@@ -918,7 +947,9 @@ object Kernels {
             if (vec.isNullAt(j)) sawNull = true
             else { dot += vec.getDouble(j) * plane(j); j += 1 }
           }
-          if (!sawNull && dot >= 0.0) sig |= (1L << b)
+          // !(dot < 0), not dot >= 0: SQL orders NaN above every number,
+          // so a NaN dot sets the bit in the fold (and in the oracle)
+          if (!sawNull && !(dot < 0.0)) sig |= (1L << b)
         }
         b += 1
       }
@@ -1002,36 +1033,56 @@ case class SimHash64Expr(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
-case class MinHashSigExpr(child: Expression, numPerms: Int, seed: Long)
+/** MinHash signature of a shingle array. `portable` selects the basis:
+  *  - false (native): xxh64 shingle hashes, each permutation's a_i and b_i
+  *    drawn in turn from the seeded generator;
+  *  - true (portable): the first 60 bits of md5 (any SQL engine can
+  *    replay it), all a_i drawn before all b_i. These are the constants of
+  *    NearDedup.portablePerms, which the DuckDB oracle SQL interpolates.
+  */
+case class MinHashSigExpr(child: Expression, numPerms: Int, seed: Long,
+                          portable: Boolean = false)
     extends UnaryExpression {
-  // Canonical MinHash prime: 2^31-1. An earlier HOF formulation used 2^61-1,
-  // which risked silent long overflow in h*a under ANSI-off eval; signatures
-  // produced under that prime are NOT comparable to these — any persisted
-  // signature caches (Memoize/parquet) from before the switch must be rebuilt.
-  private val p = 2147483647L
-  @transient private lazy val perms: (Array[Long], Array[Long]) = {
-    val rnd = new scala.util.Random(seed)
-    val a = new Array[Long](numPerms); val b = new Array[Long](numPerms)
-    var i = 0
-    while (i < numPerms) {
-      a(i) = math.abs(rnd.nextLong()) % (p - 1) + 1
-      b(i) = math.abs(rnd.nextLong()) % p
-      i += 1
-    }
-    (a, b)
-  }
+  @transient lazy val perms: (Array[Long], Array[Long]) =
+    MinHashSigExpr.perms(numPerms, seed, portable)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "graft_minhash_sig"
   override protected def nullSafeEval(arr: Any): Any =
-    Kernels.minhashSig(arr.asInstanceOf[ArrayData], perms._1, perms._2, p)
+    Kernels.minhashSig(arr.asInstanceOf[ArrayData], perms._1, perms._2,
+      MinHashSigExpr.P, portable)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val aRef = ctx.addReferenceObj("minhashA", perms._1, "long[]")
     val bRef = ctx.addReferenceObj("minhashB", perms._2, "long[]")
     nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.expressions.Kernels.minhashSig($c, $aRef, $bRef, ${p}L);")
+      s"${ev.value} = graft.expressions.Kernels.minhashSig(" +
+        s"$c, $aRef, $bRef, ${MinHashSigExpr.P}L, $portable);")
   }
   override protected def withNewChildInternal(newChild: Expression): MinHashSigExpr =
     copy(child = newChild)
+}
+
+object MinHashSigExpr {
+  // Canonical MinHash prime: 2^31-1. An earlier HOF formulation used 2^61-1,
+  // which risked silent long overflow in h*a under ANSI-off eval; signatures
+  // produced under that prime are NOT comparable to these — any persisted
+  // signature caches (Memoize/parquet) from before the switch must be rebuilt.
+  val P: Long = 2147483647L
+
+  /** The (a, b) permutation constants, a_i in [1, P-1] and b_i in [0, P-1],
+    * in the draw order of the basis (see the class doc).
+    */
+  def perms(numPerms: Int, seed: Long, portable: Boolean): (Array[Long], Array[Long]) = {
+    val rnd = new scala.util.Random(seed)
+    def drawA(): Long = math.abs(rnd.nextLong()) % (P - 1) + 1
+    def drawB(): Long = math.abs(rnd.nextLong()) % P
+    if (portable) {
+      val a = Array.fill(numPerms)(drawA())
+      (a, Array.fill(numPerms)(drawB()))
+    } else {
+      val ab = Array.fill(numPerms)((drawA(), drawB()))
+      (ab.map(_._1), ab.map(_._2))
+    }
+  }
 }
 
 case class ShinglesExpr(child: Expression, n: Int) extends UnaryExpression {
@@ -1346,8 +1397,9 @@ object GraftFunctions {
     Shim.column(TypeProbeExpr(Shim.expression(c)))
   def unicodeNormalize(c: Column, form: String = "NFC"): Column =
     Shim.column(UnicodeNormExpr(Shim.expression(c), form))
-  def minhashSignature(c: Column, numPerms: Int, seed: Long = 42L): Column =
-    Shim.column(MinHashSigExpr(Shim.expression(c), numPerms, seed))
+  def minhashSignature(c: Column, numPerms: Int, seed: Long = 42L,
+                       portable: Boolean = false): Column =
+    Shim.column(MinHashSigExpr(Shim.expression(c), numPerms, seed, portable))
   def cosine(a: Column, b: Column): Column =
     Shim.column(CosineSimExpr(Shim.expression(a), Shim.expression(b)))
   def hyperplaneSignature(c: Column, dim: Int, bits: Int, seed: Long = 7L): Column =

@@ -22,7 +22,10 @@ object Memoize {
     * identical pipelines within a Spark version) PLUS the input file set:
     * the analyzed plan string does NOT print file-source paths, so two runs
     * of the same pipeline over different directories would otherwise collide
-    * and replay the wrong cache.
+    * and replay the wrong cache. The plan text is rendered with no field
+    * limit: the default rendering cuts lists after
+    * `spark.sql.debug.maxToStringFields` entries, so two wide projections
+    * differing only past the cut would share a fingerprint.
     */
   def planFingerprint(df: DataFrame): String = {
     // checkpointed/RDD-backed subtrees print as a bare `LogicalRDD [cols]`
@@ -34,7 +37,8 @@ object Memoize {
     val rddIds = df.queryExecution.analyzed.collect {
       case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
     }
-    val canon = df.queryExecution.analyzed.toString
+    val canon = df.queryExecution.analyzed
+      .treeString(verbose = true, maxFields = Int.MaxValue)
       .replaceAll("#\\d+", "#") + // strip per-session expression ids
       "\n" + df.inputFiles.sorted.mkString("\n") +
       (if (rddIds.isEmpty) "" else "\nrdds:" + rddIds.mkString(","))

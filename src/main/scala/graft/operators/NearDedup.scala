@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.expressions.MinHashSigExpr
 import graft.functions.TextFunctions
 
 /** Near-duplicate detection for training-data pipelines: exact, MinHash+LSH,
@@ -112,14 +113,12 @@ object NearDedup {
         df.select(col(idCol).as("id"), col(textCol).as("__t")), col("id"))
       .select(col("id"),
         graft.expressions.GraftFunctions.shingles(col("__t"), shingleSize).as("sh"))
-    // NOT materialized (round 16: tried the minhashPairsPortable
-    // localCheckpoint trade on these banded keys and measured a wash on
-    // clean same-host A/Bs — q47 mins 0.89 vs 0.87 s at sf0.1, 3.39 vs
-    // 3.68 s at sf1, both within run noise. Unlike the portable's
-    // md5/many-operator pipeline, this native xxhash64 front end is cheap
-    // to plan and the candidate self-join's sides already share it at
-    // runtime through exchange reuse, so there is nothing for the eager
-    // materialization to repay; declined).
+    // NOT materialized (round 16: a localCheckpoint of these banded keys
+    // measured a wash on clean same-host A/Bs — q47 mins 0.89 vs 0.87 s at
+    // sf0.1, 3.39 vs 3.68 s at sf1, both within run noise. The front end
+    // is one kernel projection, cheap to plan, and the candidate
+    // self-join's sides already share it at runtime through exchange
+    // reuse, so there is nothing for the eager materialization to repay).
     val banded = shingled
       .withColumn("sig", minhashSignature(col("sh"), numPerms))
       .withColumn("band", explode(bandKeys(col("sig"), bands, rowsPerBand)))
@@ -166,15 +165,13 @@ object NearDedup {
   }
 
   /** Portable-hash permutation constants: the SAME arrays parameterize the
-    * Spark plan and the external oracle SQL, so both engines compute
-    * identical signatures. p = 2^31-1 keeps a·h+b inside 2^62 (ANSI-safe).
+    * Spark plan's signature kernel and the external oracle SQL, so both
+    * engines compute identical signatures. p = 2^31-1 keeps a·h+b inside
+    * 2^62 (ANSI-safe).
     */
-  val PortableP: Long = 2147483647L
   def portablePerms(numPerms: Int, seed: Long = 42L): (Seq[Long], Seq[Long]) = {
-    val rnd = new scala.util.Random(seed)
-    val as = Seq.fill(numPerms)(math.abs(rnd.nextLong()) % (PortableP - 1) + 1)
-    val bs = Seq.fill(numPerms)(math.abs(rnd.nextLong()) % PortableP)
-    (as, bs)
+    val (as, bs) = MinHashSigExpr.perms(numPerms, seed, portable = true)
+    (as.toSeq, bs.toSeq)
   }
 
   /** (id, sh) shingle sets on the portable basis — the verify-stage relation
@@ -182,10 +179,10 @@ object NearDedup {
     */
   private def portableShingles(df: DataFrame, idCol: String, textCol: String,
                                shingleSize: Int): DataFrame =
-    // Spread a single-split scan before the shingle kernel: every md5 of
-    // the portable pipeline evaluates downstream of this projection, and a
-    // one-row-group input otherwise serializes all of it on one core
-    // (Tuning.spread is a no-op on an already-parallel scan).
+    // Spread a single-split scan before the shingle kernel: the signature
+    // kernel evaluates downstream of this projection, and a one-row-group
+    // input otherwise serializes all of it on one core (Tuning.spread is a
+    // no-op on an already-parallel scan).
     Tuning.spread(df.select(col(idCol).as("id"), col(textCol).as("__t")), col("id"))
       .select(col("id"),
         graft.expressions.GraftFunctions.shingles(col("__t"), shingleSize).as("sh"))
@@ -195,24 +192,31 @@ object NearDedup {
     * the persistable near-dup index of a corpus release: store both per
     * release and incremental batches join against them without rescanning
     * prior text.
+    *
+    * One narrow map per row, no shuffle: the shared signature kernel
+    * (MinHashSigExpr on its portable basis) computes the signature, the
+    * band key is md5 of the comma-joined signature slice, and the bands
+    * explode into rows. A null or empty shingle array yields no rows.
+    *
+    * PRECONDITION: `id` is unique in `sh`. Each row gets its own
+    * signature; rows sharing an id are not merged into one shingle set.
     */
-  private def portableBands(sh: DataFrame, numPerms: Int, bands: Int,
-                            seed: Long): DataFrame = {
+  private[graft] def portableBands(sh: DataFrame, numPerms: Int, bands: Int,
+                                   seed: Long): DataFrame = {
     require(numPerms % bands == 0, "numPerms must divide into bands")
     val rowsPerBand = numPerms / bands
-    val (as, bs) = portablePerms(numPerms, seed)
-    val ex = sh.select(col("id"), explode(col("sh")).as("s"))
-      .withColumn("hm",
-        conv(substring(md5(col("s")), 1, 15), 16, 10).cast(LongType) % PortableP)
-    val sigAggs = (0 until numPerms).map(i =>
-      min((col("hm") * as(i) + bs(i)) % PortableP).as(s"sig$i"))
-    val sigs = ex.groupBy(col("id")).agg(sigAggs.head, sigAggs.tail: _*)
     val bandStructs = (0 until bands).map { b =>
       struct(lit(b).as("band"),
         md5(concat_ws(",",
-          (0 until rowsPerBand).map(r => col(s"sig${b * rowsPerBand + r}")): _*)).as("bk"))
+          (0 until rowsPerBand).map(r => col("sig")(b * rowsPerBand + r)): _*)).as("bk"))
     }
-    sigs.select(col("id"), explode(array(bandStructs: _*)).as("q"))
+    // The empty check rides the explode (explode(null) emits nothing): a
+    // Filter on `sh` would be pushed below the shingle projection and
+    // shingle every row twice.
+    sh.select(col("id"), col("sh"), graft.expressions.GraftFunctions.minhashSignature(
+        col("sh"), numPerms, seed, portable = true).as("sig"))
+      .select(col("id"),
+        explode(when(size(col("sh")) > 0, array(bandStructs: _*))).as("q"))
       .select(col("id"), col("q.band").as("band"), col("q.bk").as("bk"))
   }
 
@@ -220,11 +224,13 @@ object NearDedup {
     * first 60 bits of md5 (any engine can reproduce it — unlike xxhash64),
     * permutations come from [[portablePerms]], and band keys are md5 of the
     * comma-joined signature slice. Semantics and shape match
-    * [[minhashPairs]]; the price is md5 instead of the codegen'd xxhash64
-    * kernel, so the native variant remains the production path — this one
-    * exists so the WHOLE LSH pipeline (hashing, banding, candidate join,
-    * exact-jaccard verify) can be replayed and checked bit-for-bit by an
-    * external SQL engine.
+    * [[minhashPairs]], and so does the signature: both run the same
+    * compiled kernel (MinHashSigExpr), which differs between the two only
+    * in the shingle hash and the permutation constants. What the portable
+    * basis adds is that the WHOLE LSH pipeline (hashing, banding,
+    * candidate join, exact-jaccard verify) can be replayed and checked
+    * bit-for-bit by an external SQL engine. `id` must be unique (see
+    * [[portableBands]]).
     *
     * Degenerate band buckets (a boilerplate corpus collapsing thousands of
     * docs onto one (band, bk) value) are dropped WHOLE when larger than
@@ -235,14 +241,13 @@ object NearDedup {
     * library: a bucket of n identical docs costs n²/2 candidate rows.
     * Mechanically the cap is a count-over-(band, bk) window filter, NOT
     * the native path's aggregate + broadcast anti-join: an anti-join's
-    * bucket-size branch recomputes the md5-signature pipeline a second
-    * time (measured +33% on q93 at sf0.1), while the window rides the
-    * exchange+sort the candidate self-join needs anyway and both join
-    * sides reuse ONE signature pass (ReusedExchange). The trade: a hot
-    * bucket's rows buffer in one window task — (id, band, bk) rows only,
-    * spill-bounded and linear, acceptable for the non-production twin
-    * (the native path keeps the map-side-combined aggregate, which never
-    * concentrates a bucket).
+    * bucket-size branch recomputes the signature pipeline a second time,
+    * while the window rides the exchange+sort the candidate self-join
+    * needs anyway and both join sides reuse ONE signature pass
+    * (ReusedExchange). The trade: a hot bucket's rows buffer in one window
+    * task — (id, band, bk) rows only, spill-bounded and linear, acceptable
+    * for the non-production twin (the native path keeps the
+    * map-side-combined aggregate, which never concentrates a bucket).
     */
   def minhashPairsPortable(df: DataFrame, idCol: String, textCol: String,
                            shingleSize: Int = 3, numPerms: Int = 32,
@@ -250,17 +255,11 @@ object NearDedup {
                            seed: Long = 42L,
                            maxBucketSize: Int = DefaultMaxBucketSize): DataFrame = {
     val sh = portableShingles(df, idCol, textCol, shingleSize)
-    // Banded keys materialized ONCE (round 16 — the hammingPairs64 trade):
-    // (id, band, bk) is ~25 bytes × bands rows per doc, and its lineage —
-    // the md5 shingle hash + 32-permutation signature aggregation — is the
-    // pipeline's whole front-end cost. Runtime exchange reuse already made
-    // the two self-join sides share one signature pass, but the DUPLICATED
-    // SUBTREES still each get planned (and the window-cap branch carries a
-    // third copy): at bench SF the driver spent more time planning the
-    // ~300-operator plan than the executors spent running it. Blocks are
-    // ContextCleaner-reclaimed; the shingle ARRAYS stay un-materialized
-    // (re-scan beats caching for payload-sized relations — see above).
-    val banded = portableBands(sh, numPerms, bands, seed).localCheckpoint()
+    // Not materialized: the banded keys are a few narrow operators over
+    // the scan, cheap to plan three times (window cap, both self-join
+    // sides), and the self-join sides share them at runtime through
+    // exchange reuse.
+    val banded = portableBands(sh, numPerms, bands, seed)
     val wB = org.apache.spark.sql.expressions.Window
       .partitionBy(col("band"), col("bk"))
     val kept = banded.withColumn("__n", count(lit(1)).over(wB))
@@ -886,14 +885,15 @@ object NearDedup {
                                       maxBucketSize: Int = DefaultMaxBucketSize): DataFrame = {
     val fsh = portableShingles(fresh, idCol, textCol, shingleSize)
     val psh = portableShingles(prior, idCol, textCol, shingleSize)
-    // Both sides' banded keys materialized ONCE (round 16 — the
-    // minhashPairsPortable trade, see there): the tagged union feeds the
-    // window count and both filtered candidate branches, so each side's
-    // md5+signature pipeline was planned three times over. (id, band, bk,
-    // bool) is ~26 bytes × bands rows per doc; at production scale the
-    // prior side of this relation is the persisted release index anyway.
-    // The shingle ARRAYS (fsh/psh) stay un-materialized for the verify
-    // rejoin — re-scan beats caching for payload-sized relations.
+    // Both sides' banded keys materialized ONCE (round 16): the tagged
+    // union feeds the window count and both filtered candidate branches.
+    // The checkpoint dates from the explode + min-aggregate signature,
+    // whose subtree was costly to plan three times; with the signature
+    // kernel it has not been re-measured. (id, band, bk, bool) is ~26
+    // bytes × bands rows per doc; at production scale the prior side of
+    // this relation is the persisted release index anyway. The shingle
+    // ARRAYS (fsh/psh) stay un-materialized for the verify rejoin —
+    // re-scan beats caching for payload-sized relations.
     val tagged = portableBands(fsh, numPerms, bands, seed)
       .select(col("band"), col("bk"), col("id"), lit(true).as("__fresh"))
       .unionAll(portableBands(psh, numPerms, bands, seed)

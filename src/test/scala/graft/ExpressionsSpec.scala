@@ -1,8 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.expressions.GraftFunctions
+import org.apache.spark.sql.catalyst.expressions.Literal
+import graft.expressions.{GraftFunctions, MinHashSigExpr}
 import graft.functions.{TextFunctions, VectorFunctions}
 
 /** Native codegen'd expressions: value parity with the HOF formulations and
@@ -353,6 +354,132 @@ class ExpressionsSpec extends SparkSpec {
     val slow = TextFunctions.scriptProfileRegex(df, "text")
       .select(cols.map(col): _*).collect().map(_.toSeq)
     assert(fast.toSeq == slow.toSeq)
+  }
+
+  /** Runs `body` once with every projection code-generated (whole-stage
+    * on, no interpreted fallback) and once fully interpreted, over inputs
+    * read back from parquet so no optimizer rule folds the projection
+    * into a local relation before execution.
+    */
+  private def inBothCodegenModes(body: String => Unit): Unit =
+    for ((mode, wholeStage) <- Seq("CODEGEN_ONLY" -> "true", "NO_CODEGEN" -> "false")) {
+      spark.conf.set("spark.sql.codegen.factoryMode", mode)
+      spark.conf.set("spark.sql.codegen.wholeStage", wholeStage)
+      try body(mode)
+      finally {
+        spark.conf.unset("spark.sql.codegen.factoryMode")
+        spark.conf.unset("spark.sql.codegen.wholeStage")
+      }
+    }
+
+  private def assertSameRows(got: DataFrame, want: DataFrame, clue: String): Unit = {
+    val extra = got.exceptAll(want).collect()
+    val missing = want.exceptAll(got).collect()
+    assert(extra.isEmpty && missing.isEmpty,
+      s"$clue: extra ${extra.take(5).mkString(", ")}; missing ${missing.take(5).mkString(", ")}")
+  }
+
+  test("portable minhash kernel matches the explode/md5/min-aggregate bands exactly") {
+    import graft.operators.NearDedup
+    val (as, bs) = NearDedup.portablePerms(32)
+    // the kernel's constants ARE the ones the oracle SQL interpolates; the
+    // native basis keeps its interleaved draw
+    val portableExpr = MinHashSigExpr(Literal(null), 32, 42L, portable = true)
+    assert(portableExpr.perms._1.toSeq == as && portableExpr.perms._2.toSeq == bs)
+    val rnd0 = new scala.util.Random(42L)
+    val interleaved = Seq.fill(32)((math.abs(rnd0.nextLong()) % (MinHashSigExpr.P - 1) + 1,
+      math.abs(rnd0.nextLong()) % MinHashSigExpr.P))
+    val nativeExpr = MinHashSigExpr(Literal(null), 32, 42L)
+    assert(nativeExpr.perms._1.toSeq == interleaved.map(_._1) &&
+      nativeExpr.perms._2.toSeq == interleaved.map(_._2))
+    assert(nativeExpr.perms._1.toSeq != as)
+
+    // The formulation the kernel replaced: one row per shingle, md5 → 60
+    // bits → mod p, then 32 min aggregates grouped by id.
+    def reference(sh: DataFrame): DataFrame = {
+      val p = MinHashSigExpr.P
+      val ex = sh.select(col("id"), explode(col("sh")).as("s"))
+        .withColumn("hm",
+          conv(substring(md5(col("s")), 1, 15), 16, 10).cast("long") % p)
+      val aggs = (0 until 32).map(i => min((col("hm") * as(i) + bs(i)) % p).as(s"sig$i"))
+      val sigs = ex.groupBy(col("id")).agg(aggs.head, aggs.tail: _*)
+      val bands = (0 until 8).map { b =>
+        struct(lit(b).as("band"),
+          md5(concat_ws(",", (0 until 4).map(r => col(s"sig${b * 4 + r}")): _*)).as("bk"))
+      }
+      sigs.select(col("id"), explode(array(bands: _*)).as("q"))
+        .select(col("id"), col("q.band").as("band"), col("q.bk").as("bk"))
+    }
+
+    val rnd = new scala.util.Random(5)
+    val vocab = Vector("the", "cat", "sat", "on", "mat", "dog", "ran", "far", "a", "b")
+    val generated = (0 until 120).map(i => (i.toLong,
+      Seq.fill(1 + rnd.nextInt(25))(vocab(rnd.nextInt(vocab.size))).mkString(" ")))
+    val edgeTexts = Seq(null, "", "   ", "one", "two words", "emoji 😀 𝄞 text 😀 emoji",
+      "café résumé naïve café résumé", "a b c a b c a b c a b c")
+    val texts = generated ++ edgeTexts.zipWithIndex.map { case (t, i) => (1000L + i, t) }
+    val shingled = texts.toDF("id", "text")
+      .select(col("id"), GraftFunctions.shingles(col("text"), 3).as("sh"))
+    // arrays no shingler emits: empty, and a repeated shingle
+    val direct = Seq((2000L, Seq.empty[String]), (2001L, Seq("x y z", "x y z", "p q r")))
+      .toDF("id", "sh")
+    val dir = tmp("portable_minhash")
+    shingled.unionByName(direct).write.mode("overwrite").parquet(dir)
+
+    inBothCodegenModes { mode =>
+      val sh = spark.read.parquet(dir)
+      val got = NearDedup.portableBands(sh, 32, 8, 42L)
+      val want = reference(sh)
+      // 8 bands per signed row; the null text and the empty array get none
+      assert(got.collect().length == (texts.count(_._2 != null) + 1) * 8)
+      assertSameRows(got, want, mode)
+      val plan = got.queryExecution.executedPlan.toString
+      assert(plan.contains("graft_minhash_sig"), s"$mode: kernel not in plan:\n$plan")
+      assert(plan.contains("*(") == (mode == "CODEGEN_ONLY"), s"$mode:\n$plan")
+    }
+  }
+
+  test("planeSigs kernel matches the zip_with/aggregate sign fold bit for bit") {
+    val dim = 6
+    val bits = 5
+    val planes = VectorFunctions.portablePlanes(dim, bits, 3)
+    // The formulation the kernel replaced: per table, the sign bits of a
+    // left-to-right dot fold. A null element or a length mismatch makes
+    // the dot NULL (zip_with pads with null) and leaves the bit unset.
+    val hof = array((0 until planes.length / bits).map { t =>
+      (0 until bits).map { b =>
+        val d = VectorFunctions.dot(col("v"), typedLit(planes(t * bits + b)))
+        when(d >= 0, lit(1L << b)).otherwise(lit(0L))
+      }.reduce(_ + _)
+    }: _*)
+    val rnd = new scala.util.Random(9)
+    val generated = Seq.fill(60)(Seq.fill(dim)(Option(rnd.nextGaussian())))
+    val edges = Seq(
+      Seq.fill(dim)(Option(0.0)), Seq.fill(dim)(Option(-0.0)),
+      Seq(Option(1.0), None, Option(1.0), Option(1.0), Option(1.0), Option(1.0)),
+      Seq.fill(dim - 1)(Option(1.0)), Seq.fill(dim + 1)(Option(-1.0)), Seq.empty[Option[Double]],
+      Seq(Option(Double.NaN)) ++ Seq.fill(dim - 1)(Option(1.0)),
+      Seq(Option(Double.PositiveInfinity)) ++ Seq.fill(dim - 1)(Option(0.0)),
+      Seq(Option(Double.NegativeInfinity)) ++ Seq.fill(dim - 1)(Option(0.0)),
+      Seq(Option(Double.MaxValue), Option(Double.MaxValue)) ++ Seq.fill(dim - 2)(Option(1.0)))
+    val dir = tmp("plane_sigs")
+    (generated ++ edges).zipWithIndex.map { case (v, i) => (i.toLong, v) }
+      .toDF("id", "v").union(Seq((-1L, Option.empty[Seq[Option[Double]]])).toDF("id", "v")
+        .select(col("id"), col("v").cast("array<double>")))
+      .write.mode("overwrite").parquet(dir)
+
+    inBothCodegenModes { mode =>
+      val df = spark.read.parquet(dir)
+      val out = df.filter(col("v").isNotNull).select(col("id"),
+        GraftFunctions.planeSigs(col("v"), planes, bits).as("kernel"), hof.as("hof"))
+      val diff = out.filter(!(col("kernel") <=> col("hof"))).collect()
+      assert(diff.isEmpty, s"$mode: ${diff.mkString(", ")}")
+      assert(out.count() == generated.size + edges.size)
+      // a null vector has no signature (the fold would give all-zero bits)
+      val nullSig = df.filter(col("v").isNull)
+        .select(GraftFunctions.planeSigs(col("v"), planes, bits)).collect()
+      assert(nullSig.length == 1 && nullSig(0).isNullAt(0), mode)
+    }
   }
 
   test("SQL surface via SparkSessionExtensions (graft_* functions)") {

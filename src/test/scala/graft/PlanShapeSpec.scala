@@ -413,6 +413,14 @@ class PlanShapeSpec extends SparkSpec {
     assert(joinIdx >= 0, s"no (band, bk)-keyed candidate join in:\n$p")
     assert(capIdx > joinIdx,
       s"window cap not below the candidate join in:\n$p")
+    // The signature is one compiled kernel per row: no shingle explode
+    // feeding a min aggregation (the formulation it replaced ran 32 min
+    // aggregates over one row per shingle, behind a shuffle on id).
+    assert(p.contains("graft_minhash_sig"), s"no signature kernel in:\n$p")
+    assert(!"(?m)^.*Generate explode\\(sh#".r.findFirstIn(p).isDefined,
+      s"shingle explode in:\n$p")
+    assert(!"(?m)^.*HashAggregate.*\\bmin\\(".r.findFirstIn(p).isDefined,
+      s"min aggregation in:\n$p")
   }
 
   test("q178/q180 perceptual near-dup: chunk-bucketed candidates, never cartesian") {

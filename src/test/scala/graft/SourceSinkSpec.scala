@@ -269,6 +269,19 @@ class SourceSinkSpec extends SparkSpec {
     assert(new java.io.File(dir).list().length == 2)
   }
 
+  test("memoize fingerprint sees every column of a wide projection") {
+    // The analyzed plan's default rendering cuts the project list after
+    // spark.sql.debug.maxToStringFields (25) entries, so two projections
+    // differing only in column 28 hashed alike and the second replayed
+    // the first one's cache.
+    val dir = tmp("memo_wide")
+    def wide(v: Int) = spark.range(1).select((0 until 30).map(i =>
+      (if (i == 28) lit(v) else lit(i)).as(s"c$i")): _*)
+    assert(Memoize.planFingerprint(wide(1)) != Memoize.planFingerprint(wide(2)))
+    assert(Memoize.memoize(wide(1), dir).select("c28").as[Int].head() == 1)
+    assert(Memoize.memoize(wide(2), dir).select("c28").as[Int].head() == 2)
+  }
+
   test("pushPartitionReload overwrites only the loaded partitions, idempotently") {
     import spark.implicits._
     val dir = tmp("partreload") + "/t"
