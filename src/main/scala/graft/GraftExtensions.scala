@@ -2,67 +2,22 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
-import graft.expressions._
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.graftshim.Shim
+import graft.expressions.GraftFunctions
 
-/** SQL-surface registration for the native expressions: add
+/** SQL-surface registration for the compiled kernels: add
   * `spark.sql.extensions=graft.GraftExtensions` (or
   * `.withExtensions(new GraftExtensions)`) and the functions are callable
-  * from SQL — `SELECT graft_simhash64(text) FROM docs`.
+  * from SQL — `SELECT graft_simhash64(text) FROM docs`. Each name and its
+  * builder is declared once, in `GraftFunctions.sqlFunctions`; a SQL call
+  * builds the same expression as the Column API.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-
-  private def intArg(e: Expression, name: String): Int = e match {
-    case Literal(v: Int, _) => v
-    case other => throw new IllegalArgumentException(s"$name must be an int literal, got $other")
-  }
-  private def longArg(e: Expression, name: String): Long = e match {
-    case Literal(v: Long, _) => v
-    case Literal(v: Int, _)  => v.toLong
-    case other => throw new IllegalArgumentException(s"$name must be a long literal, got $other")
-  }
-
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((FunctionIdentifier("graft_simhash64"),
-      new ExpressionInfo(classOf[SimHash64Expr].getName, "graft_simhash64"),
-      (args: Seq[Expression]) => SimHash64Expr(args.head)))
-    ext.injectFunction((FunctionIdentifier("graft_shingles"),
-      new ExpressionInfo(classOf[ShinglesExpr].getName, "graft_shingles"),
-      (args: Seq[Expression]) => ShinglesExpr(args(0), intArg(args(1), "n"))))
-    ext.injectFunction((FunctionIdentifier("graft_type_probe"),
-      new ExpressionInfo(classOf[TypeProbeExpr].getName, "graft_type_probe"),
-      (args: Seq[Expression]) => TypeProbeExpr(args.head)))
-    ext.injectFunction((FunctionIdentifier("graft_cosine"),
-      new ExpressionInfo(classOf[CosineSimExpr].getName, "graft_cosine"),
-      (args: Seq[Expression]) => CosineSimExpr(args(0), args(1))))
-    ext.injectFunction((FunctionIdentifier("graft_minhash_sig"),
-      new ExpressionInfo(classOf[MinHashSigExpr].getName, "graft_minhash_sig"),
-      (args: Seq[Expression]) => MinHashSigExpr(args(0),
-        intArg(args(1), "numPerms"),
-        if (args.length > 2) longArg(args(2), "seed") else 42L)))
-    ext.injectFunction((FunctionIdentifier("graft_hyperplane_sig"),
-      new ExpressionInfo(classOf[HyperplaneSigExpr].getName, "graft_hyperplane_sig"),
-      (args: Seq[Expression]) => HyperplaneSigExpr(args(0),
-        intArg(args(1), "dim"), intArg(args(2), "bits"),
-        if (args.length > 3) longArg(args(3), "seed") else 7L)))
-    ext.injectFunction((FunctionIdentifier("graft_repetition_stats"),
-      new ExpressionInfo(classOf[RepetitionStatsExpr].getName, "graft_repetition_stats"),
-      (args: Seq[Expression]) => RepetitionStatsExpr(args(0), intArg(args(1), "n"))))
-    ext.injectFunction((FunctionIdentifier("graft_subword_count"),
-      new ExpressionInfo(classOf[SubwordCountExpr].getName, "graft_subword_count"),
-      (args: Seq[Expression]) => SubwordCountExpr(args.head)))
-    ext.injectFunction((FunctionIdentifier("graft_script_counts"),
-      new ExpressionInfo(classOf[ScriptCountsExpr].getName, "graft_script_counts"),
-      (args: Seq[Expression]) => ScriptCountsExpr(args.head)))
-    ext.injectFunction((FunctionIdentifier("graft_html_to_text"),
-      new ExpressionInfo(classOf[HtmlToTextExpr].getName, "graft_html_to_text"),
-      (args: Seq[Expression]) => HtmlToTextExpr(args.head)))
-    ext.injectFunction((FunctionIdentifier("graft_deflate_ratio"),
-      new ExpressionInfo(classOf[DeflateRatioExpr].getName, "graft_deflate_ratio"),
-      (args: Seq[Expression]) => DeflateRatioExpr(args.head)))
-    // session zone injected by ResolveTimeZone, like try_to_timestamp
-    ext.injectFunction((FunctionIdentifier("graft_multi_ts"),
-      new ExpressionInfo(classOf[MultiTsExpr].getName, "graft_multi_ts"),
-      (args: Seq[Expression]) => MultiTsExpr(args.head)))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftFunctions.sqlFunctions.foreach { case (name, build) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(GraftFunctions.getClass.getName, name),
+        (args: Seq[Expression]) => Shim.expression(build(args.map(Shim.column)))))
+    }
 }

@@ -1,23 +1,27 @@
 package graft.expressions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TimeZoneAwareExpression, UnaryExpression, XxHash64Function}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, TimeZoneAwareExpression, UnaryExpression, XxHash64Function}
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftshim.Shim
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expressions for the LLM-operator hot paths.
+/** Compiled kernels for the LLM-operator hot paths.
   *
   * The declarative formulations (aggregate/transform/zip_with higher-order
   * functions) are semantically right but Catalyst INTERPRETS lambda
   * higher-order functions — they sit outside whole-stage codegen, and a
   * 64-bit simhash becomes 64 interpreted array traversals per row. These
-  * expressions compute the same values in one compiled loop: `doGenCode`
-  * emits a call to a static JVM kernel, so the projection stays inside the
-  * generated code path (one virtual call per row, no closure dispatch).
+  * static methods compute the same values in one compiled loop. Each is
+  * declared once in [[GraftFunctions]] as a `StaticInvoke` (see
+  * [[KernelCall]]), whose generated code calls the method directly, so the
+  * projection stays inside the generated code path (one static call per
+  * row, no closure dispatch).
   *
   * Value parity with the expression formulations is exact (same xxhash64
   * seed/semantics via XxHash64Function, same fold order for doubles), so
@@ -62,10 +66,13 @@ object Kernels {
     if (body.isEmpty) return null
     if (body.charAt(0) == '#') {
       val hex = body.length > 1 && (body.charAt(1) == 'x' || body.charAt(1) == 'X')
+      val radix = if (hex) 16 else 10
       val digits = body.substring(if (hex) 2 else 1)
-      if (digits.isEmpty || digits.length > 7) return null
+      // ASCII digits only: parseInt alone also takes a sign and non-ASCII digits
+      if (digits.isEmpty || digits.length > 7 ||
+          !digits.forall(c => c < 128 && Character.digit(c, radix) >= 0)) return null
       try {
-        val cp = Integer.parseInt(digits, if (hex) 16 else 10)
+        val cp = Integer.parseInt(digits, radix)
         if (cp <= 0 || cp > 0x10FFFF || (cp >= 0xD800 && cp <= 0xDFFF)) null
         else new String(Character.toChars(cp))
       } catch { case _: NumberFormatException => null }
@@ -313,8 +320,10 @@ object Kernels {
 
   /** Distinct word n-gram shingles of the trimmed text: sliding n-token
     * windows joined by spaces; fewer than n tokens → the whole text as one
-    * shingle. Parity with
-    * array_distinct(TextFunctions.shingles(text, n)).
+    * shingle. Parity with array_distinct(TextFunctions.shingles(text, n))
+    * except at the edges: this trims every character up to U+0020, where
+    * SQL `trim` strips spaces only, so a leading tab or newline gives that
+    * formulation an empty first token.
     */
   def shingles(text: UTF8String, n: Int): ArrayData = {
     val tokens = text.toString.trim.split("\\s+")
@@ -663,7 +672,8 @@ object Kernels {
     * filtering, same (count, gram)-max tie-break), but one compiled scan
     * with hash maps instead of O(distinct × lines) interpreted array folds
     * per row. `lineSep` lets callers synthesize lines (e.g. "\\. " → ".\n")
-    * before the split, matching the HOF call sites.
+    * before the split, matching the HOF call sites. Lengths count code
+    * points, like SQL `length`.
     */
   def repetitionStats(text: UTF8String, n: Int): ArrayData = {
     val s = text.toString
@@ -683,7 +693,7 @@ object Kernels {
     s.split("\n", -1).foreach { l =>
       if (spaceTrim(l).nonEmpty) {
         nLines += 1
-        totalChars += l.length
+        totalChars += l.codePointCount(0, l.length)
         lineCounts.merge(l, 1, (a, b) => a + b)
       }
     }
@@ -691,7 +701,7 @@ object Kernels {
     val it = lineCounts.entrySet().iterator()
     while (it.hasNext) {
       val e = it.next()
-      if (e.getValue > 1) dupChars += e.getValue.toLong * e.getKey.length
+      if (e.getValue > 1) dupChars += e.getValue.toLong * e.getKey.codePointCount(0, e.getKey.length)
     }
     val dlf = if (nLines == 0) 0.0
       else 1.0 - lineCounts.size.toDouble / nLines
@@ -723,7 +733,8 @@ object Kernels {
           bestC = e.getValue; bestG = e.getKey
         }
       }
-      if (bestC > 0) tgf = math.min(bestC.toDouble * bestG.length / s.length, 1.0)
+      if (bestC > 0) tgf = math.min(bestC.toDouble * bestG.codePointCount(0, bestG.length) /
+        s.codePointCount(0, s.length), 1.0)
     }
     new GenericArrayData(Array[Double](dlf, dcf, tgf))
   }
@@ -738,9 +749,10 @@ object Kernels {
     * so it builds two int-free hash sets and no output arrays. The
     * division of the same two ints is bit-identical IEEE in any engine
     * (the oracle replays list_intersect/list_union and divides the same
-    * integers); 0-element inputs give 0/0 → NaN, matching the builtin
-    * formulation (shingles() never emits an empty array, so unreachable
-    * from the library's own call sites).
+    * integers); two empty inputs give 0/0 → NaN, where the builtin
+    * formulation's division by zero fails under ANSI (shingles() never
+    * emits an empty array, so unreachable from the library's own call
+    * sites).
     */
   def jaccardSim(a: ArrayData, b: ArrayData): Double = {
     val na = a.numElements(); val nb = b.numElements()
@@ -759,11 +771,12 @@ object Kernels {
     inter.toDouble / union
   }
 
-  /** Cosine similarity of two double arrays; 0.0 when either norm is 0 —
-    * parity with the zip_with/aggregate fold (left-to-right sums).
+  /** Cosine similarity of two double arrays over their common prefix; 0.0
+    * when either norm is 0 — parity with the zip_with/aggregate fold
+    * (left-to-right sums) over the prefix.
     */
   def cosine(a: ArrayData, b: ArrayData): Double = {
-    val n = a.numElements()
+    val n = math.min(a.numElements(), b.numElements())
     var dot = 0.0; var na = 0.0; var nb = 0.0
     var i = 0
     while (i < n) {
@@ -902,7 +915,8 @@ object Kernels {
   }
 
   /** Sign-LSH signature: bit i = [dot(vec, plane_i) >= 0], sig = Σ bit·2^i —
-    * parity with the transform/aggregate formulation.
+    * parity with the transform/aggregate formulation, where SQL orders a
+    * NaN dot above every number and so sets its bit.
     */
   def hyperplaneSig(vec: ArrayData, planes: Array[Array[Double]]): Long = {
     var sig = 0L
@@ -913,7 +927,7 @@ object Kernels {
       var j = 0
       val n = math.min(vec.numElements(), plane.length)
       while (j < n) { dot += vec.getDouble(j) * plane(j); j += 1 }
-      if (dot >= 0.0) sig += (1L << i)
+      if (!(dot < 0.0)) sig += (1L << i)
       i += 1
     }
     sig
@@ -1022,46 +1036,92 @@ object Kernels {
   }
 }
 
-case class SimHash64Expr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_simhash64"
-  override protected def nullSafeEval(s: Any): Any =
-    Kernels.simhash64(s.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.expressions.Kernels.simhash64($c)")
-  override protected def withNewChildInternal(newChild: Expression): SimHash64Expr =
-    copy(child = newChild)
-}
-
-/** MinHash signature of a shingle array. `portable` selects the basis:
-  *  - false (native): xxh64 shingle hashes, each permutation's a_i and b_i
-  *    drawn in turn from the seeded generator;
-  *  - true (portable): the first 60 bits of md5 (any SQL engine can
-  *    replay it), all a_i drawn before all b_i. These are the constants of
-  *    NearDedup.portablePerms, which the DuckDB oracle SQL interpolates.
+/** A compiled kernel call. The wrapped `StaticInvoke` of a [[Kernels]]
+  * method evaluates the call and emits it into the generated code; this
+  * wrapper names it (`graft_minhash_sig`, …) and renders its object-typed
+  * constants (plane matrix, centroid table, codebook, permutation
+  * constants, n-gram table, normalization form) by content: Java type,
+  * length and an MD5 of the values. Equal constants thus give the same
+  * `explain` text and Memoize fingerprint in every session, where a bare
+  * JVM array prints as `[[D@64e6ef25`.
+  *
+  * The wrapper is also not null-intolerant, unlike a StaticInvoke with
+  * `propagateNull`: the optimizer would otherwise infer `isnotnull` of a
+  * kernel's inputs from any filter or join condition on its result, and
+  * push that filter below the projection computing the inputs, so the
+  * shingles or the `transform` feeding the kernel ran twice per row.
   */
-case class MinHashSigExpr(child: Expression, numPerms: Int, seed: Long,
-                          portable: Boolean = false)
-    extends UnaryExpression {
-  @transient lazy val perms: (Array[Long], Array[Long]) =
-    MinHashSigExpr.perms(numPerms, seed, portable)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_minhash_sig"
-  override protected def nullSafeEval(arr: Any): Any =
-    Kernels.minhashSig(arr.asInstanceOf[ArrayData], perms._1, perms._2,
-      MinHashSigExpr.P, portable)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val aRef = ctx.addReferenceObj("minhashA", perms._1, "long[]")
-    val bRef = ctx.addReferenceObj("minhashB", perms._2, "long[]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.expressions.Kernels.minhashSig(" +
-        s"$c, $aRef, $bRef, ${MinHashSigExpr.P}L, $portable);")
-  }
-  override protected def withNewChildInternal(newChild: Expression): MinHashSigExpr =
+case class KernelCall(name: String, child: Expression) extends UnaryExpression {
+  override def dataType: DataType = child.dataType
+  override def nullable: Boolean = child.nullable
+  override def prettyName: String = name
+  override def eval(input: InternalRow): Any = child.eval(input)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    child.genCode(ctx)
+  private def render(text: Expression => String): String = (child match {
+    case call: StaticInvoke => call.arguments
+    case folded => Seq(folded)
+  }).map {
+    case Literal(v: AnyRef, _: ObjectType) => KernelCall.describe(v)
+    case arg => text(arg)
+  }.mkString(s"$name(", ", ", ")")
+  override def toString: String = render(_.toString)
+  override def sql: String = render(_.sql)
+  override protected def withNewChildInternal(newChild: Expression): KernelCall =
     copy(child = newChild)
 }
 
-object MinHashSigExpr {
+object KernelCall {
+  /** A kernel constant's rendering: a string as itself, anything else as
+    * its Java type, length and the MD5 of its values.
+    */
+  private def describe(value: AnyRef): String = value match {
+    case s: String => s"'$s'"
+    case _ =>
+      val md = java.security.MessageDigest.getInstance("MD5")
+      val out = new java.io.DataOutputStream(new java.security.DigestOutputStream(
+        java.io.OutputStream.nullOutputStream(), md))
+      feed(out, value)
+      out.flush()
+      val size = value match {
+        case m: java.util.Map[_, _] => m.size
+        case a => java.lang.reflect.Array.getLength(a)
+      }
+      val javaType = CodeGenerator.javaType(ObjectType(value.getClass))
+      val shape = javaType.indexOf('[') match {
+        case -1 => s"$javaType($size)"
+        case i => s"${javaType.take(i)}[$size]${javaType.drop(i + 2)}"
+      }
+      s"$shape md5:${md.digest().map("%02x".format(_)).mkString}"
+  }
+
+  /** A canonical byte stream of a constant's values; map entries in key order. */
+  private def feed(out: java.io.DataOutputStream, v: Any): Unit = v match {
+    case a: Array[Long] => out.writeByte('J'); out.writeInt(a.length); a.foreach(out.writeLong)
+    case a: Array[Double] =>
+      out.writeByte('D'); out.writeInt(a.length)
+      a.foreach(x => out.writeLong(java.lang.Double.doubleToLongBits(x)))
+    case a: Array[AnyRef] => out.writeByte('A'); out.writeInt(a.length); a.foreach(feed(out, _))
+    case m: java.util.Map[_, _] =>
+      out.writeByte('M'); out.writeInt(m.size)
+      val entries = new java.util.ArrayList[java.util.Map.Entry[_, _]](m.entrySet())
+      entries.sort((x, y) => x.getKey.toString.compareTo(y.getKey.toString))
+      entries.forEach { e => feed(out, e.getKey); feed(out, e.getValue) }
+    case s: UTF8String => out.writeByte('S'); out.writeInt(s.numBytes()); out.write(s.getBytes)
+    case l: java.lang.Long => out.writeByte('j'); out.writeLong(l)
+    case other => throw new IllegalArgumentException(
+      s"no content rendering for a kernel constant of type ${other.getClass.getName}")
+  }
+}
+
+/** The minhash permutation constants, the one definition the kernel and the
+  * DuckDB oracle SQL (via NearDedup.portablePerms) share. Two bases:
+  *  - native: xxh64 shingle hashes, each permutation's a_i and b_i drawn in
+  *    turn from the seeded generator;
+  *  - portable: the first 60 bits of md5 (any SQL engine can replay it),
+  *    all a_i drawn before all b_i.
+  */
+object MinHash {
   // Canonical MinHash prime: 2^31-1. An earlier HOF formulation used 2^61-1,
   // which risked silent long overflow in h*a under ANSI-off eval; signatures
   // produced under that prime are NOT comparable to these — any persisted
@@ -1069,7 +1129,7 @@ object MinHashSigExpr {
   val P: Long = 2147483647L
 
   /** The (a, b) permutation constants, a_i in [1, P-1] and b_i in [0, P-1],
-    * in the draw order of the basis (see the class doc).
+    * in the draw order of the basis.
     */
   def perms(numPerms: Int, seed: Long, portable: Boolean): (Array[Long], Array[Long]) = {
     val rnd = new scala.util.Random(seed)
@@ -1083,264 +1143,6 @@ object MinHashSigExpr {
       (ab.map(_._1), ab.map(_._2))
     }
   }
-}
-
-case class ShinglesExpr(child: Expression, n: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "graft_shingles"
-  override protected def nullSafeEval(s: Any): Any =
-    Kernels.shingles(s.asInstanceOf[UTF8String], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.expressions.Kernels.shingles($c, $n)")
-  override protected def withNewChildInternal(newChild: Expression): ShinglesExpr =
-    copy(child = newChild)
-}
-
-case class TypeProbeExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "graft_type_probe"
-  override protected def nullSafeEval(s: Any): Any =
-    Kernels.typeProbe(s.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.expressions.Kernels.typeProbe($c)")
-  override protected def withNewChildInternal(newChild: Expression): TypeProbeExpr =
-    copy(child = newChild)
-}
-
-/** Unicode normalization as a codegen'd expression (no UDF): `form` is one
-  * of NFC/NFD/NFKC/NFKD, validated at construction.
-  */
-case class UnicodeNormExpr(child: Expression, form: String)
-    extends UnaryExpression {
-  java.text.Normalizer.Form.valueOf(form) // fail fast on a bad form name
-  override def dataType: DataType = StringType
-  override def prettyName: String = "graft_unicode_normalize"
-  override protected def nullSafeEval(s: Any): Any =
-    Kernels.unicodeNormalize(s.asInstanceOf[UTF8String], form)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"""graft.expressions.Kernels.unicodeNormalize($c, "$form")""")
-  override protected def withNewChildInternal(newChild: Expression): UnicodeNormExpr =
-    copy(child = newChild)
-}
-
-case class CosineSimExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "graft_cosine"
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    Kernels.cosine(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.expressions.Kernels.cosine($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): CosineSimExpr =
-    copy(left = l, right = r)
-}
-
-case class HyperplaneSigExpr(child: Expression, dim: Int, bits: Int, seed: Long)
-    extends UnaryExpression {
-  @transient private lazy val planes: Array[Array[Double]] = {
-    val rnd = new scala.util.Random(seed)
-    Array.fill(bits)(Array.fill(dim)(rnd.nextGaussian()))
-  }
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_hyperplane_sig"
-  override protected def nullSafeEval(v: Any): Any =
-    Kernels.hyperplaneSig(v.asInstanceOf[ArrayData], planes)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val pRef = ctx.addReferenceObj("planes", planes, "double[][]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.expressions.Kernels.hyperplaneSig($c, $pRef);")
-  }
-  override protected def withNewChildInternal(newChild: Expression): HyperplaneSigExpr =
-    copy(child = newChild)
-}
-
-case class PlaneSigsExpr(child: Expression, planes: Seq[Seq[Double]], bits: Int)
-    extends UnaryExpression {
-  @transient private lazy val planeArr: Array[Array[Double]] =
-    planes.map(_.toArray).toArray
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_plane_sigs"
-  override protected def nullSafeEval(v: Any): Any =
-    Kernels.planeSigs(v.asInstanceOf[ArrayData], planeArr, bits)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val pRef = ctx.addReferenceObj("planes", planeArr, "double[][]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.expressions.Kernels.planeSigs($c, $pRef, $bits);")
-  }
-  override protected def withNewChildInternal(newChild: Expression): PlaneSigsExpr =
-    copy(child = newChild)
-}
-
-case class RepetitionStatsExpr(child: Expression, n: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def prettyName: String = "graft_repetition_stats"
-  override protected def nullSafeEval(s: Any): Any =
-    Kernels.repetitionStats(s.asInstanceOf[UTF8String], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.expressions.Kernels.repetitionStats($c, $n)")
-  override protected def withNewChildInternal(newChild: Expression): RepetitionStatsExpr =
-    copy(child = newChild)
-}
-
-case class CharNgramCountsExpr(child: Expression, n: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(StructField("g", StringType, nullable = false),
-                   StructField("c", LongType, nullable = false))),
-    containsNull = false)
-  override def prettyName: String = "graft_char_ngram_counts"
-  override protected def nullSafeEval(s: Any): Any =
-    Kernels.charNgramCounts(s.asInstanceOf[UTF8String], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.expressions.Kernels.charNgramCounts($c, $n)")
-  override protected def withNewChildInternal(newChild: Expression): CharNgramCountsExpr =
-    copy(child = newChild)
-}
-
-case class CharNgramFreqStatsExpr(child: Expression, n: Int,
-                                  table: java.util.HashMap[UTF8String, java.lang.Long])
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_char_ngram_freq_stats"
-  override protected def nullSafeEval(s: Any): Any =
-    Kernels.charNgramFreqStats(s.asInstanceOf[UTF8String], n, table)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val tRef = ctx.addReferenceObj("gramTable", table, "java.util.HashMap")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.expressions.Kernels.charNgramFreqStats($c, $n, $tRef);")
-  }
-  override protected def withNewChildInternal(newChild: Expression): CharNgramFreqStatsExpr =
-    copy(child = newChild)
-}
-
-case class NearestCentroidsExpr(child: Expression, cents: Array[Array[Double]], n: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def prettyName: String = "graft_nearest_centroids"
-  override protected def nullSafeEval(v: Any): Any =
-    Kernels.nearestCentroids(v.asInstanceOf[ArrayData], cents, n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cRef = ctx.addReferenceObj("centroids", cents, "double[][]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.expressions.Kernels.nearestCentroids($c, $cRef, $n);")
-  }
-  override protected def withNewChildInternal(newChild: Expression): NearestCentroidsExpr =
-    copy(child = newChild)
-}
-
-/** Compiled PQ encode: cid of the argmin-integer-L2 codebook entry for the
-  * row's subspace, ties to the lowest cid (see Kernels.nearestCodeL2 —
-  * exact-long parity with the min_by-over-longL2 codebook join).
-  */
-case class NearestCodeL2Expr(left: Expression, right: Expression,
-                             books: Array[Array[Array[Long]]],
-                             cids: Array[Array[Long]])
-    extends BinaryExpression {
-  require(books.length == cids.length && books.nonEmpty &&
-    books.indices.forall(s => books(s).length == cids(s).length),
-    "nearestCodeL2 needs per-subspace codebooks with matching cid arrays")
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_nearest_code_l2"
-  override protected def nullSafeEval(sv: Any, sub: Any): Any =
-    Kernels.nearestCodeL2(sv.asInstanceOf[ArrayData],
-      sub.asInstanceOf[Long], books, cids)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val bRef = ctx.addReferenceObj("books", books, "long[][][]")
-    val idRef = ctx.addReferenceObj("cids", cids, "long[][]")
-    nullSafeCodeGen(ctx, ev, (sv, sub) =>
-      s"${ev.value} = graft.expressions.Kernels.nearestCodeL2($sv, $sub, $bRef, $idRef);")
-  }
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): NearestCodeL2Expr =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Compiled quantized-Lloyd cell assignment: cid of the argmax-cosine
-  * centroid, ties to the lowest cid (see Kernels.nearestCentroidCos —
-  * bit-parity with the max_by-over-cosine broadcast formulation).
-  */
-case class NearestCentroidCosExpr(child: Expression,
-                                  cents: Array[Array[Double]],
-                                  cids: Array[Long])
-    extends UnaryExpression {
-  require(cents.length == cids.length && cents.nonEmpty,
-    s"nearestCentroidCos needs a non-empty centroid table with matching " +
-      s"ids (got ${cents.length} centroids / ${cids.length} ids)")
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_nearest_centroid_cos"
-  override protected def nullSafeEval(v: Any): Any =
-    Kernels.nearestCentroidCos(v.asInstanceOf[ArrayData], cents, cids)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cRef = ctx.addReferenceObj("centroids", cents, "double[][]")
-    val idRef = ctx.addReferenceObj("cids", cids, "long[]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.expressions.Kernels.nearestCentroidCos($c, $cRef, $idRef);")
-  }
-  override protected def withNewChildInternal(newChild: Expression): NearestCentroidCosExpr =
-    copy(child = newChild)
-}
-
-/** Column-builder surface for the native expressions. */
-case class SubwordCountExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "graft_subword_count"
-  override protected def nullSafeEval(s: Any): Any =
-    Kernels.subwordCount(s.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.expressions.Kernels.subwordCount($c)")
-  override protected def withNewChildInternal(newChild: Expression): SubwordCountExpr =
-    copy(child = newChild)
-}
-
-case class ScriptCountsExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_script_counts"
-  override protected def nullSafeEval(s: Any): Any =
-    Kernels.scriptCounts(s.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.expressions.Kernels.scriptCounts($c)")
-  override protected def withNewChildInternal(newChild: Expression): ScriptCountsExpr =
-    copy(child = newChild)
-}
-
-/** Compiled distinct-set string-array Jaccard (see Kernels.jaccardSim —
-  * exact parity with size(array_intersect)/size(array_union)).
-  */
-case class JaccardSimExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "graft_jaccard_sim"
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    Kernels.jaccardSim(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.expressions.Kernels.jaccardSim($a, $b)")
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): JaccardSimExpr = copy(left = newLeft, right = newRight)
-}
-
-/** Compiled integer squared-L2 (see Kernels.longL2). */
-case class LongL2Expr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_long_l2"
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    Kernels.longL2(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.expressions.Kernels.longL2($a, $b)")
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): LongL2Expr = copy(left = newLeft, right = newRight)
-}
-
-/** Compression-ratio redundancy signal (see Kernels.deflateRatio). */
-case class DeflateRatioExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "graft_deflate_ratio"
-  override protected def nullSafeEval(s: Any): Any =
-    Kernels.deflateRatio(s.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.expressions.Kernels.deflateRatio($c)")
-  override protected def withNewChildInternal(newChild: Expression): DeflateRatioExpr =
-    copy(child = newChild)
 }
 
 /** Structural multi-format timestamp probe+parse (see Kernels.parseMultiTs):
@@ -1368,67 +1170,122 @@ case class MultiTsExpr(child: Expression, timeZoneId: Option[String] = None)
     copy(child = newChild)
 }
 
-/** HTML → visible text in one compiled pass (see Kernels.htmlToText). */
-case class HtmlToTextExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def prettyName: String = "graft_html_to_text"
-  override protected def nullSafeEval(s: Any): Any =
-    Kernels.htmlToText(s.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.expressions.Kernels.htmlToText($c)")
-  override protected def withNewChildInternal(newChild: Expression): HtmlToTextExpr =
-    copy(child = newChild)
-}
-
+/** Column-builder surface for the compiled kernels: one declaration each. */
 object GraftFunctions {
-  def htmlToText(c: Column): Column =
-    Shim.column(HtmlToTextExpr(Shim.expression(c)))
-  def deflateRatio(c: Column): Column =
-    Shim.column(DeflateRatioExpr(Shim.expression(c)))
-  def longL2(a: Column, b: Column): Column =
-    Shim.column(LongL2Expr(Shim.expression(a), Shim.expression(b)))
-  def jaccardSim(a: Column, b: Column): Column =
-    Shim.column(JaccardSimExpr(Shim.expression(a), Shim.expression(b)))
-  def simhash64(c: Column): Column =
-    Shim.column(SimHash64Expr(Shim.expression(c)))
+
+  /** `Kernels.<method>(args)`, named `graft_<method in snake case>`: a
+    * direct static call in generated code (a reflective one when
+    * interpreted), null when any argument is null.
+    */
+  private def kernel(method: String, dataType: DataType, args: Expression*): Column =
+    Shim.column(KernelCall(
+      "graft_" + method.replaceAll("([A-Z])", "_$1").toLowerCase(java.util.Locale.ROOT),
+      StaticInvoke(Kernels.getClass, dataType, method, args,
+        propagateNull = true, returnNullable = false)))
+  /** An object-typed kernel constant, handed to generated code by reference. */
+  private def const(v: AnyRef): Expression = Literal(v, ObjectType(v.getClass))
+  private def e(c: Column): Expression = Shim.expression(c)
+  private val longs = ArrayType(LongType, containsNull = false)
+
+  def htmlToText(c: Column): Column = kernel("htmlToText", StringType, e(c))
+  def deflateRatio(c: Column): Column = kernel("deflateRatio", DoubleType, e(c))
+  def longL2(a: Column, b: Column): Column = kernel("longL2", LongType, e(a), e(b))
+  def jaccardSim(a: Column, b: Column): Column = kernel("jaccardSim", DoubleType, e(a), e(b))
+  def simhash64(c: Column): Column = kernel("simhash64", LongType, e(c))
   def shingles(c: Column, n: Int): Column =
-    Shim.column(ShinglesExpr(Shim.expression(c), n))
-  def typeProbe(c: Column): Column =
-    Shim.column(TypeProbeExpr(Shim.expression(c)))
-  def unicodeNormalize(c: Column, form: String = "NFC"): Column =
-    Shim.column(UnicodeNormExpr(Shim.expression(c), form))
+    kernel("shingles", ArrayType(StringType, containsNull = false), e(c), Literal(n))
+  def typeProbe(c: Column): Column = kernel("typeProbe", IntegerType, e(c))
+
+  /** `form` is one of NFC/NFD/NFKC/NFKD, validated here. */
+  def unicodeNormalize(c: Column, form: String = "NFC"): Column = {
+    java.text.Normalizer.Form.valueOf(form)
+    kernel("unicodeNormalize", StringType, e(c), const(form))
+  }
+
+  /** MinHash signature of a shingle array on the native or the portable
+    * basis (see [[MinHash]]).
+    */
   def minhashSignature(c: Column, numPerms: Int, seed: Long = 42L,
-                       portable: Boolean = false): Column =
-    Shim.column(MinHashSigExpr(Shim.expression(c), numPerms, seed, portable))
-  def cosine(a: Column, b: Column): Column =
-    Shim.column(CosineSimExpr(Shim.expression(a), Shim.expression(b)))
-  def hyperplaneSignature(c: Column, dim: Int, bits: Int, seed: Long = 7L): Column =
-    Shim.column(HyperplaneSigExpr(Shim.expression(c), dim, bits, seed))
+                       portable: Boolean = false): Column = {
+    val (a, b) = MinHash.perms(numPerms, seed, portable)
+    kernel("minhashSig", longs, e(c), const(a), const(b),
+      Literal(MinHash.P), Literal(portable))
+  }
+  def cosine(a: Column, b: Column): Column = kernel("cosine", DoubleType, e(a), e(b))
+  def hyperplaneSignature(c: Column, dim: Int, bits: Int, seed: Long = 7L): Column = {
+    val rnd = new scala.util.Random(seed)
+    kernel("hyperplaneSig", LongType, e(c),
+      const(Array.fill(bits)(Array.fill(dim)(rnd.nextGaussian()))))
+  }
   def planeSigs(c: Column, planes: Seq[Seq[Double]], bits: Int): Column =
-    Shim.column(PlaneSigsExpr(Shim.expression(c), planes, bits))
+    kernel("planeSigs", longs, e(c), const(planes.map(_.toArray).toArray), Literal(bits))
   def nearestCentroids(c: Column, cents: Array[Array[Double]], n: Int): Column =
-    Shim.column(NearestCentroidsExpr(Shim.expression(c), cents, n))
+    kernel("nearestCentroids", ArrayType(IntegerType, containsNull = false), e(c),
+      const(cents), Literal(n))
 
+  /** Compiled quantized-Lloyd cell assignment: cid of the argmax-cosine
+    * centroid, ties to the lowest cid (see Kernels.nearestCentroidCos).
+    */
   def nearestCentroidCos(c: Column, cents: Array[Array[Double]],
-                         cids: Array[Long]): Column =
-    Shim.column(NearestCentroidCosExpr(Shim.expression(c), cents, cids))
+                         cids: Array[Long]): Column = {
+    require(cents.length == cids.length && cents.nonEmpty,
+      s"nearestCentroidCos needs a non-empty centroid table with matching " +
+        s"ids (got ${cents.length} centroids / ${cids.length} ids)")
+    kernel("nearestCentroidCos", LongType, e(c), const(cents), const(cids))
+  }
 
+  /** Compiled PQ encode: cid of the argmin-integer-L2 codebook entry for the
+    * row's subspace, ties to the lowest cid (see Kernels.nearestCodeL2).
+    */
   def nearestCodeL2(sv: Column, sub: Column,
                     books: Array[Array[Array[Long]]],
-                    cids: Array[Array[Long]]): Column =
-    Shim.column(NearestCodeL2Expr(Shim.expression(sv), Shim.expression(sub),
-      books, cids))
+                    cids: Array[Array[Long]]): Column = {
+    require(books.length == cids.length && books.nonEmpty &&
+      books.indices.forall(s => books(s).length == cids(s).length),
+      "nearestCodeL2 needs per-subspace codebooks with matching cid arrays")
+    kernel("nearestCodeL2", LongType, e(sv), e(sub), const(books), const(cids))
+  }
   def repetitionStats(c: Column, n: Int): Column =
-    Shim.column(RepetitionStatsExpr(Shim.expression(c), n))
+    kernel("repetitionStats", ArrayType(DoubleType, containsNull = false), e(c), Literal(n))
   def charNgramCounts(c: Column, n: Int): Column =
-    Shim.column(CharNgramCountsExpr(Shim.expression(c), n))
+    kernel("charNgramCounts", ArrayType(
+      StructType(Seq(StructField("g", StringType, nullable = false),
+                     StructField("c", LongType, nullable = false))),
+      containsNull = false), e(c), Literal(n))
   def charNgramFreqStats(c: Column, n: Int,
                          table: java.util.HashMap[UTF8String, java.lang.Long]): Column =
-    Shim.column(CharNgramFreqStatsExpr(Shim.expression(c), n, table))
-  def subwordCount(c: Column): Column =
-    Shim.column(SubwordCountExpr(Shim.expression(c)))
-  def scriptCounts(c: Column): Column =
-    Shim.column(ScriptCountsExpr(Shim.expression(c)))
-  def multiTsMicros(c: Column): Column =
-    Shim.column(MultiTsExpr(Shim.expression(c)))
+    kernel("charNgramFreqStats", longs, e(c), Literal(n), const(table))
+  def subwordCount(c: Column): Column = kernel("subwordCount", IntegerType, e(c))
+  def scriptCounts(c: Column): Column = kernel("scriptCounts", longs, e(c))
+  def multiTsMicros(c: Column): Column = Shim.column(MultiTsExpr(e(c)))
+
+  private def intArg(c: Column, name: String): Int = e(c) match {
+    case Literal(v: Int, _) => v
+    case other => throw new IllegalArgumentException(s"$name must be an int literal, got $other")
+  }
+  private def longArg(c: Column, name: String): Long = e(c) match {
+    case Literal(v: Long, _) => v
+    case Literal(v: Int, _)  => v.toLong
+    case other => throw new IllegalArgumentException(s"$name must be a long literal, got $other")
+  }
+
+  /** The SQL surface GraftExtensions registers: each function's name and
+    * its builder over the call's arguments.
+    */
+  private[graft] val sqlFunctions: Seq[(String, Seq[Column] => Column)] = Seq(
+    "graft_simhash64" -> (a => simhash64(a(0))),
+    "graft_shingles" -> (a => shingles(a(0), intArg(a(1), "n"))),
+    "graft_type_probe" -> (a => typeProbe(a(0))),
+    "graft_cosine" -> (a => cosine(a(0), a(1))),
+    "graft_minhash_sig" -> (a => minhashSignature(a(0), intArg(a(1), "numPerms"),
+      if (a.length > 2) longArg(a(2), "seed") else 42L)),
+    "graft_hyperplane_sig" -> (a => hyperplaneSignature(a(0), intArg(a(1), "dim"),
+      intArg(a(2), "bits"), if (a.length > 3) longArg(a(3), "seed") else 7L)),
+    "graft_repetition_stats" -> (a => repetitionStats(a(0), intArg(a(1), "n"))),
+    "graft_subword_count" -> (a => subwordCount(a(0))),
+    "graft_script_counts" -> (a => scriptCounts(a(0))),
+    "graft_html_to_text" -> (a => htmlToText(a(0))),
+    "graft_deflate_ratio" -> (a => deflateRatio(a(0))),
+    // session zone injected by ResolveTimeZone, like try_to_timestamp
+    "graft_multi_ts" -> (a => multiTsMicros(a(0))))
 }

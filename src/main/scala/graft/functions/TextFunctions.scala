@@ -21,7 +21,7 @@ object TextFunctions {
   /** A BPE-ish subword count: splits on whitespace AND on transitions
     * between letter/digit/other classes, approximating subword segmentation
     * without a vocab (useful as a cheap token budget estimate). Runs as the
-    * codegen'd one-scan `SubwordCountExpr` — the declarative equivalent
+    * compiled one-scan `Kernels.subwordCount` — the declarative equivalent
     * (`subwordCountRegex`, five java.util.regex lookaround branches per
     * position) is kept as the parity reference and is ~5× slower.
     */
@@ -423,7 +423,7 @@ object TextFunctions {
     * writing-system profile multilingual pipelines route on (which
     * tokenizer, which language-ID model, which normalization). One narrow
     * map: ALL seven counts come from a single codegen'd scan
-    * (`ScriptCountsExpr`) instead of seven keep-only regex replaces — the
+    * (`Kernels.scriptCounts`) instead of seven keep-only regex replaces — the
     * regex formulation (`scriptProfileRegex`) is kept as the parity
     * reference; `dominant` is the first script (in [[ScriptRanges]] order)
     * reaching the max count, "none" when no scripted character occurs.
@@ -486,7 +486,7 @@ object TextFunctions {
     * degenerate repetition and templated boilerplate compress far below
     * natural prose, so a low ratio flags low-information documents that
     * token-level repetition stats can miss (long-range repeats). Codegen'd
-    * single pass (`DeflateRatioExpr`); deterministic within a JVM but not
+    * single pass (`Kernels.deflateRatio`); deterministic within a JVM but not
     * SQL-replayable, so its verification is spec-level like [[Retrieval
     * .bm25TopK]]'s float path.
     */

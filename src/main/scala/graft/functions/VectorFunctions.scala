@@ -50,8 +50,8 @@ object VectorFunctions {
   def l2Norm(a: Column): Column =
     sqrt(aggregate(a, lit(0.0d), (acc, x) => acc + x * x))
 
-  /** Cosine similarity — native codegen'd expression for array<double>
-    * (graft.expressions.CosineSimExpr): one compiled loop instead of three
+  /** Cosine similarity — compiled kernel for array<double>
+    * (graft.expressions.Kernels.cosine): one compiled loop instead of three
     * interpreted HOF folds per pair. 0.0 for zero-norm inputs.
     */
   def cosine(a: Column, b: Column): Column =
@@ -160,7 +160,7 @@ object VectorFunctions {
     * Scale shape: with the default centroid budget the codebooks are
     * m × maxCentroids rows (FIXED as the corpus grows — collected once,
     * served to both the kernel encode and the ADC table), and the encode
-    * itself is the compiled NearestCodeL2Expr narrow map: one dsub×ksub
+    * itself is the compiled Kernels.nearestCodeL2 narrow map: one dsub×ksub
     * integer-L2 loop per (row, subspace), no corpus×k join anywhere.
     * Codes are a NARROW (id, sub, code) stream — the 8-byte-per-vector
     * memory layout that makes billion-scale ANN feasible; the per-query
@@ -196,7 +196,7 @@ object VectorFunctions {
   }
 
   /** L2 over two integer arrays (exact — long accumulation). */
-  // Compiled kernel (LongL2Expr): the HOF formulation
+  // Compiled kernel (Kernels.longL2): the HOF formulation
   // aggregate(zip_with(...)) is interpreted per row, which dominated the
   // PQ corpus×centroid encode join at sf1 (exact value parity asserted in
   // ExpressionsSpec).
@@ -303,7 +303,7 @@ object VectorFunctions {
       // (k ∝ n otherwise: the sf1→sf10 decade measured q128 at ×109).
       // Deterministic and SQL-replayable (row_number over cid ≤ k). The
       // codebook is ≤ m×k×dsub longs — bounded driver state — so each
-      // round collects it and assigns via the compiled NearestCodeL2Expr
+      // round collects it and assigns via the compiled Kernels.nearestCodeL2
       // narrow map (exact-long parity with the min_by join, asserted in
       // ExpressionsSpec): no corpus×k joined rows anywhere in training.
       val bounded = seedBook.withColumn("__r", row_number().over(
@@ -588,7 +588,7 @@ object VectorFunctions {
     // the k smallest seed ids, replayed in SQL as ORDER BY…LIMIT. On the
     // budgeted path the centroid table is bounded driver state: collect
     // it ONCE — the corpus-side assignment runs as the compiled
-    // NearestCentroidCosExpr narrow map (bit-parity with the
+    // Kernels.nearestCentroidCos narrow map (bit-parity with the
     // row_number-over-(cosine desc, cid) formulation — same kernel and
     // tie rule as quantizedLloyd, asserted in ExpressionsSpec) and the
     // query-side probing reads the same values as a local relation. The
@@ -658,7 +658,7 @@ object VectorFunctions {
     val v = df.select(col(idCol).as("id"),
       transform(col(vecCol), x => x.cast("double")).as("__v"))
     // Round 16: the tables × bits plane projections run in ONE compiled
-    // loop per row (PlaneSigsExpr — bit-parity with the zip_with/aggregate
+    // loop per row (Kernels.planeSigs — bit-parity with the zip_with/aggregate
     // HOF fold the oracle replays, spec-pinned), the scan is spread before
     // the kernel (a 2-split embeddings scan serialized it on 2 of 32
     // cores), and the bucketed keys (id, t, sig — 24 bytes/row, the
@@ -813,7 +813,7 @@ object VectorFunctions {
     * marks rows dropped as near-duplicates of a lower-id cell-mate.
     *
     * Scale shape: with the default centroid budget the assignment is the
-    * compiled NearestCentroidCosExpr narrow map (one dim×k loop per row,
+    * compiled Kernels.nearestCentroidCos narrow map (one dim×k loop per row,
     * k ≤ maxCentroids — no corpus×k rows ever materialize); the update is
     * one posexplode + two aggregations sharing the cell key (linear in
     * corpus × dim); the dedup self-join is within-cell only, and `maxCell`
@@ -967,7 +967,7 @@ object VectorFunctions {
     } else {
       // Budgeted (default) path: the centroid table is ≤ maxCentroids×dim
       // doubles — bounded driver state — so assignment runs as the compiled
-      // NearestCentroidCosExpr narrow map (one dim×k loop per row, the
+      // Kernels.nearestCentroidCos narrow map (one dim×k loop per row, the
       // ivfTopK :559 technique) instead of a corpus×k cross-join: no
       // per-pair 64-dim array traffic, no join at all. Bit-parity with the
       // max_by-over-cosine formulation (and thus the DuckDB oracle replay)

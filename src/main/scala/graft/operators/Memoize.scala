@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.storage.StorageLevel
 
 /** `memoize` / `tee` (/root/reference/pybabe/base.py:177-253, 196-202).
@@ -23,9 +24,11 @@ object Memoize {
     * the analyzed plan string does NOT print file-source paths, so two runs
     * of the same pipeline over different directories would otherwise collide
     * and replay the wrong cache. The plan text is rendered with no field
-    * limit: the default rendering cuts lists after
+    * limit, for the plan's own lists and for each expression's argument
+    * list: the default rendering cuts both after
     * `spark.sql.debug.maxToStringFields` entries, so two wide projections
-    * differing only past the cut would share a fingerprint.
+    * or arrays differing only past the cut would share a fingerprint. The
+    * session's own setting is left as it is.
     */
   def planFingerprint(df: DataFrame): String = {
     // checkpointed/RDD-backed subtrees print as a bare `LogicalRDD [cols]`
@@ -37,8 +40,10 @@ object Memoize {
     val rddIds = df.queryExecution.analyzed.collect {
       case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
     }
-    val canon = df.queryExecution.analyzed
-      .treeString(verbose = true, maxFields = Int.MaxValue)
+    val conf = df.queryExecution.sparkSession.sessionState.conf.clone()
+    conf.setConf(SQLConf.MAX_TO_STRING_FIELDS, Int.MaxValue)
+    val canon = SQLConf.withExistingConf(conf)(df.queryExecution.analyzed
+      .treeString(verbose = true, maxFields = Int.MaxValue))
       .replaceAll("#\\d+", "#") + // strip per-session expression ids
       "\n" + df.inputFiles.sorted.mkString("\n") +
       (if (rddIds.isEmpty) "" else "\nrdds:" + rddIds.mkString(","))

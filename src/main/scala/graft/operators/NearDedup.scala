@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.expressions.MinHashSigExpr
+import graft.expressions.MinHash
 import graft.functions.TextFunctions
 
 /** Near-duplicate detection for training-data pipelines: exact, MinHash+LSH,
@@ -51,8 +51,8 @@ object NearDedup {
     */
   private val dropSeq = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** MinHash signature of the shingle set — a native codegen'd expression
-    * (graft.expressions.MinHashSigExpr): numPerms permutations
+  /** MinHash signature of the shingle set — the compiled kernel
+    * (graft.expressions.Kernels.minhashSig): numPerms permutations
     * h_i(x) = (a_i·x + b_i) mod (2^31-1) over xxhash64 shingle hashes,
     * computed in one compiled loop per row (the HOF formulation is
     * interpreted by Catalyst and was the hot path at scale).
@@ -170,7 +170,7 @@ object NearDedup {
     * 2^62 (ANSI-safe).
     */
   def portablePerms(numPerms: Int, seed: Long = 42L): (Seq[Long], Seq[Long]) = {
-    val (as, bs) = MinHashSigExpr.perms(numPerms, seed, portable = true)
+    val (as, bs) = MinHash.perms(numPerms, seed, portable = true)
     (as.toSeq, bs.toSeq)
   }
 
@@ -194,7 +194,7 @@ object NearDedup {
     * prior text.
     *
     * One narrow map per row, no shuffle: the shared signature kernel
-    * (MinHashSigExpr on its portable basis) computes the signature, the
+    * (Kernels.minhashSig on its portable basis) computes the signature, the
     * band key is md5 of the comma-joined signature slice, and the bands
     * explode into rows. A null or empty shingle array yields no rows.
     *
@@ -225,7 +225,7 @@ object NearDedup {
     * permutations come from [[portablePerms]], and band keys are md5 of the
     * comma-joined signature slice. Semantics and shape match
     * [[minhashPairs]], and so does the signature: both run the same
-    * compiled kernel (MinHashSigExpr), which differs between the two only
+    * compiled kernel (Kernels.minhashSig), which differs between the two only
     * in the shingle hash and the permutation constants. What the portable
     * basis adds is that the WHOLE LSH pipeline (hashing, banding,
     * candidate join, exact-jaccard verify) can be replayed and checked
@@ -349,7 +349,7 @@ object NearDedup {
 
   /** 64-bit SimHash over token xxhash64 values: bit j of the result is 1 when
     * the sum over tokens of ±1 (by bit j of the token hash) is positive.
-    * Native codegen'd expression (graft.expressions.SimHash64Expr): one
+    * Compiled kernel (graft.expressions.Kernels.simhash64): one
     * compiled pass over the tokens instead of 64 interpreted array folds.
     */
   def simhash64(textCol: Column): Column =
@@ -415,7 +415,7 @@ object NearDedup {
     * the LSH paths. NOT a cartesian product: shingles are exploded and
     * pairs meet on a shingle-valued join key, so every shuffle is linear in
     * total shingle volume and only pairs that actually share a shingle are
-    * ever materialized. Since shingle sets are distinct (ShinglesExpr emits
+    * ever materialized. Since shingle sets are distinct (Kernels.shingles emits
     * a set), `count(*)` per (id_a, id_b) IS |A∩B| exactly, and
     * |A∪B| = |A|+|B|-|A∩B|. Pairs with zero shared shingles have
     * jaccard = 0 and can never pass a positive threshold, so requiring
@@ -441,7 +441,7 @@ object NearDedup {
     */
   /** (id, shingle, per-doc set size) postings with the hot-shingle df cap
     * applied — the shared front end of the exact pairwise ops. Shingle
-    * sets are distinct per doc (ShinglesExpr emits a set), so a plain
+    * sets are distinct per doc (Kernels.shingles emits a set), so a plain
     * count per shingle IS its document frequency — no count_distinct
     * shuffle needed. Set sizes are recomputed over the pruned universe so
     * intersections and sizes count the same shingle population; dropped

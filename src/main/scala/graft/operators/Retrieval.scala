@@ -180,9 +180,14 @@ object Retrieval {
     // index served to the sf0.01 oracle gate).
     //
     // Round 16: the two branches (df aggregation, postings/champion cut)
-    // now hang off ONE explicit term-keyed repartition, so the tokenize
-    // kernel runs once and both branches fetch from the same reused
-    // exchange — previously each branch re-ran the kernel from the scan.
+    // hang off ONE explicit term-keyed repartition. That was meant to run
+    // the tokenize kernel once and let both branches read one reused
+    // exchange, but it does not: the committed round-16 q158/q172 plans
+    // (under plans/r16) show three tokenize pipelines, each over its own
+    // parquet scan, and no ReusedExchange, and the df branch's partial
+    // count sits above the new shuffle, so it shuffles raw postings. Making
+    // the sharing real or reverting is an open ROADMAP item ("tf-idf index
+    // build: make the sharing real or revert it").
     // The exchange key keeps the salted two-stage contract: with champion
     // lists on, partitioning by (t, salt) means no single task ever sorts
     // a whole hot-term posting list (the round-14 q130-at-sf100 failure);

@@ -1,9 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.catalyst.expressions.Literal
-import graft.expressions.{GraftFunctions, MinHashSigExpr}
+import graft.expressions.{GraftFunctions, MinHash}
 import graft.functions.{TextFunctions, VectorFunctions}
 
 /** Native codegen'd expressions: value parity with the HOF formulations and
@@ -384,20 +383,20 @@ class ExpressionsSpec extends SparkSpec {
     val (as, bs) = NearDedup.portablePerms(32)
     // the kernel's constants ARE the ones the oracle SQL interpolates; the
     // native basis keeps its interleaved draw
-    val portableExpr = MinHashSigExpr(Literal(null), 32, 42L, portable = true)
-    assert(portableExpr.perms._1.toSeq == as && portableExpr.perms._2.toSeq == bs)
+    val portablePerms = MinHash.perms(32, 42L, portable = true)
+    assert(portablePerms._1.toSeq == as && portablePerms._2.toSeq == bs)
     val rnd0 = new scala.util.Random(42L)
-    val interleaved = Seq.fill(32)((math.abs(rnd0.nextLong()) % (MinHashSigExpr.P - 1) + 1,
-      math.abs(rnd0.nextLong()) % MinHashSigExpr.P))
-    val nativeExpr = MinHashSigExpr(Literal(null), 32, 42L)
-    assert(nativeExpr.perms._1.toSeq == interleaved.map(_._1) &&
-      nativeExpr.perms._2.toSeq == interleaved.map(_._2))
-    assert(nativeExpr.perms._1.toSeq != as)
+    val interleaved = Seq.fill(32)((math.abs(rnd0.nextLong()) % (MinHash.P - 1) + 1,
+      math.abs(rnd0.nextLong()) % MinHash.P))
+    val nativePerms = MinHash.perms(32, 42L, portable = false)
+    assert(nativePerms._1.toSeq == interleaved.map(_._1) &&
+      nativePerms._2.toSeq == interleaved.map(_._2))
+    assert(nativePerms._1.toSeq != as)
 
     // The formulation the kernel replaced: one row per shingle, md5 → 60
     // bits → mod p, then 32 min aggregates grouped by id.
     def reference(sh: DataFrame): DataFrame = {
-      val p = MinHashSigExpr.P
+      val p = MinHash.P
       val ex = sh.select(col("id"), explode(col("sh")).as("s"))
         .withColumn("hm",
           conv(substring(md5(col("s")), 1, 15), 16, 10).cast("long") % p)
@@ -482,6 +481,297 @@ class ExpressionsSpec extends SparkSpec {
     }
   }
 
+  /** The inputs a kernel call reads, as columns of the differential table. */
+  private case class KernelInputs(t: Column, sa: Column, sb: Column, la: Column, lb: Column,
+                                  va: Column, vb: Column, sub: Column)
+
+  /** One row of the differential table: the kernel call, the dataType it
+    * had as a hand-written expression class (its nullability was that of
+    * its inputs), and the reference formulation it must equal wherever
+    * every input is non-null. `view` maps the kernel's raw value to what
+    * the reference computes (identity for all but the two probe kernels).
+    */
+  private case class KernelCase(name: String, dataType: String,
+                                inputs: KernelInputs => Seq[Column],
+                                kernel: Seq[Column] => Column,
+                                reference: Seq[Column] => Column,
+                                view: (Column, Seq[Column]) => Column = (k, _) => k)
+
+  test("every compiled kernel matches its reference formulation (table, both codegen modes)") {
+    import graft.expressions.Kernels
+    import graft.operators.TimeParse
+    val rnd = new scala.util.Random(17)
+    val vocab = Vector("the", "cat", "sat", "on", "mat", "dog", "😀", "𝄞x", "é", "x1")
+    val texts: Seq[String] = trickyTexts ++ Seq(null, "a\na\nb", "😀 😀\n😀 😀\nab",
+      "dup 𝄞 line\ndup 𝄞 line\nother much longer line", "e\u0301 ﬁ Å ①",
+      "2012-04-03", "2012/4/3 7:05", "2012-02-30", "0000-01-01", "12\n", "-0.5",
+      "2012-04-03 10:20:30", "2012-04-03T23:59:59", "2012-04-03 24:00", "03-04-2012 10:20",
+      "2012-04-03 10:20:30.123456", "10/13/2012",
+      """<html><head><title> T </title><style>p{}</style></head><body><p id="b" data-x="a>b">x &amp; y &lt;z&gt; &#65;&#x21; &#x1F600; &bogus; &#0; &#+65;</p><!-- c --><br/>tail</body></html>""",
+      "<SCRIPT type=x>if (1 < 2) { '</p>' }</SCRIPT >after <scripture>v</scripture> 1 < 2",
+      "<p>a<script>never closed", "a<p unclosed", "a<!-- unclosed", "<!DOCTYPE html><?xml?>x</ >y",
+      "<div>\t a \r\n\n b </div>&nbsp;&mdash;&hellip;&#x10FFFF;&#1114112;&#xD800;") ++
+      Seq.fill(16)(Seq.fill(1 + rnd.nextInt(12))(vocab(rnd.nextInt(vocab.size))).mkString(" "))
+    val strs: Seq[Seq[String]] = Seq(null, Seq.empty, Seq("a"), Seq("a", "a", "b"), Seq("b", "a"),
+      Seq("😀 x", "𝄞"), Seq("")) ++
+      Seq.fill(10)(Seq.fill(1 + rnd.nextInt(6))(vocab(rnd.nextInt(vocab.size))))
+    val longs: Seq[Seq[Long]] = Seq(null, Seq.empty, Seq(1L, 2L, 3L), Seq(1L, 2L), Seq(7L, 0L, -3L, 9L)) ++
+      Seq.fill(8)(Seq.fill(3)(rnd.nextInt(100).toLong - 50))
+    val dim = 4
+    val doubles: Seq[Seq[Double]] = Seq(null, Seq.empty, Seq.fill(dim)(0.0), Seq.fill(dim)(-0.0),
+      Seq(1.0, 2.0, 3.0), Seq(1.0, -2.0, 3.0, -4.0, 5.0), Seq(Double.NaN, 1.0, 1.0, 1.0),
+      Seq(Double.PositiveInfinity, 0.0, 0.0, 0.0)) ++ Seq.fill(12)(Seq.fill(dim)(rnd.nextGaussian()))
+    val dir = tmp("kernel_table")
+    (0 until 2 * texts.size).map { i =>
+      (i.toLong, texts(i % texts.size), strs(i % strs.size), strs((7 * i + 3) % strs.size),
+        longs(i % longs.size), longs((5 * i + 1) % longs.size),
+        doubles(i % doubles.size), doubles((3 * i + 2) % doubles.size),
+        if (i % 9 == 0) None else Some((i % 2).toLong))
+    }.toDF("id", "t", "sa", "sb", "la", "lb", "va", "vb", "sub").write.mode("overwrite").parquet(dir)
+
+    // kernel constants
+    val cents = Array.fill(6)(Array.fill(dim)(rnd.nextGaussian()))
+    val centsDup = cents :+ cents(2).clone() // a tie the lower cid must win
+    val centIds = Array(0L, 25L, 50L, 75L, 100L, 125L, 150L)
+    val books = Array.fill(2)(Array.fill(3)(Array.fill(3)(rnd.nextInt(100).toLong - 50)))
+    books(1)(2) = books(1)(0).clone()
+    val bookIds = Array(Array(0L, 5L, 9L), Array(8L, 4L, 1L))
+    val planes = VectorFunctions.portablePlanes(dim, 3, 2)
+    val gramCounts: Map[String, Long] = texts.filter(_ != null).take(20).flatMap { s =>
+      val cps = s.codePoints().toArray
+      if (cps.length < 3) Seq(s) else cps.sliding(3).map(w => new String(w, 0, 3)).toSeq
+    }.groupBy(identity).toSeq.sortBy(_._1).zipWithIndex
+      .collect { case ((g, gs), i) if i % 5 != 0 => g -> gs.size.toLong }.toMap // some grams absent
+    val gramTable = new java.util.HashMap[org.apache.spark.unsafe.types.UTF8String, java.lang.Long]()
+    gramCounts.foreach { case (g, c) =>
+      gramTable.put(org.apache.spark.unsafe.types.UTF8String.fromString(g), java.lang.Long.valueOf(c)) }
+    val hpBits = 6
+    val hpPlanes = { val r = new scala.util.Random(7L); Array.fill(hpBits)(Array.fill(dim)(r.nextGaussian())) }
+    val (mhA, mhB) = graft.expressions.MinHash.perms(8, 42L, portable = false)
+    val (pmA, pmB) = graft.expressions.MinHash.perms(8, 42L, portable = true)
+
+    // reference building blocks
+    val p = graft.expressions.MinHash.P
+    def javaTrimTokens(c: Column) = split(regexp_replace(c, "^[\\x00-\\x20]+|[\\x00-\\x20]+\\z", ""), "\\s+")
+    def prefixes(a: Column, b: Column): (Column, Column) = {
+      val n = least(size(a), size(b))
+      (slice(a, lit(1), n), slice(b, lit(1), n))
+    }
+    def dotHof(a: Column, b: Column) = aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0d), (s, v) => s + v)
+    def cosHof(a: Column, b: Column) = {
+      val d = VectorFunctions.l2Norm(a) * VectorFunctions.l2Norm(b)
+      when(d === 0.0d, lit(0.0d)).otherwise(dotHof(a, b) / d)
+    }
+    def sqL2(a: Column, b: Column, zero: Column) = {
+      val (x, y) = prefixes(a, b)
+      aggregate(zip_with(x, y, (u, v) => (u - v) * (u - v)), zero, (s, v) => s + v)
+    }
+    def minhashRef(sh: Column, hash: Column => Column, a: Array[Long], b: Array[Long]) =
+      array(a.indices.map(k => coalesce(array_min(transform(sh, s =>
+        pmod(pmod(hash(s), lit(p)) * lit(a(k)) + lit(b(k)), lit(p)))), lit(0L))): _*)
+    def charGrams(t: Column) = when(length(t) < 3, array(t))
+      .otherwise(transform(sequence(lit(0), length(t) - 3), i => t.substr(i + 1, lit(3))))
+    def full(re: String) = s"\\A(?:$re)\\z"
+    val dateShape = "\\d{2,4}[-/ ]\\d{1,2}[-/ ]\\d{1,2}"
+    val isoDate = "[0-9]{4}[-/][0-9]{1,2}[-/][0-9]{1,2}"
+    def typeMaskRef(t: Column) = {
+      val iso = translate(t, "/T", "- ")
+      Seq(
+        t.rlike(full("-?[0-9]+")) -> 1, t.rlike(full("-?[0-9]+\\.[0-9]+")) -> 2,
+        t.rlike(full(dateShape)) -> 4,
+        t.rlike(full(dateShape + "[ T]\\d{1,2}:\\d{2}(:\\d{2})?(\\.\\d+)?")) -> 8,
+        // 16/32 certify a parse for years 1-9999 only (the bits are conservative)
+        (t.rlike(full(isoDate)) && substring(t, 1, 4) =!= "0000" &&
+          try_to_timestamp(iso, lit("yyyy-M-d")).isNotNull) -> 16,
+        (t.rlike(full(isoDate + "[ T][0-9]{1,2}:[0-9]{2}(:[0-9]{2})?")) && substring(t, 1, 4) =!= "0000" &&
+          coalesce(try_to_timestamp(iso, lit("yyyy-M-d H:mm:ss")),
+            try_to_timestamp(iso, lit("yyyy-M-d H:mm"))).isNotNull) -> 32
+      ).map { case (c, bit) => when(c, lit(bit)).otherwise(lit(0)) }.reduce(_ + _)
+    }
+    // htmlToText: split into the scanner's tokens (one construct or one
+    // character each), map every token to its text, then canonicalize
+    // whitespace with the kernel's four regexes
+    def rawText(tag: String) = s"(?i:<$tag)(?=[\\p{javaWhitespace}>/]|\\z)" +
+      s"(?:[^>]*>(?s:.*?)(?:(?i:</$tag)[^>]*(?:>|\\z)|\\z)|[^>]*\\z)"
+    val named = Map("amp" -> "&", "lt" -> "<", "gt" -> ">", "quot" -> "\"", "apos" -> "'",
+      "nbsp" -> " ", "copy" -> "©", "reg" -> "®", "trade" -> "™", "mdash" -> "—",
+      "ndash" -> "–", "hellip" -> "…", "rsquo" -> "’", "lsquo" -> "‘", "rdquo" -> "”", "ldquo" -> "“")
+    val tokenRe = Seq("<!--(?s:.*?)(?:-->|\\z)", rawText("script"), rawText("style"),
+      "<[!?][^>]*(?:>|\\z)",
+      "<(?=[\\p{javaLetter}/])/?\\p{javaLetterOrDigit}*(?:[^\"'>]|\"[^\"]*(?:\"|\\z)|'[^']*(?:'|\\z))*(?:>|\\z)",
+      "&(?:#[0-9]{1,7}|#[xX][0-9a-fA-F]{1,7}|" + named.keys.mkString("|") + ");",
+      "(?s:.)").mkString("|")
+    val blockTags = typedLit(Seq("html", "head", "body", "title", "p", "div", "br", "hr", "li", "ul",
+      "ol", "dl", "dt", "dd", "table", "tr", "td", "th", "blockquote", "pre",
+      "h1", "h2", "h3", "h4", "h5", "h6", "section", "article", "aside",
+      "nav", "header", "footer", "form", "figure", "figcaption"))
+    def htmlRef(t: Column) = {
+      val text = transform(regexp_extract_all(t, lit(tokenRe), lit(0)), tok => {
+        val cp = coalesce(regexp_extract(tok, "^&#([0-9]+);$", 1).try_cast("int"),
+          conv(regexp_extract(tok, "^&#[xX]([0-9a-fA-F]+);$", 1), 16, 10).try_cast("int"))
+        val tagName = lower(regexp_extract(tok, "^</?(\\p{javaLetterOrDigit}*)", 1))
+        when(tok.rlike("^<(!|\\?|(?i:script|style)(?:[\\p{javaWhitespace}>/]|$))"), lit(" "))
+          .when(tok.rlike("^<[\\p{javaLetter}/]"),
+            when(array_contains(blockTags, tagName), lit("\n")).otherwise(lit(" ")))
+          .when(tok.startsWith("&#"),
+            when(cp > 0 && cp <= 0x10FFFF && !cp.between(0xD800, 0xDFFF),
+              decode(unhex(lpad(hex(cp), 8, "0")), "UTF-32")).otherwise(tok))
+          .when(tok.startsWith("&") && length(tok) > 1,
+            element_at(typedLit(named), regexp_extract(tok, "^&(.*);$", 1)))
+          .otherwise(tok)
+      })
+      Seq("[ \\t\\r]+" -> " ", " ?\\n ?" -> "\n", "\\n+" -> "\n", "^[\\n ]+|[\\n ]+$" -> "")
+        .foldLeft(array_join(text, "")) { case (s, (re, rep)) => regexp_replace(s, re, rep) }
+    }
+    val deflateRef = udf { (s: String) =>
+      val bytes = s.getBytes("UTF-8")
+      if (bytes.isEmpty) 1.0 else {
+        val d = new java.util.zip.Deflater(java.util.zip.Deflater.BEST_SPEED, true)
+        d.setInput(bytes); d.finish()
+        val buf = new Array[Byte](1 << 16)
+        var total = 0L
+        while (!d.finished()) total += d.deflate(buf)
+        d.end()
+        total.toDouble / bytes.length
+      }
+    }
+    val nfkcRef = udf((s: String) => java.text.Normalizer.normalize(s, java.text.Normalizer.Form.NFKC))
+    val formatterMicros = (t: Column) => unix_micros(TimeParse.formatterExpr(t))
+
+    val G = GraftFunctions
+    val text = (in: KernelInputs) => Seq(in.t)
+    val cases = Seq(
+      KernelCase("htmlToText", "StringType", text, c => G.htmlToText(c(0)), c => htmlRef(c(0))),
+      KernelCase("deflateRatio", "DoubleType", text, c => G.deflateRatio(c(0)), c => deflateRef(c(0))),
+      KernelCase("longL2", "LongType", in => Seq(in.la, in.lb), c => G.longL2(c(0), c(1)),
+        c => sqL2(c(0), c(1), lit(0L))),
+      KernelCase("jaccardSim", "DoubleType", in => Seq(in.sa, in.sb), c => G.jaccardSim(c(0), c(1)), c => {
+        val union = size(array_union(c(0), c(1)))
+        // 0/0 is NaN in the kernel; SQL division by zero fails under ANSI
+        when(union === 0, lit(Double.NaN))
+          .otherwise(size(array_intersect(c(0), c(1))).cast("double") / union)
+      }),
+      KernelCase("simhash64", "LongType", text, c => G.simhash64(c(0)), c => {
+        val toks = javaTrimTokens(c(0))
+        (0 until 64).map { j =>
+          val votes = aggregate(toks, lit(0), (acc, tok) =>
+            acc + when(shiftrightunsigned(xxhash64(tok), j).bitwiseAND(1L) === 1L, 1).otherwise(-1))
+          when(votes > 0, lit(1L << j)).otherwise(lit(0L))
+        }.reduce(_ bitwiseOR _)
+      }),
+      KernelCase("shingles", "ArrayType(StringType,false)", text, c => G.shingles(c(0), 3), c => {
+        val toks = javaTrimTokens(c(0))
+        array_distinct(when(size(toks) < 3, array(concat_ws(" ", toks)))
+          .otherwise(transform(sequence(lit(0), size(toks) - 3),
+            i => concat_ws(" ", slice(toks, i + 1, lit(3))))))
+      }),
+      KernelCase("typeProbe", "IntegerType", text, c => G.typeProbe(c(0)), c => typeMaskRef(c(0))),
+      KernelCase("unicodeNormalize", "StringType", text, c => G.unicodeNormalize(c(0), "NFKC"),
+        c => nfkcRef(c(0))),
+      KernelCase("minhashSig", "ArrayType(LongType,false)", in => Seq(in.sa),
+        c => G.minhashSignature(c(0), 8), c => minhashRef(c(0), xxhash64(_), mhA, mhB)),
+      KernelCase("minhashSig portable", "ArrayType(LongType,false)", in => Seq(in.sa),
+        c => G.minhashSignature(c(0), 8, portable = true),
+        c => minhashRef(c(0), s => conv(substring(md5(s), 1, 15), 16, 10).cast("long"), pmA, pmB)),
+      KernelCase("cosine", "DoubleType", in => Seq(in.va, in.vb), c => G.cosine(c(0), c(1)), c => {
+        val (a, b) = prefixes(c(0), c(1))
+        cosHof(a, b)
+      }),
+      KernelCase("hyperplaneSig", "LongType", in => Seq(in.va), c => G.hyperplaneSignature(c(0), dim, hpBits),
+        c => hpPlanes.indices.map { i =>
+          val (v, pl) = prefixes(c(0), typedLit(hpPlanes(i).toSeq))
+          when(dotHof(v, pl) >= 0, lit(1L << i)).otherwise(lit(0L))
+        }.reduce(_ + _)),
+      KernelCase("planeSigs", "ArrayType(LongType,false)", in => Seq(in.va), c => G.planeSigs(c(0), planes, 3),
+        c => array((0 until planes.length / 3).map { t =>
+          (0 until 3).map { b =>
+            when(dotHof(c(0), typedLit(planes(t * 3 + b))) >= 0, lit(1L << b)).otherwise(lit(0L))
+          }.reduce(_ + _)
+        }: _*)),
+      KernelCase("nearestCentroids", "ArrayType(IntegerType,false)", in => Seq(in.va),
+        c => G.nearestCentroids(c(0), centsDup, 3), c => {
+          val scored = transform(zip_with(typedLit(centsDup.map(_.toSeq).toSeq),
+            sequence(lit(0), lit(centsDup.length - 1)), (cv, i) => struct(cv.as("cv"), i.as("i"))),
+            s => struct(sqL2(c(0), s.getField("cv"), lit(0.0d)).as("d"), s.getField("i").as("i")))
+          slice(transform(array_sort(scored), s => s.getField("i")), 1, 3)
+        }),
+      KernelCase("nearestCentroidCos", "LongType", in => Seq(in.va),
+        c => G.nearestCentroidCos(c(0), centsDup, centIds), c => {
+          val best = array_max(transform(typedLit(centIds.toSeq.zip(centsDup.map(_.toSeq).toSeq)), e => {
+            val (v, cv) = prefixes(c(0), e.getField("_2"))
+            struct(cosHof(v, cv).as("cs"), (-e.getField("_1")).as("nid"))
+          }))
+          -best.getField("nid")
+        }),
+      KernelCase("nearestCodeL2", "LongType", in => Seq(in.la, in.sub),
+        c => G.nearestCodeL2(c(0), c(1), books, bookIds), c => {
+          val book = element_at(typedLit(books.indices.map(s =>
+            bookIds(s).toSeq.zip(books(s).map(_.toSeq).toSeq))), (c(1) + 1).cast("int"))
+          array_min(transform(book, e =>
+            struct(sqL2(c(0), e.getField("_2"), lit(0L)).as("d2"), e.getField("_1").as("cid"))))
+            .getField("cid")
+        }),
+      KernelCase("repetitionStats", "ArrayType(DoubleType,false)", text, c => G.repetitionStats(c(0), 2),
+        c => array(TextFunctions.duplicateLineFraction(c(0)),
+          TextFunctions.duplicateLineCharFraction(c(0)), TextFunctions.topNgramCharFraction(c(0), 2))),
+      KernelCase("charNgramCounts",
+        "ArrayType(StructType(StructField(g,StringType,false),StructField(c,LongType,false)),false)",
+        text, c => G.charNgramCounts(c(0), 3), c => {
+          val grams = charGrams(c(0))
+          transform(array_distinct(grams), g =>
+            struct(g.as("g"), size(filter(grams, x => x === g)).cast("long").as("c")))
+        }),
+      KernelCase("charNgramFreqStats", "ArrayType(LongType,false)", text,
+        c => G.charNgramFreqStats(c(0), 3, gramTable), c => {
+          val grams = charGrams(c(0))
+          array(size(grams).cast("long"), aggregate(grams, lit(0L), (acc, g) =>
+            acc + coalesce(try_element_at(typedLit(gramCounts), g), lit(0L))))
+        }),
+      KernelCase("subwordCount", "IntegerType", text, c => G.subwordCount(c(0)),
+        c => TextFunctions.subwordCountRegex(c(0))),
+      KernelCase("scriptCounts", "ArrayType(LongType,false)", text, c => G.scriptCounts(c(0)),
+        c => array(TextFunctions.ScriptRanges.map { case (_, r) =>
+          length(regexp_replace(c(0), s"[^$r]", "")).cast("long") }: _*)),
+      // the kernel certifies a value or defers to the formatter cascade
+      KernelCase("multiTsMicros", "LongType", text, c => G.multiTsMicros(c(0)),
+        c => formatterMicros(c(0)), view = (k, c) =>
+          when(k === Kernels.TsFallback, formatterMicros(c(0)))
+            .when(k === Kernels.TsNoParse, lit(null).cast("long")).otherwise(k)))
+
+    val df0 = spark.read.parquet(dir)
+    val nullable = KernelInputs(col("t"), col("sa"), col("sb"), col("la"), col("lb"),
+      col("va"), col("vb"), col("sub"))
+    val nonNull = KernelInputs(coalesce(col("t"), lit("")),
+      coalesce(col("sa"), typedLit(Seq.empty[String])), coalesce(col("sb"), typedLit(Seq.empty[String])),
+      coalesce(col("la"), typedLit(Seq.empty[Long])), coalesce(col("lb"), typedLit(Seq.empty[Long])),
+      coalesce(col("va"), typedLit(Seq.empty[Double])), coalesce(col("vb"), typedLit(Seq.empty[Double])),
+      coalesce(col("sub"), lit(0L)))
+    cases.foreach { kc =>
+      val onNullable = df0.select(kc.kernel(kc.inputs(nullable))).schema.head
+      val onNonNull = df0.select(kc.kernel(kc.inputs(nonNull))).schema.head
+      assert(onNullable.dataType.toString == kc.dataType, kc.name)
+      assert(onNullable.nullable && !onNonNull.nullable, kc.name)
+    }
+
+    inBothCodegenModes { mode =>
+      val df = spark.read.parquet(dir)
+      val failures = cases.flatMap { kc =>
+        val in = kc.inputs(nullable)
+        val got = kc.view(kc.kernel(in), in)
+        val want = when(in.map(_.isNotNull).reduce(_ && _), kc.reference(in))
+        val out = df.select(col("id"), col("t"), got.as("got"), want.as("want"))
+        // the higher-order references keep their own projection out of
+        // whole-stage codegen, so the kernel's stage is checked alone
+        val plan = df.select(kc.kernel(in)).queryExecution.executedPlan.toString
+        val compiled = plan.linesIterator.exists(l => l.contains("Project") && l.contains("*("))
+        val bad = out.filter(!(col("got") <=> col("want"))).collect()
+        (if (compiled || mode != "CODEGEN_ONLY") Nil else Seq(s"${kc.name}: not compiled\n$plan")) ++
+          bad.take(3).map(r => s"${kc.name} id=${r.get(0)} t=${r.get(1)}: got ${r.get(2)}, want ${r.get(3)}")
+      }
+      assert(failures.isEmpty, s"$mode:\n${failures.mkString("\n")}")
+    }
+  }
+
   test("SQL surface via SparkSessionExtensions (graft_* functions)") {
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
@@ -507,6 +797,37 @@ class ExpressionsSpec extends SparkSpec {
       assert(viaSql.getString(5) == "a\nb")
       assert(viaSql.getDouble(6) == 1.0)
       assert(viaSql.getTimestamp(7).toInstant.toString == "2012-04-03T10:20:30Z")
+
+      // Every registered name, called from SQL, equals the Column API on the
+      // same rows, nulls included: a dropped or mis-wired name fails here.
+      val docs = extSession.createDataFrame(Seq(
+        (1L, "a b c d", "<p>x</p> &amp; y", "2012-04-03 10:20:30", Seq("a b", "b c"),
+          Seq(1.0, 2.0), Seq(0.5, -1.0)),
+        (2L, "tab\there 😀 12\n12", "<br>z", "3/4/2012", Seq("x"), Seq(0.0, 3.0), Seq(1.0, 1.0)),
+        (3L, null, null, null, null, null, null))).toDF("id", "t", "h", "ts", "sh", "v", "w")
+      docs.createOrReplaceTempView("docs")
+      val G = GraftFunctions
+      val calls = Seq(
+        "graft_simhash64" -> ("graft_simhash64(t)", G.simhash64(col("t"))),
+        "graft_shingles" -> ("graft_shingles(t, 2)", G.shingles(col("t"), 2)),
+        "graft_type_probe" -> ("graft_type_probe(ts)", G.typeProbe(col("ts"))),
+        "graft_cosine" -> ("graft_cosine(v, w)", G.cosine(col("v"), col("w"))),
+        "graft_minhash_sig" -> ("graft_minhash_sig(sh, 8)", G.minhashSignature(col("sh"), 8)),
+        "graft_minhash_sig" -> ("graft_minhash_sig(sh, 8, 5)", G.minhashSignature(col("sh"), 8, 5L)),
+        "graft_hyperplane_sig" -> ("graft_hyperplane_sig(v, 2, 4)", G.hyperplaneSignature(col("v"), 2, 4)),
+        "graft_hyperplane_sig" -> ("graft_hyperplane_sig(v, 2, 4, 9)",
+          G.hyperplaneSignature(col("v"), 2, 4, 9L)),
+        "graft_repetition_stats" -> ("graft_repetition_stats(t, 2)", G.repetitionStats(col("t"), 2)),
+        "graft_subword_count" -> ("graft_subword_count(t)", G.subwordCount(col("t"))),
+        "graft_script_counts" -> ("graft_script_counts(t)", G.scriptCounts(col("t"))),
+        "graft_html_to_text" -> ("graft_html_to_text(h)", G.htmlToText(col("h"))),
+        "graft_deflate_ratio" -> ("graft_deflate_ratio(t)", G.deflateRatio(col("t"))),
+        "graft_multi_ts" -> ("graft_multi_ts(ts)", G.multiTsMicros(col("ts"))))
+      assert(calls.map(_._1).toSet == G.sqlFunctions.map(_._1).toSet)
+      calls.foreach { case (_, (call, viaColumn)) =>
+        assertSameRows(extSession.sql(s"SELECT id, $call AS v FROM docs"),
+          docs.select(col("id"), viaColumn.as("v")), call)
+      }
     } finally {
       SparkSession.clearActiveSession()
       SparkSession.clearDefaultSession()

@@ -51,7 +51,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("q103/q181 budgeted Lloyd assignment is the compiled kernel, not a cross-join") {
     // Round 13: with the default centroid budget the cell assignment runs
-    // as the NearestCentroidCosExpr narrow map — the corpus×k
+    // as the graft_nearest_centroid_cos narrow map — the corpus×k
     // BroadcastNestedLoopJoin (and its per-pair 64-dim array traffic, the
     // q103 sf1 session-spread mechanism) must NOT reappear. q103's only
     // joins are the within-cell pair join and the kept-flag left join.
@@ -66,7 +66,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("q128/q132 PQ encode is the compiled kernel, not a corpus×codebook join") {
     // Round 13: with the default centroid budget the per-(row, subspace)
-    // code assignment runs as the NearestCodeL2Expr narrow map. The
+    // code assignment runs as the graft_nearest_code_l2 narrow map. The
     // corpus×(m·ksub) encode join this replaced was the whole residual of
     // the budgeted q128 at sf10 (36.3 s → 3.4 s). The per-QUERY ADC table
     // (m × ksub rows, queries-sized cross) is legitimate, so this pins
@@ -80,7 +80,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("q96 budgeted IVF-portable assignment is the compiled kernel") {
     // Same round-13 rule as the Lloyd/PQ family: the budgeted path's
-    // CORPUS-side cell assignment must be the NearestCentroidCosExpr
+    // CORPUS-side cell assignment must be the graft_nearest_centroid_cos
     // narrow map, never the broadcast-cross + row_number window (which
     // only the explicit maxCentroids=0 opt-in keeps). The QUERY-side
     // probing legitimately keeps a queries×centroids broadcast cross

@@ -280,6 +280,34 @@ class SourceSinkSpec extends SparkSpec {
     assert(Memoize.planFingerprint(wide(1)) != Memoize.planFingerprint(wide(2)))
     assert(Memoize.memoize(wide(1), dir).select("c28").as[Int].head() == 1)
     assert(Memoize.memoize(wide(2), dir).select("c28").as[Int].head() == 2)
+    // each expression also cuts its own argument list at that limit
+    def wideArray(v: Int) = spark.range(1).select(array((0 until 30).map(i =>
+      if (i == 27) lit(v) else lit(i)): _*).as("a"))
+    assert(Memoize.planFingerprint(wideArray(27)) != Memoize.planFingerprint(wideArray(99)))
+    assert(spark.conf.get("spark.sql.debug.maxToStringFields") == "25")
+  }
+
+  test("memoize fingerprint renders kernel constants by content") {
+    // Array-typed kernel constants (centroids, codebooks) used to print as
+    // a JVM identity (`[[D@64e6ef25`): equal pipelines fingerprinted apart
+    // in every session and a later session could never be served.
+    import graft.expressions.GraftFunctions
+    val rnd = new scala.util.Random(3)
+    val cents = Array.fill(10)(Array.fill(8)(rnd.nextGaussian()))
+    val books = Array.fill(2)(Array.fill(4)(Array.fill(3)(rnd.nextInt(100).toLong)))
+    val cids = Array.fill(2)(Array.tabulate(4)(_.toLong))
+    val vecs = Seq((Seq.fill(8)(0.5), 0L, Seq(1L, 2L, 3L))).toDF("v", "sub", "sv")
+    def fp(c: Array[Array[Double]], b: Array[Array[Array[Long]]]) =
+      Memoize.planFingerprint(vecs.select(
+        GraftFunctions.nearestCentroids(col("v"), c, 2).as("nc"),
+        GraftFunctions.nearestCodeL2(col("sv"), col("sub"), b, cids).as("code")))
+    def copyOf(c: Array[Array[Double]]) = c.map(_.clone)
+    def booksCopy = books.map(_.map(_.clone))
+    assert(fp(cents, books) == fp(copyOf(cents), booksCopy))
+    val changedCent = copyOf(cents); changedCent(7)(5) += 1e-9
+    assert(fp(cents, books) != fp(changedCent, books))
+    val changedBook = booksCopy; changedBook(1)(3)(2) += 1
+    assert(fp(cents, books) != fp(cents, changedBook))
   }
 
   test("pushPartitionReload overwrites only the loaded partitions, idempotently") {
