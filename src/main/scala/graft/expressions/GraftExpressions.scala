@@ -9,6 +9,7 @@ import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftshim.Shim
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Compiled kernels for the LLM-operator hot paths.
@@ -324,8 +325,82 @@ object Kernels {
     * except at the edges: this trims every character up to U+0020, where
     * SQL `trim` strips spaces only, so a leading tab or newline gives that
     * formulation an empty first token.
+    *
+    * Works on the UTF-8 bytes, with no decode, regex or re-encode: it trims
+    * bytes <= 0x20 from both ends (`String.trim`), splits on runs of
+    * `[ \t\n\x0B\f\r]` (java.util.regex's default `\s`) and keeps the
+    * first-seen order of the distinct shingles. In valid UTF-8 every byte
+    * <= 0x7F is its own character, so this is value-identical to the
+    * `String` formulation. Each shingle is copied into its own array,
+    * never a slice of `text`, whose buffer the columnar reader reuses.
+    * Malformed UTF-8 (and n <= 0) takes the `String` path, which decodes
+    * bad bytes to U+FFFD.
     */
   def shingles(text: UTF8String, n: Int): ArrayData = {
+    if (n <= 0 || !text.isValid) return shinglesDecoded(text, n)
+    val base = text.getBaseObject
+    val off = text.getBaseOffset
+    val len = text.numBytes()
+    def at(i: Int): Byte = Platform.getByte(base, off + i)
+    def isSep(b: Byte): Boolean = b == ' ' || (b >= '\t' && b <= '\r')
+    var from = 0
+    var to = len
+    while (from < to && (at(from) & 0xff) <= 0x20) from += 1
+    while (to > from && (at(to - 1) & 0xff) <= 0x20) to -= 1
+    // token t spans bytes [starts(t), ends(t))
+    var starts = new Array[Int](16)
+    var ends = new Array[Int](16)
+    var nt = 0
+    var i = from
+    while (i < to) {
+      val s = i
+      while (i < to && !isSep(at(i))) i += 1
+      if (nt == starts.length) {
+        starts = java.util.Arrays.copyOf(starts, nt * 2)
+        ends = java.util.Arrays.copyOf(ends, nt * 2)
+      }
+      starts(nt) = s; ends(nt) = i; nt += 1
+      while (i < to && isSep(at(i))) i += 1
+    }
+    val out = new java.util.LinkedHashSet[UTF8String]()
+    if (nt == 0) out.add(UTF8String.EMPTY_UTF8)
+    else {
+      val w = math.min(n, nt)
+      var t = 0
+      while (t + w <= nt) {
+        val last = t + w - 1
+        // When every gap in the window is one space, the shingle is one
+        // copy of the input's bytes; otherwise its tokens are joined.
+        var size = w - 1
+        var spaced = true
+        var g = t
+        while (g <= last) {
+          size += ends(g) - starts(g)
+          if (g < last) spaced &&= starts(g + 1) - ends(g) == 1 && at(ends(g)) == ' '
+          g += 1
+        }
+        val sh = new Array[Byte](size)
+        if (spaced) Platform.copyMemory(base, off + starts(t), sh, Platform.BYTE_ARRAY_OFFSET, size)
+        else {
+          var p = 0
+          g = t
+          while (g <= last) {
+            if (g > t) { sh(p) = ' '; p += 1 }
+            val tl = ends(g) - starts(g)
+            Platform.copyMemory(base, off + starts(g), sh, Platform.BYTE_ARRAY_OFFSET + p, tl)
+            p += tl
+            g += 1
+          }
+        }
+        out.add(UTF8String.fromBytes(sh))
+        t += 1
+      }
+    }
+    new GenericArrayData(out.toArray.asInstanceOf[Array[Any]])
+  }
+
+  /** The `String` formulation of [[shingles]]: decode, trim, regex split. */
+  private def shinglesDecoded(text: UTF8String, n: Int): ArrayData = {
     val tokens = text.toString.trim.split("\\s+")
     val out = new java.util.LinkedHashSet[UTF8String]()
     if (tokens.length < n) {

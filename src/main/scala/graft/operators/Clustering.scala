@@ -74,31 +74,41 @@ object Clustering {
     out
   }
 
+  /** Both orientations of every edge as distinct (src, dst) rows, from ONE
+    * pass over `edges`: each pair explodes into (a, b) and (b, a). A
+    * two-branch `union` shares the upstream pair pipeline's exchanges
+    * (ReusedExchange), but every stage after them runs once per branch; for
+    * a minhash pair relation that is the candidate read, both shingle
+    * rejoins and the Jaccard verify, twice.
+    *
+    * Null-endpoint edges are dropped HERE, before the budget count and
+    * before either path's seed, so the one-box path and the distributed
+    * loop see the SAME edge relation (round 15 shipped the filter on the
+    * fast path's collect alone, so the two paths — selected silently by
+    * data size — diverged on null-id edges, and nulls inflated the budget
+    * count). A null endpoint carries no linkage: callers treat absent
+    * nodes as singleton components either way.
+    */
+  private[graft] def symmetricEdges(edges: DataFrame, aCol: String,
+                                    bCol: String): DataFrame =
+    edges.select(explode(array(
+        struct(col(aCol).as("src"), col(bCol).as("dst")),
+        struct(col(bCol).as("src"), col(aCol).as("dst")))).as("e"))
+      .select(col("e.src").as("src"), col("e.dst").as("dst"))
+      .filter(col("src").isNotNull && col("dst").isNotNull)
+      .distinct()
+
   def connectedComponents(edges: DataFrame, aCol: String = "id_a",
                           bCol: String = "id_b", maxIter: Int = 20,
                           maxLocalEdges: Int = MaxLocalEdges): DataFrame = {
     // Symmetrize once and materialize: this relation is needed by EITHER
     // path below (the loop re-reads it every round; the one-box path
-    // collects it), the union's two branches share the upstream pair
-    // pipeline's exchanges (ReusedExchange — the pipeline executes once),
-    // and every fast-vs-loop decision afterwards reads these BLOCKS, never
-    // the pipeline. Earlier round-15 formulations that probed the lazy
-    // edge relation directly paid a whole extra pipeline execution at
-    // scale (q154 at sf10: 97 s committed → 140 s measured) — the probe
+    // collects it), and every fast-vs-loop decision afterwards reads these
+    // BLOCKS, never the pipeline. Earlier round-15 formulations that probed
+    // the lazy edge relation directly paid a whole extra pipeline execution
+    // at scale (q154 at sf10: 97 s committed → 140 s measured) — the probe
     // must be block-backed.
-    //
-    // Null-endpoint edges are dropped HERE, before the budget count and
-    // before either path's seed, so the one-box path and the distributed
-    // loop see the SAME edge relation (round 15 shipped the filter on the
-    // fast path's collect alone, so the two paths — selected silently by
-    // data size — diverged on null-id edges, and nulls inflated the budget
-    // count). A null endpoint carries no linkage: callers treat absent
-    // nodes as singleton components either way.
-    val e = edges.select(col(aCol).as("src"), col(bCol).as("dst"))
-      .union(edges.select(col(bCol).as("src"), col(aCol).as("dst")))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .distinct()
-      .localCheckpoint()
+    val e = symmetricEdges(edges, aCol, bCol).localCheckpoint()
     // ONE-BOX FAST PATH: the edge relation of a near-dup pipeline is
     // pair-bounded (docs that HAVE a duplicate), orders of magnitude
     // smaller than the corpus — at bench scale it is dozens of rows, and

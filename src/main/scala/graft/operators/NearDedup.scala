@@ -144,12 +144,26 @@ object NearDedup {
     // array_intersect/array_union formulation — see Kernels.jaccardSim):
     // per candidate pair this is the whole verify arithmetic, so it must
     // not allocate two result arrays and three hash sets interpreted.
-    cand.join(shA, Seq("id_a")).join(shB, Seq("id_b"))
-      .withColumn("jaccard",
-        graft.expressions.GraftFunctions.jaccardSim(col("sh_a"), col("sh_b")))
+    verified(cand.join(shA, Seq("id_a")).join(shB, Seq("id_b")),
+      col("sh_a"), col("sh_b"), threshold)
+  }
+
+  /** (id_a, id_b, jaccard) rows of `pairs` whose shingle-set Jaccard
+    * reaches `threshold`, rounded to 4 places — the verify of both minhash
+    * pipelines. The score is computed ONCE per pair: as a projected column
+    * the optimizer inlines it into the threshold filter and pushes that into
+    * the rejoin as a join condition, so the kernel ran for every candidate
+    * there and again for every survivor in the output projection. A one-element
+    * explode yields it as a generated attribute, which no rule inlines,
+    * and a non-attribute generator input infers no filter either. Filters
+    * on the ids alone (q61's recall gate) still push below it.
+    */
+  private def verified(pairs: DataFrame, shA: Column, shB: Column,
+                       threshold: Double): DataFrame =
+    pairs.select(col("id_a"), col("id_b"),
+        explode(array(graft.expressions.GraftFunctions.jaccardSim(shA, shB))).as("jaccard"))
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
-  }
 
   /** Keep one representative per near-dup cluster: drop any doc that is the
     * larger id of a qualifying pair (greedy min-id survivor — the standard
@@ -271,13 +285,11 @@ object NearDedup {
       .select("id_a", "id_b").distinct()
     val shA = sh.select(col("id").as("id_a"), col("sh").as("sh_a"))
     val shB = sh.select(col("id").as("id_b"), col("sh").as("sh_b"))
-    // same compiled verify kernel as the native path — value parity with
-    // the list_intersect/list_union oracle replay (identical int division)
-    cand.join(shA, Seq("id_a")).join(shB, Seq("id_b"))
-      .withColumn("jaccard",
-        graft.expressions.GraftFunctions.jaccardSim(col("sh_a"), col("sh_b")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
+    // same compiled verify kernel as the native path, once per pair (see
+    // [[verified]]) — value parity with the list_intersect/list_union
+    // oracle replay (identical int division)
+    verified(cand.join(shA, Seq("id_a")).join(shB, Seq("id_b")),
+      col("sh_a"), col("sh_b"), threshold)
   }
 
   /** SimHash pairs on the same portable md5 hash basis (see
@@ -457,7 +469,12 @@ object NearDedup {
       .select(col("id"),
         graft.expressions.GraftFunctions.shingles(col("__t"), shingleSize).as("sh"))
       .withColumn("n", size(col("sh")))
-    val allTok = sh.select(col("id"), col("n"), explode(col("sh")).as("s"))
+    // The generator input is not a bare attribute, so Spark infers no
+    // `size(sh) > 0 AND isnotnull(sh)` filter from it: that filter is pushed
+    // below the shingle projection and shingles every row twice more
+    // (explode of a null or empty array emits nothing either way).
+    val allTok = sh.select(col("id"), col("n"),
+      explode(when(col("n") > 0, col("sh"))).as("s"))
     if (maxDf <= 0) allTok else {
       val dfCounts = allTok.groupBy(col("s")).agg(count(lit(1)).as("df"))
         .observe(s"jaccard_dropped_shingles_${dropSeq.incrementAndGet()}",

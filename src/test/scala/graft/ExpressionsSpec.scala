@@ -772,6 +772,101 @@ class ExpressionsSpec extends SparkSpec {
     }
   }
 
+  test("byte-level shingles kernel matches the String/regex formulation byte for byte") {
+    import org.apache.spark.unsafe.types.UTF8String
+    // The kernel body before it moved to bytes: decode, trim, regex split,
+    // StringBuilder join, re-encode.
+    def reference(text: UTF8String, n: Int): Seq[Seq[Byte]] = {
+      val tokens = text.toString.trim.split("\\s+")
+      val out = new java.util.LinkedHashSet[UTF8String]()
+      if (tokens.length < n) {
+        out.add(UTF8String.fromString(tokens.mkString(" ")))
+      } else {
+        var i = 0
+        val sb = new java.lang.StringBuilder
+        while (i + n <= tokens.length) {
+          sb.setLength(0)
+          var j = 0
+          while (j < n) {
+            if (j > 0) sb.append(' ')
+            sb.append(tokens(i + j))
+            j += 1
+          }
+          out.add(UTF8String.fromString(sb.toString))
+          i += 1
+        }
+      }
+      out.toArray(new Array[UTF8String](0)).toSeq.map(_.getBytes.toSeq)
+    }
+    def utf8(s: String): Array[Byte] = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    def bytes(xs: Int*): Array[Byte] = xs.map(_.toByte).toArray
+    val malformed = Seq(
+      bytes('a', ' ', 0xFF, 'b', ' ', 'c', ' ', 'd'),            // invalid lead byte
+      bytes('a', 'b', ' ', 0xE2, 0x82, ' ', 'c', ' ', 'd'),      // truncated sequence
+      bytes(0xC0, 0xAF, ' ', 'x', ' ', 'y', ' ', 'z'),           // overlong '/'
+      bytes('s', ' ', 0xED, 0xA0, 0x80, ' ', 't', ' ', 'u'),     // encoded surrogate
+      bytes(0x80, ' ', 'p', ' ', 'q', ' ', 0xF4, 0x90, 0x80, 0x80), // stray continuation, > U+10FFFF
+      bytes('x', ' ', 'y', '\t', 'z', ' ', 0xC3))                // cut off at the end
+    malformed.foreach(b => assert(!UTF8String.fromBytes(b).isValid, b.toSeq))
+    val rnd = new scala.util.Random(23)
+    val seps = Vector(" ", "  ", "\t", "\r\n", "\u000B", "\u000C", " \t ")
+    val words = Vector("the", "cat", "😀", "café", "x\u0001y", "a" * 40, "𝄞", "naïve")
+    val texts: Seq[Array[Byte]] = Seq(
+      null, utf8(""), utf8("  \t\n\r\u000B\u000C "), utf8("one"), utf8("two words"),
+      utf8("a b c d"),
+      // runs of separators
+      utf8("a\t\tb\r\n\r\nc\u000B\u000Bd\u000C\u000Ce\r\tf \n g"),
+      // control bytes that are not separators: inside tokens they stay,
+      // at the ends they are trimmed
+      utf8("\u0001\u0002a\u0003b c\u0008d e\u000Ef g\u001Fh\u001E"),
+      utf8("x\u001Cy z\u001Dw v\u0007u \u0000"),
+      // characters outside Java's default \s: NBSP, U+2028, NEL, U+3000
+      utf8("a\u00A0b c\u2028d e\u0085f \u3000g h"),
+      utf8("\u00A0lead mid trail\u00A0"),
+      utf8("emoji 😀 𝄞 text 😀 emoji 𝄞"), utf8("café résumé naïve café résumé naïve"),
+      // doubled spaces: the shingle is joined, not a slice of the input
+      utf8("a  b c   d e  f g"), utf8("the cat  the cat the  cat the cat"),
+      utf8("a b a b a b a b")) ++ malformed ++
+      Seq.fill(12)(utf8(Seq.fill(1 + rnd.nextInt(40))(
+        words(rnd.nextInt(words.size)) + seps(rnd.nextInt(seps.size))).mkString))
+    val dir = tmp("shingles_bytes")
+    texts.zipWithIndex.map { case (b, i) => (i.toLong, Option(b)) }.toDF("id", "b")
+      .select(col("id"), col("b").cast("string").as("t"))
+      .write.mode("overwrite").parquet(dir)
+
+    inBothCodegenModes { mode =>
+      val df = spark.read.parquet(dir)
+      // the malformed bytes reach the kernel as written
+      val stored = df.select(col("id"), col("t").cast("binary")).collect()
+        .map(r => r.getLong(0) -> Option(r.getAs[Array[Byte]](1)).map(_.toSeq)).toMap
+      assert(stored == texts.indices.map(i => i.toLong -> Option(texts(i)).map(_.toSeq)).toMap)
+      for (n <- Seq(1, 2, 3, 5)) {
+        val got = df.select(col("id"),
+            GraftFunctions.shingles(col("t"), n).cast("array<binary>")).collect()
+          .map(r => r.getLong(0) -> Option(r.getSeq[Array[Byte]](1)).map(_.map(_.toSeq))).toMap
+        val bad = texts.indices.flatMap { i =>
+          val want = Option(texts(i)).map(b => reference(UTF8String.fromBytes(b), n))
+          def hex(sh: Option[Seq[Seq[Byte]]]) =
+            sh.map(_.map(_.map(b => f"${b & 0xff}%02x").mkString).mkString("[", " ", "]"))
+          if (got(i.toLong) == want) None
+          else Some(s"n=$n id=$i: got ${hex(got(i.toLong))}, want ${hex(want)}")
+        }
+        assert(bad.isEmpty, s"$mode:\n${bad.take(3).mkString("\n")}")
+      }
+      val plan = df.select(GraftFunctions.shingles(col("t"), 3)).queryExecution.executedPlan.toString
+      assert(plan.contains("*(") == (mode == "CODEGEN_ONLY"), s"$mode:\n$plan")
+    }
+
+    // Shingles own their bytes: overwriting the input buffer (as the
+    // columnar reader does between batches) leaves them unchanged.
+    val buf = utf8("alpha beta  gamma delta beta alpha")
+    val sh = graft.expressions.Kernels.shingles(UTF8String.fromBytes(buf, 0, buf.length), 2)
+    val before = sh.toArray[UTF8String](org.apache.spark.sql.types.StringType).map(_.toString).toSeq
+    java.util.Arrays.fill(buf, 'z'.toByte)
+    assert(sh.toArray[UTF8String](org.apache.spark.sql.types.StringType).map(_.toString).toSeq == before)
+    assert(before == Seq("alpha beta", "beta gamma", "gamma delta", "delta beta", "beta alpha"))
+  }
+
   test("SQL surface via SparkSessionExtensions (graft_* functions)") {
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()

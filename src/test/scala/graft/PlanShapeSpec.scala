@@ -16,6 +16,26 @@ class PlanShapeSpec extends SparkSpec {
     df.queryExecution.executedPlan.toString
   }
 
+  /** The `== Final Plan ==` section of the executed AQE plan after a
+    * `collect()`: the re-planned joins and the `*(n)` whole-stage-codegen
+    * markers, without the `== Initial Plan ==` copy the full string repeats
+    * (which would count every operator twice).
+    */
+  private def finalPlanOf(df: org.apache.spark.sql.DataFrame): String = {
+    df.collect()
+    val p = df.queryExecution.executedPlan.toString
+    assert(p.contains("isFinalPlan=true"), s"AQE plan not final:\n$p")
+    val from = p.indexOf("== Final Plan ==")
+    val to = p.indexOf("== Initial Plan ==")
+    p.substring(from, if (to > from) to else p.length)
+  }
+
+  private def finalPlanOf(name: String): String =
+    finalPlanOf(SparkEntry.queries(name)(spark, sf))
+
+  private def occurrences(p: String, s: String): Int =
+    java.util.regex.Pattern.quote(s).r.findAllIn(p).size
+
   /** Hash exchanges EXCLUDING Tuning.spread's degenerate-input fan-out
     * (REPARTITION_BY_NUM of narrow pre-kernel rows — a no-op on any
     * production-scale scan, so it is not part of the 100 TB plan shape
@@ -98,6 +118,44 @@ class PlanShapeSpec extends SparkSpec {
     // the hot-shingle df guard: boilerplate shingles are anti-joined away
     // (broadcast) BEFORE the quadratic self-join can see them
     assert(p.contains("LeftAnti"), s"no df-cap anti-join in:\n$p")
+  }
+
+  test("q46 exact jaccard shingles each row once per scan branch") {
+    // `explode(sh)` on a bare attribute made Spark infer
+    // `size(sh) > 0 AND isnotnull(sh)` and push it below the shingle
+    // projection: two more kernel calls per row in that Filter.
+    val p = SparkEntry.queries("q46_ngram_jaccard")(spark, sf)
+      .queryExecution.optimizedPlan.toString
+    val scans = "(?m)^.*Relation [^\n]*parquet".r.findAllIn(p).size
+    val kernels = occurrences(p, "graft_shingles(")
+    assert(scans > 0, s"no scan in:\n$p")
+    assert(kernels == scans, s"$kernels shingle calls over $scans scans in:\n$p")
+  }
+
+  test("q47/q93 minhash verify: one jaccard kernel per pair, whole-stage compiled") {
+    // Projected as a column, the score was inlined into the threshold
+    // filter, pushed into the rejoin as a join condition, and computed
+    // again in the output projection.
+    for (q <- Seq("q47_minhash_pairs", "q93_minhash_portable")) {
+      val p = finalPlanOf(q)
+      val lines = p.linesIterator.filter(_.contains("graft_jaccard_sim(")).toSeq
+      assert(occurrences(p, "graft_jaccard_sim(") == 1, s"$q verify kernel count in:\n$p")
+      assert(lines.forall(l => "\\*\\(\\d+\\) ".r.findFirstIn(l).isDefined),
+        s"$q verify kernel outside whole-stage codegen in:\n$p")
+    }
+  }
+
+  test("connected components symmetrize minhash edges in one pass, verifying once") {
+    // A two-branch union shared the pair pipeline's exchanges, but the
+    // stage after them (candidate read, both shingle rejoins, the verify
+    // kernel) ran once per branch.
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    val edges = operators.Clustering.symmetricEdges(
+      operators.NearDedup.minhashPairsPortable(docs, "doc_id", "text"), "id_a", "id_b")
+    val p = finalPlanOf(edges)
+    assert(!p.contains("Union"), s"union in the edge build:\n$p")
+    assert(occurrences(p, "graft_jaccard_sim(") == 1, s"verify kernel count in:\n$p")
+    assert(edges.count() > 0, "no edges at sf0.001")
   }
 
   test("q14 top-k plans TakeOrderedAndProject, not a global sort") {
