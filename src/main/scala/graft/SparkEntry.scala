@@ -1353,11 +1353,11 @@ object SparkEntry {
         "vec_id", "embedding", k = 5, rescoreFactor = 4)
     }),
     "q93_minhash_portable" -> ((s, d) =>
-      // the FULL LSH pipeline on a portable md5 hash basis: hashing,
+      // the FULL LSH pipeline on its portable md5 hash basis: hashing,
       // seeded permutations, banding, candidate join, and jaccard verify
-      // are all replayed bit-for-bit by the DuckDB oracle (the native
-      // xxhash64 variant q47 stays the production path)
-      NearDedup.minhashPairsPortable(t(s, d, "documents"), "doc_id", "text")),
+      // are all replayed bit-for-bit by the DuckDB oracle. The same
+      // pipeline as q47, kept under both names for the bench history.
+      NearDedup.minhashPairs(t(s, d, "documents"), "doc_id", "text")),
     "q94_simhash_portable" -> ((s, d) =>
       // portable simhash: 60-bit majority-vote signatures over md5 token
       // hashes, chunk bucketing + Hamming verify all replayed by the oracle
@@ -2228,16 +2228,12 @@ object SparkEntry {
         concat_ws("|", col("p_brand"), element_at(split(col("p_name"), " "), 1)),
         maxDist = 2, maxBlockSize = Int.MaxValue)
     }),
-    "q154_minhash_dedup_portable" -> ((s, d) => {
-      // the FULL near-dedup pipeline oracle-checked end to end: portable
-      // minhash pairs (q93's relation) -> pointer-doubling connected
-      // components -> min-id representative kept. q48's native-xxhash64
-      // twin: the last rows-only pipeline now has a bit-exact sibling.
-      val docs = t(s, d, "documents")
-      graft.operators.Clustering.dedupByComponents(docs, "doc_id",
-        NearDedup.minhashPairsPortable(docs, "doc_id", "text"))
-        .filterColumns(keep = Seq("doc_id", "lang", "source"))
-    }),
+    "q154_minhash_dedup_portable" -> ((s, d) =>
+      // the FULL near-dedup pipeline oracle-checked end to end: minhash
+      // pairs (q93's relation) -> pointer-doubling connected components ->
+      // min-id representative kept (q48 keeps the greedy pairwise rule)
+      NearDedup.minhashDedupCC(t(s, d, "documents"), "doc_id", "text")
+        .filterColumns(keep = Seq("doc_id", "lang", "source"))),
     "q155_quality_buckets" -> ((s, d) =>
       // CCNet head/middle/tail assignment (Wenzek et al. 2020 §4.3):
       // per-source value terciles via exact integer rank arithmetic —
@@ -2917,8 +2913,6 @@ object SparkEntry {
     * no-oracle query has a twin, every twin has an oracle.
     */
   val rowsOnlyTwins: Map[String, String] = Map(
-    "q47_minhash_pairs" -> "q93_minhash_portable",
-    "q48_minhash_dedup" -> "q154_minhash_dedup_portable",
     "q49_simhash_pairs" -> "q94_simhash_portable",
     "q51_lsh_topk" -> "q95_lsh_portable",
     "q52_ivf_topk" -> "q96_ivf_portable",
@@ -3423,6 +3417,8 @@ FROM e JOIN c USING (g) GROUP BY doc_id"""),
         s"CAST(min($c) AS VARCHAR) AS min_str, CAST(max($c) AS VARCHAR) AS max_str FROM orders")
       .mkString(" UNION ALL "),
     "q92_quantized_topk" -> quantizedTopkOracleSql,
+    "q47_minhash_pairs" -> minhashPortableOracleSql,
+    "q48_minhash_dedup" -> minhashDedupOracleSql,
     "q93_minhash_portable" -> minhashPortableOracleSql,
     "q94_simhash_portable" ->
       s"""WITH tok AS (SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\\s+')) AS t FROM documents),
@@ -4710,16 +4706,15 @@ WHERE rank <= 5"""
       s"SELECT id_a, id_b, round($cos, 6) AS cosine FROM pairs WHERE $cos >= $threshold"
   }
 
-  /** DuckDB replay of the portable minhash pipeline — the permutation
-    * constants are generated by the SAME portablePerms call that built the
-    * Spark plan, so both engines compute identical signatures/band keys.
-    */
-  /** Shared CTE chain of the portable-minhash DuckDB replay (hashing,
+  /** Shared CTE chain of the minhash DuckDB replay (hashing,
     * permutations, banding, hot-bucket exclusion, candidate join,
-    * jaccard) — the ONLY definition; q93 selects the pair relation from
-    * it, q154 closes the pairs into components, and q166 filters the
-    * cross fresh/prior pairs, so the oracles cannot drift apart. The
-    * keptbk CTE replays minhashPairsPortable's whole-bucket window-count
+    * jaccard) — the ONLY definition; q47/q93 select the pair relation from
+    * it, q48 drops each pair's larger id, q154 closes the pairs into
+    * components, and q166 filters the cross fresh/prior pairs, so the
+    * oracles cannot drift apart. The permutation constants come from the
+    * SAME portablePerms call that builds the Spark plan, so both engines
+    * compute identical signatures and band keys. The
+    * keptbk CTE replays minhashPairs' whole-bucket window-count
     * exclusion with the cap interpolated from the SAME constant the Scala
     * defaults use (NearDedup.DefaultMaxBucketSize — round-13 advice: a
     * literal here silently diverged the moment a caller passed a
@@ -4758,6 +4753,15 @@ j AS (SELECT id_a, id_b, len(list_intersect(sa.s, sb.s)) AS i, len(sa.s) AS na, 
     s"""WITH $minhashPortableCtes
 SELECT id_a, id_b, round(CAST(i AS DOUBLE) / (na + nb - i), 4) AS jaccard
 FROM j WHERE CAST(i AS DOUBLE) / (na + nb - i) >= 0.7"""
+
+  /** q48: the greedy pairwise dedup over the q93 pair relation — every
+    * document that is the larger id of a qualifying pair drops.
+    */
+  private lazy val minhashDedupOracleSql: String =
+    s"""WITH $minhashPortableCtes,
+pp AS (SELECT id_a, id_b FROM j WHERE CAST(i AS DOUBLE) / (na + nb - i) >= 0.7)
+SELECT doc_id, lang, source FROM documents
+WHERE doc_id NOT IN (SELECT id_b FROM pp)"""
 
   /** q154: the q93 pair relation closed into components (recursive min-label
     * propagation, the q74/q75 ground-truth formulation) with the min-id

@@ -287,20 +287,16 @@ object Kernels {
     h >>> 4
   }
 
-  /** MinHash signature: min over shingles of pmod(pmod(hash(s),p)*a+b, p)
-    * per permutation. The shingle hash is xxh64 by default (parity with
-    * the transform/array_min formulation) and [[md5Prefix60]] when
-    * `portable` (parity with the md5/conv/min SQL an external engine
-    * replays).
+  /** MinHash signature: min over shingles of pmod(pmod(h(s),p)*a+b, p) per
+    * permutation, where h is [[md5Prefix60]] — parity with the md5/conv/min
+    * SQL an external engine replays.
     */
-  def minhashSig(shingles: ArrayData, a: Array[Long], b: Array[Long], p: Long,
-                 portable: Boolean = false): ArrayData = {
+  def minhashSig(shingles: ArrayData, a: Array[Long], b: Array[Long], p: Long): ArrayData = {
     val n = shingles.numElements()
     val hashes = new Array[Long](n)
     var i = 0
     while (i < n) {
-      val s = shingles.getUTF8String(i)
-      hashes(i) = pmod(if (portable) md5Prefix60(s) else xxh64(s), p)
+      hashes(i) = pmod(md5Prefix60(shingles.getUTF8String(i)), p)
       i += 1
     }
     val sig = new Array[Long](a.length)
@@ -1190,11 +1186,7 @@ object KernelCall {
 }
 
 /** The minhash permutation constants, the one definition the kernel and the
-  * DuckDB oracle SQL (via NearDedup.portablePerms) share. Two bases:
-  *  - native: xxh64 shingle hashes, each permutation's a_i and b_i drawn in
-  *    turn from the seeded generator;
-  *  - portable: the first 60 bits of md5 (any SQL engine can replay it),
-  *    all a_i drawn before all b_i.
+  * DuckDB oracle SQL (via NearDedup.portablePerms) share.
   */
 object MinHash {
   // Canonical MinHash prime: 2^31-1. An earlier HOF formulation used 2^61-1,
@@ -1203,20 +1195,13 @@ object MinHash {
   // signature caches (Memoize/parquet) from before the switch must be rebuilt.
   val P: Long = 2147483647L
 
-  /** The (a, b) permutation constants, a_i in [1, P-1] and b_i in [0, P-1],
-    * in the draw order of the basis.
+  /** The (a, b) permutation constants, a_i in [1, P-1] and b_i in [0, P-1]:
+    * all a_i drawn from the seeded generator before all b_i.
     */
-  def perms(numPerms: Int, seed: Long, portable: Boolean): (Array[Long], Array[Long]) = {
+  def perms(numPerms: Int, seed: Long): (Array[Long], Array[Long]) = {
     val rnd = new scala.util.Random(seed)
-    def drawA(): Long = math.abs(rnd.nextLong()) % (P - 1) + 1
-    def drawB(): Long = math.abs(rnd.nextLong()) % P
-    if (portable) {
-      val a = Array.fill(numPerms)(drawA())
-      (a, Array.fill(numPerms)(drawB()))
-    } else {
-      val ab = Array.fill(numPerms)((drawA(), drawB()))
-      (ab.map(_._1), ab.map(_._2))
-    }
+    val a = Array.fill(numPerms)(math.abs(rnd.nextLong()) % (P - 1) + 1)
+    (a, Array.fill(numPerms)(math.abs(rnd.nextLong()) % P))
   }
 }
 
@@ -1277,14 +1262,10 @@ object GraftFunctions {
     kernel("unicodeNormalize", StringType, e(c), const(form))
   }
 
-  /** MinHash signature of a shingle array on the native or the portable
-    * basis (see [[MinHash]]).
-    */
-  def minhashSignature(c: Column, numPerms: Int, seed: Long = 42L,
-                       portable: Boolean = false): Column = {
-    val (a, b) = MinHash.perms(numPerms, seed, portable)
-    kernel("minhashSig", longs, e(c), const(a), const(b),
-      Literal(MinHash.P), Literal(portable))
+  /** MinHash signature of a shingle array (see [[MinHash]]). */
+  def minhashSignature(c: Column, numPerms: Int, seed: Long = 42L): Column = {
+    val (a, b) = MinHash.perms(numPerms, seed)
+    kernel("minhashSig", longs, e(c), const(a), const(b), Literal(MinHash.P))
   }
   def cosine(a: Column, b: Column): Column = kernel("cosine", DoubleType, e(a), e(b))
   def hyperplaneSignature(c: Column, dim: Int, bits: Int, seed: Long = 7L): Column = {

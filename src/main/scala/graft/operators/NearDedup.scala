@@ -9,8 +9,8 @@ import graft.functions.TextFunctions
 /** Near-duplicate detection for training-data pipelines: exact, MinHash+LSH,
   * SimHash, and n-gram Jaccard. All stages are declarative DataFrame plans:
   *
-  *  - signatures are computed with higher-order functions over a single
-  *    shingle array (one narrow map, codegen'd, no UDFs);
+  *  - a minhash signature is one compiled kernel call per row over the
+  *    shingle array (Kernels.minhashSig, one narrow map, no UDFs);
   *  - candidate generation is `explode(bands) -> groupBy(band) -> self-join
   *    within bucket`, the standard LSH shape: the shuffle is on (band-index,
   *    band-hash), whose cardinality scales with document count, never with
@@ -31,10 +31,9 @@ import graft.functions.TextFunctions
 object NearDedup {
 
   /** Default cap on LSH bucket size before the in-bucket self-join —
-    * shared by the native aggregate+anti-join caps, the portable
-    * window-count twins, AND the DuckDB oracle CTEs (SparkEntry
-    * interpolates this constant into the keptbk SQL), so the two sides
-    * cannot drift.
+    * shared by the aggregate+anti-join caps, the window-count caps, AND
+    * the DuckDB oracle CTEs (SparkEntry interpolates this constant into
+    * the keptbk SQL), so the two sides cannot drift.
     *
     * CONTRACT: buckets over the cap are dropped WHOLE — their members are
     * never compared, so a corpus dominated by >cap near-identical docs is
@@ -51,24 +50,6 @@ object NearDedup {
     */
   private val dropSeq = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** MinHash signature of the shingle set — the compiled kernel
-    * (graft.expressions.Kernels.minhashSig): numPerms permutations
-    * h_i(x) = (a_i·x + b_i) mod (2^31-1) over xxhash64 shingle hashes,
-    * computed in one compiled loop per row (the HOF formulation is
-    * interpreted by Catalyst and was the hot path at scale).
-    */
-  def minhashSignature(shingleCol: Column, numPerms: Int, seed: Long = 42L): Column =
-    graft.expressions.GraftFunctions.minhashSignature(shingleCol, numPerms, seed)
-
-  /** LSH band keys: the signature cut into `bands` rows of `rowsPerBand`,
-    * each band hashed to one long. Documents sharing any band key are
-    * candidates.
-    */
-  def bandKeys(signature: Column, bands: Int, rowsPerBand: Int): Column =
-    array(Seq.tabulate(bands) { b =>
-      xxhash64(concat_ws(",", slice(signature, b * rowsPerBand + 1, rowsPerBand)), lit(b))
-    }: _*)
-
   /** Candidate (id_a, id_b) pairs from an exploded (bucket, id) relation:
     * caps oversized buckets, self-joins within bucket, dedups pairs on the
     * two ids alone (narrow shuffle rows — ids only, no payloads).
@@ -78,7 +59,7 @@ object NearDedup {
     // Bucket sizes WITHOUT materializing bucket contents: a count-only
     // aggregate (map-side combined, no arrays) finds the oversized buckets,
     // which are then anti-joined away as a broadcast — the degenerate bucket
-    // (millions of boilerplate docs sharing one band value) never exists as
+    // (millions of flat images sharing one chunk value) never exists as
     // a collected array in any task. Oversized buckets are degenerate
     // content: joining them is quadratic and their pairs rarely add dups
     // smaller buckets don't surface. The dropped volume is surfaced via an
@@ -98,59 +79,80 @@ object NearDedup {
       .select("id_a", "id_b").dropDuplicates("id_a", "id_b")
   }
 
-  /** MinHash-LSH near-dup candidate pairs over (idCol, textCol):
-    * returns (id_a, id_b, jaccard) for candidate pairs whose exact shingle
-    * Jaccard >= threshold, id_a < id_b, deduped across bands.
+  /** MinHash-LSH near-dup pairs over (idCol, textCol): (id_a, id_b,
+    * jaccard) for candidate pairs whose exact shingle Jaccard reaches
+    * `threshold`, id_a < id_b, deduped across bands, jaccard rounded to 4
+    * places. `id` must be unique (see [[portableBands]]).
+    *
+    * Every hash is engine-portable, so an external SQL engine replays the
+    * WHOLE pipeline bit for bit (SparkEntry.minhashPortableCtes): shingles
+    * hash through the first 60 bits of md5, permutations come from
+    * [[portablePerms]], the signature is one compiled kernel call per row
+    * (Kernels.minhashSig) and each band key is md5 of the comma-joined
+    * signature slice.
+    *
+    * Degenerate band buckets (a boilerplate corpus collapsing thousands of
+    * docs onto one (band, bk) value) are dropped WHOLE when larger than
+    * `maxBucketSize`, before the self-join — the same deterministic
+    * whole-bucket rule as [[simhashPairsPortable]], so the oracle SQL
+    * replays it exactly; a bucket of n identical docs would otherwise cost
+    * n²/2 candidate rows. The cap is a count-over-(band, bk) window filter,
+    * not an aggregate + broadcast anti-join: the anti-join's bucket-size
+    * branch ran the signature kernel a second time, while the window rides
+    * the exchange the candidate self-join needs anyway and both join sides
+    * share ONE signature pass. The trade: a hot bucket's (id, band, bk)
+    * rows buffer in one window task, spill-bounded and linear. The dropped
+    * volume is observed on the window (`lsh_dropped_buckets_*`, readable
+    * from a QueryExecutionListener after the action, no extra pass): every
+    * row of a hot bucket adds 1 to `dropped_rows` and 1/n to
+    * `dropped_buckets`, rounded.
     */
   def minhashPairs(df: DataFrame, idCol: String, textCol: String,
                    shingleSize: Int = 3, numPerms: Int = 32,
                    bands: Int = 8, threshold: Double = 0.7,
+                   seed: Long = 42L,
                    maxBucketSize: Int = DefaultMaxBucketSize): DataFrame = {
-    val rowsPerBand = numPerms / bands
-    // Spread before the shingle+signature kernel (single-split scans
-    // serialize it on one core; no-op when the scan is already parallel).
-    val shingled = Tuning.spread(
-        df.select(col(idCol).as("id"), col(textCol).as("__t")), col("id"))
-      .select(col("id"),
-        graft.expressions.GraftFunctions.shingles(col("__t"), shingleSize).as("sh"))
-    // NOT materialized (round 16: a localCheckpoint of these banded keys
-    // measured a wash on clean same-host A/Bs — q47 mins 0.89 vs 0.87 s at
-    // sf0.1, 3.39 vs 3.68 s at sf1, both within run noise. The front end
-    // is one kernel projection, cheap to plan, and the candidate
-    // self-join's sides already share it at runtime through exchange
-    // reuse, so there is nothing for the eager materialization to repay).
-    val banded = shingled
-      .withColumn("sig", minhashSignature(col("sh"), numPerms))
-      .withColumn("band", explode(bandKeys(col("sig"), bands, rowsPerBand)))
-      .select("band", "id")
-    // id-only candidate pairs; shingle arrays re-joined after the pair dedup.
-    // Observed attribution for the verify stage (round 14 — at sf10 the
-    // exact verify over candidates is the natives' dominant term): how many
-    // candidate pairs entered the verify vs how many survived the threshold
-    // is readable from a QueryExecutionListener after any action, no extra
-    // pass. OPT-IN ([[graft.operators.Tuning.observeMetrics]], Probe sets
-    // it): a CollectMetrics node here is a pushdown barrier, and callers
-    // that filter the pair output selectively (the q61-class recall gates)
-    // rely on that filter reaching the band self-join — always-on, the
-    // observe made every candidate flow through the shingle verify first.
-    val cand0 = bucketedCandidates(banded, "band", maxBucketSize)
+    val sh = portableShingles(df, idCol, textCol, shingleSize)
+    // Not materialized: the banded keys are a few narrow operators over
+    // the scan, cheap to plan for both self-join sides, which share them at
+    // runtime through exchange reuse.
+    val banded = portableBands(sh, numPerms, bands, seed)
+    val wB = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("band"), col("bk"))
+    val hot = col("__n") > maxBucketSize
+    val kept = banded.withColumn("__n", count(lit(1)).over(wB))
+      .observe(s"lsh_dropped_buckets_${dropSeq.incrementAndGet()}",
+        round(sum(when(hot, lit(1.0) / col("__n")).otherwise(lit(0.0))))
+          .cast(LongType).as("dropped_buckets"),
+        sum(when(hot, lit(1L)).otherwise(lit(0L))).as("dropped_rows"))
+      .filter(!hot).drop("__n")
+    val aSide = kept.select(col("band"), col("bk"), col("id").as("id_a"))
+    val bSide = kept.select(col("band"), col("bk"), col("id").as("id_b"))
+    val cand0 = aSide.join(bSide, Seq("band", "bk"))
+      .filter(col("id_a") < col("id_b"))
+      .select("id_a", "id_b").distinct()
+    // Observed attribution for the verify stage (at sf10 the exact verify
+    // over candidates is the dominant term): how many candidate pairs
+    // entered the verify. OPT-IN ([[graft.operators.Tuning.observeMetrics]],
+    // Probe sets it): a CollectMetrics node here is a pushdown barrier, and
+    // callers that filter the pair output selectively (the q61-class recall
+    // gates) rely on that filter reaching the band self-join.
     val cand = if (graft.operators.Tuning.observeMetrics)
       cand0.observe(s"minhash_verify_${dropSeq.incrementAndGet()}",
         count(lit(1)).as("candidate_pairs"))
     else cand0
-    val shA = shingled.select(col("id").as("id_a"), col("sh").as("sh_a"))
-    val shB = shingled.select(col("id").as("id_b"), col("sh").as("sh_b"))
-    // Compiled one-pass set Jaccard (exact parity with the former
-    // array_intersect/array_union formulation — see Kernels.jaccardSim):
-    // per candidate pair this is the whole verify arithmetic, so it must
-    // not allocate two result arrays and three hash sets interpreted.
+    val shA = sh.select(col("id").as("id_a"), col("sh").as("sh_a"))
+    val shB = sh.select(col("id").as("id_b"), col("sh").as("sh_b"))
+    // value parity with the oracle's list_intersect/list_union replay
+    // (identical int division)
     verified(cand.join(shA, Seq("id_a")).join(shB, Seq("id_b")),
       col("sh_a"), col("sh_b"), threshold)
   }
 
   /** (id_a, id_b, jaccard) rows of `pairs` whose shingle-set Jaccard
-    * reaches `threshold`, rounded to 4 places — the verify of both minhash
-    * pipelines. The score is computed ONCE per pair: as a projected column
+    * reaches `threshold`, rounded to 4 places — the minhash verify, a
+    * compiled one-pass set Jaccard (Kernels.jaccardSim). The score is
+    * computed ONCE per pair: as a projected column
     * the optimizer inlines it into the threshold filter and pushes that into
     * the rejoin as a join condition, so the kernel ran for every candidate
     * there and again for every survivor in the output projection. A one-element
@@ -178,18 +180,18 @@ object NearDedup {
     df.join(losers, Seq(idCol), "left_anti")
   }
 
-  /** Portable-hash permutation constants: the SAME arrays parameterize the
+  /** Minhash permutation constants: the SAME arrays parameterize the
     * Spark plan's signature kernel and the external oracle SQL, so both
     * engines compute identical signatures. p = 2^31-1 keeps a·h+b inside
     * 2^62 (ANSI-safe).
     */
   def portablePerms(numPerms: Int, seed: Long = 42L): (Seq[Long], Seq[Long]) = {
-    val (as, bs) = MinHash.perms(numPerms, seed, portable = true)
+    val (as, bs) = MinHash.perms(numPerms, seed)
     (as.toSeq, bs.toSeq)
   }
 
-  /** (id, sh) shingle sets on the portable basis — the verify-stage relation
-    * of the portable minhash pipeline.
+  /** (id, sh) shingle sets — the verify-stage relation of the minhash
+    * pipelines.
     */
   private def portableShingles(df: DataFrame, idCol: String, textCol: String,
                                shingleSize: Int): DataFrame =
@@ -201,16 +203,16 @@ object NearDedup {
       .select(col("id"),
         graft.expressions.GraftFunctions.shingles(col("__t"), shingleSize).as("sh"))
 
-  /** (id, band, bk) banded minhash keys on the portable md5 basis — the
+  /** (id, band, bk) banded minhash keys on the md5 basis — the
     * candidate-stage relation. Together with [[portableShingles]] this IS
     * the persistable near-dup index of a corpus release: store both per
     * release and incremental batches join against them without rescanning
     * prior text.
     *
-    * One narrow map per row, no shuffle: the shared signature kernel
-    * (Kernels.minhashSig on its portable basis) computes the signature, the
-    * band key is md5 of the comma-joined signature slice, and the bands
-    * explode into rows. A null or empty shingle array yields no rows.
+    * One narrow map per row, no shuffle: the signature kernel
+    * (Kernels.minhashSig) computes the signature, the band key is md5 of
+    * the comma-joined signature slice, and the bands explode into rows. A
+    * null or empty shingle array yields no rows.
     *
     * PRECONDITION: `id` is unique in `sh`. Each row gets its own
     * signature; rows sharing an id are not merged into one shingle set.
@@ -228,72 +230,14 @@ object NearDedup {
     // Filter on `sh` would be pushed below the shingle projection and
     // shingle every row twice.
     sh.select(col("id"), col("sh"), graft.expressions.GraftFunctions.minhashSignature(
-        col("sh"), numPerms, seed, portable = true).as("sig"))
+        col("sh"), numPerms, seed).as("sig"))
       .select(col("id"),
         explode(when(size(col("sh")) > 0, array(bandStructs: _*))).as("q"))
       .select(col("id"), col("q.band").as("band"), col("q.bk").as("bk"))
   }
 
-  /** MinHash-LSH pairs on a PORTABLE hash basis: shingles hash through the
-    * first 60 bits of md5 (any engine can reproduce it — unlike xxhash64),
-    * permutations come from [[portablePerms]], and band keys are md5 of the
-    * comma-joined signature slice. Semantics and shape match
-    * [[minhashPairs]], and so does the signature: both run the same
-    * compiled kernel (Kernels.minhashSig), which differs between the two only
-    * in the shingle hash and the permutation constants. What the portable
-    * basis adds is that the WHOLE LSH pipeline (hashing, banding,
-    * candidate join, exact-jaccard verify) can be replayed and checked
-    * bit-for-bit by an external SQL engine. `id` must be unique (see
-    * [[portableBands]]).
-    *
-    * Degenerate band buckets (a boilerplate corpus collapsing thousands of
-    * docs onto one (band, bk) value) are dropped WHOLE when larger than
-    * `maxBucketSize`, before the self-join — the same deterministic
-    * whole-bucket rule as the native [[minhashPairs]] cap and the portable
-    * [[simhashPairsPortable]], so the oracle SQL replays it exactly.
-    * Without it this band self-join was the one uncapped quadratic in the
-    * library: a bucket of n identical docs costs n²/2 candidate rows.
-    * Mechanically the cap is a count-over-(band, bk) window filter, NOT
-    * the native path's aggregate + broadcast anti-join: an anti-join's
-    * bucket-size branch recomputes the signature pipeline a second time,
-    * while the window rides the exchange+sort the candidate self-join
-    * needs anyway and both join sides reuse ONE signature pass
-    * (ReusedExchange). The trade: a hot bucket's rows buffer in one window
-    * task — (id, band, bk) rows only, spill-bounded and linear, acceptable
-    * for the non-production twin (the native path keeps the
-    * map-side-combined aggregate, which never concentrates a bucket).
-    */
-  def minhashPairsPortable(df: DataFrame, idCol: String, textCol: String,
-                           shingleSize: Int = 3, numPerms: Int = 32,
-                           bands: Int = 8, threshold: Double = 0.7,
-                           seed: Long = 42L,
-                           maxBucketSize: Int = DefaultMaxBucketSize): DataFrame = {
-    val sh = portableShingles(df, idCol, textCol, shingleSize)
-    // Not materialized: the banded keys are a few narrow operators over
-    // the scan, cheap to plan three times (window cap, both self-join
-    // sides), and the self-join sides share them at runtime through
-    // exchange reuse.
-    val banded = portableBands(sh, numPerms, bands, seed)
-    val wB = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("band"), col("bk"))
-    val kept = banded.withColumn("__n", count(lit(1)).over(wB))
-      .filter(col("__n") <= maxBucketSize).drop("__n")
-    val aSide = kept.select(col("band"), col("bk"), col("id").as("id_a"))
-    val bSide = kept.select(col("band"), col("bk"), col("id").as("id_b"))
-    val cand = aSide.join(bSide, Seq("band", "bk"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
-    val shA = sh.select(col("id").as("id_a"), col("sh").as("sh_a"))
-    val shB = sh.select(col("id").as("id_b"), col("sh").as("sh_b"))
-    // same compiled verify kernel as the native path, once per pair (see
-    // [[verified]]) — value parity with the list_intersect/list_union
-    // oracle replay (identical int division)
-    verified(cand.join(shA, Seq("id_a")).join(shB, Seq("id_b")),
-      col("sh_a"), col("sh_b"), threshold)
-  }
-
   /** SimHash pairs on the same portable md5 hash basis (see
-    * [[minhashPairsPortable]]): 60-bit signatures (bit 63 would collide
+    * [[minhashPairs]]): 60-bit signatures (bit 63 would collide
     * with two's-complement sign handling across engines), majority vote
     * per bit over token hashes, 4×15-bit chunk bucketing, Hamming verify.
     * Tokenization is split-on-whitespace of the trimmed text — defined
@@ -879,13 +823,13 @@ object NearDedup {
     * from the (band, bk) equi-join of the fresh batch's bands against that
     * index (linear in both sides, never fresh × prior), and the Jaccard
     * verify touches candidates only. Same portable basis as
-    * [[minhashPairsPortable]], so the WHOLE incremental decision replays
+    * [[minhashPairs]], so the WHOLE incremental decision replays
     * in external SQL. In-batch near-dedup of the survivors composes via
     * [[minhashDedupCC]].
     *
     * Degenerate buckets are dropped WHOLE when their COMBINED fresh+prior
     * membership exceeds `maxBucketSize` — the same deterministic
-    * whole-bucket rule as [[minhashPairsPortable]] (a hot bucket with F
+    * whole-bucket rule as [[minhashPairs]] (a hot bucket with F
     * fresh and P prior members costs F·P candidate rows, the
     * cross-relation version of the self-join quadratic). Counting across
     * both sides keeps the rule identical to the oracle's, which counts the

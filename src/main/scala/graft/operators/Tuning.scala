@@ -35,9 +35,13 @@ object Tuning {
     * `id_b = id_a + offset` filter stopped reaching the band self-join
     * and all 27.3M candidates flowed through the shingle verify. Default
     * OFF; graft.Probe flips it on for attribution runs. Side-channel
-    * observes (dropped-bucket/shingle/fingerprint volumes) hang off
-    * count-only aggregate branches, never the candidate stream, and stay
-    * unconditional.
+    * observes (dropped-bucket/shingle/fingerprint volumes) stay
+    * unconditional: they hang off count-only aggregate branches, or, for
+    * minhashPairs' dropped buckets, off the (band, bk) window-count cap,
+    * never the candidate stream. No filter on the pair output can cross
+    * that window anyway: a filter on ids moves into the band self-join as
+    * a join condition, and a window only passes filters on its partition
+    * keys.
     */
   def observeMetrics: Boolean =
     sys.props.get("graft.observeMetrics")

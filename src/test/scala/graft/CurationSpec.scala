@@ -147,12 +147,12 @@ class CurationSpec extends SparkSpec {
     // excluded WHOLE and the degenerate corpus yields zero candidates
     val clones = (1L to 40L).map(i => (i, "the same boilerplate sentence repeated verbatim"))
     val docs = clones.toDF("doc_id", "text")
-    val capped = NearDedup.minhashPairsPortable(docs, "doc_id", "text",
+    val capped = NearDedup.minhashPairs(docs, "doc_id", "text",
       maxBucketSize = 10)
     assert(capped.count() == 0L, "hot bucket not excluded whole")
     // with the cap above the bucket size the full clique comes back —
     // the rule is whole-bucket, deterministic, and threshold-exact
-    val uncapped = NearDedup.minhashPairsPortable(docs, "doc_id", "text",
+    val uncapped = NearDedup.minhashPairs(docs, "doc_id", "text",
       maxBucketSize = 40)
     assert(uncapped.count() == 40L * 39 / 2)
     // a mixed corpus: the degenerate cluster is dropped, an honest dup
@@ -161,7 +161,7 @@ class CurationSpec extends SparkSpec {
     val mixed = docs.unionByName(Seq(
       (100L, "an entirely distinct document about topographic map making"),
       (101L, "an entirely distinct document about topographic map making")).toDF("doc_id", "text"))
-    val pairs = NearDedup.minhashPairsPortable(mixed, "doc_id", "text",
+    val pairs = NearDedup.minhashPairs(mixed, "doc_id", "text",
       maxBucketSize = 10)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(pairs == Set((100L, 101L)), s"expected only the honest pair, got $pairs")

@@ -381,17 +381,9 @@ class ExpressionsSpec extends SparkSpec {
   test("portable minhash kernel matches the explode/md5/min-aggregate bands exactly") {
     import graft.operators.NearDedup
     val (as, bs) = NearDedup.portablePerms(32)
-    // the kernel's constants ARE the ones the oracle SQL interpolates; the
-    // native basis keeps its interleaved draw
-    val portablePerms = MinHash.perms(32, 42L, portable = true)
+    // the kernel's constants ARE the ones the oracle SQL interpolates
+    val portablePerms = MinHash.perms(32, 42L)
     assert(portablePerms._1.toSeq == as && portablePerms._2.toSeq == bs)
-    val rnd0 = new scala.util.Random(42L)
-    val interleaved = Seq.fill(32)((math.abs(rnd0.nextLong()) % (MinHash.P - 1) + 1,
-      math.abs(rnd0.nextLong()) % MinHash.P))
-    val nativePerms = MinHash.perms(32, 42L, portable = false)
-    assert(nativePerms._1.toSeq == interleaved.map(_._1) &&
-      nativePerms._2.toSeq == interleaved.map(_._2))
-    assert(nativePerms._1.toSeq != as)
 
     // The formulation the kernel replaced: one row per shingle, md5 → 60
     // bits → mod p, then 32 min aggregates grouped by id.
@@ -547,8 +539,7 @@ class ExpressionsSpec extends SparkSpec {
       gramTable.put(org.apache.spark.unsafe.types.UTF8String.fromString(g), java.lang.Long.valueOf(c)) }
     val hpBits = 6
     val hpPlanes = { val r = new scala.util.Random(7L); Array.fill(hpBits)(Array.fill(dim)(r.nextGaussian())) }
-    val (mhA, mhB) = graft.expressions.MinHash.perms(8, 42L, portable = false)
-    val (pmA, pmB) = graft.expressions.MinHash.perms(8, 42L, portable = true)
+    val (pmA, pmB) = graft.expressions.MinHash.perms(8, 42L)
 
     // reference building blocks
     val p = graft.expressions.MinHash.P
@@ -668,10 +659,8 @@ class ExpressionsSpec extends SparkSpec {
       KernelCase("typeProbe", "IntegerType", text, c => G.typeProbe(c(0)), c => typeMaskRef(c(0))),
       KernelCase("unicodeNormalize", "StringType", text, c => G.unicodeNormalize(c(0), "NFKC"),
         c => nfkcRef(c(0))),
-      KernelCase("minhashSig", "ArrayType(LongType,false)", in => Seq(in.sa),
-        c => G.minhashSignature(c(0), 8), c => minhashRef(c(0), xxhash64(_), mhA, mhB)),
       KernelCase("minhashSig portable", "ArrayType(LongType,false)", in => Seq(in.sa),
-        c => G.minhashSignature(c(0), 8, portable = true),
+        c => G.minhashSignature(c(0), 8),
         c => minhashRef(c(0), s => conv(substring(md5(s), 1, 15), 16, 10).cast("long"), pmA, pmB)),
       KernelCase("cosine", "DoubleType", in => Seq(in.va, in.vb), c => G.cosine(c(0), c(1)), c => {
         val (a, b) = prefixes(c(0), c(1))

@@ -145,13 +145,24 @@ class PlanShapeSpec extends SparkSpec {
     }
   }
 
+  test("q47/q48 minhash pairs run one signature pass on the md5 band keys") {
+    // The aggregate + anti-join bucket cap of the xxhash64 pipeline planned
+    // a second signature branch that exchange reuse did not share; the
+    // window cap rides the exchange the band self-join needs.
+    for (q <- Seq("q47_minhash_pairs", "q48_minhash_dedup")) {
+      val p = finalPlanOf(q)
+      assert(occurrences(p, "graft_minhash_sig(") == 1, s"$q signature kernel count in:\n$p")
+      assert(!p.contains("xxhash64(concat_ws"), s"$q xxhash64 band key in:\n$p")
+    }
+  }
+
   test("connected components symmetrize minhash edges in one pass, verifying once") {
     // A two-branch union shared the pair pipeline's exchanges, but the
     // stage after them (candidate read, both shingle rejoins, the verify
     // kernel) ran once per branch.
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     val edges = operators.Clustering.symmetricEdges(
-      operators.NearDedup.minhashPairsPortable(docs, "doc_id", "text"), "id_a", "id_b")
+      operators.NearDedup.minhashPairs(docs, "doc_id", "text"), "id_a", "id_b")
     val p = finalPlanOf(edges)
     assert(!p.contains("Union"), s"union in the edge build:\n$p")
     assert(occurrences(p, "graft_jaccard_sim(") == 1, s"verify kernel count in:\n$p")
@@ -569,9 +580,9 @@ class PlanShapeSpec extends SparkSpec {
       df.count()
       df.queryExecution.executedPlan.toString
     }
-    // the side-branch dropped-bucket observe (count-only aggregate feeding
-    // the anti-join) is always-on and legitimate — assert on the
-    // candidate-stream metric by NAME, not on CollectMetrics presence
+    // the dropped-bucket observe on the (band, bk) window cap is always-on
+    // and legitimate — assert on the candidate-stream metric by NAME, not
+    // on CollectMetrics presence
     val default = recallPlan()
     assert(!default.contains("minhash_verify"),
       s"default minhashPairs plan carries the candidate-stream barrier:\n$default")

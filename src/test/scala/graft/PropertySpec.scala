@@ -138,7 +138,7 @@ class PropertySpec extends SparkSpec {
       (2L, "w1 w2 w3 w4 w5 w6 w7 w8"),
       (3L, "z1 z2 z3 z4 z5 z6 z7 z8")).toDF("id", "text")
     val sigs = df.select(col("id"),
-      graft.operators.NearDedup.minhashSignature(
+      graft.expressions.GraftFunctions.minhashSignature(
         graft.expressions.GraftFunctions.shingles(col("text"), 2), 64).as("sig"))
       .as[(Long, Seq[Long])].collect().toMap
     val agree12 = sigs(1L).zip(sigs(2L)).count { case (x, y) => x == y }
