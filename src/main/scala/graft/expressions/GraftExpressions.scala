@@ -816,7 +816,7 @@ object Kernels {
     * are SET-semantic: distinct common elements / distinct elements of
     * both), whose interpreted evaluation materializes two fresh arrays and
     * three hash sets per pair. This runs once per CANDIDATE pair in every
-    * LSH verify stage — the dominant term of the minhash natives at sf10 —
+    * LSH verify stage — the dominant term of the minhash pairs at sf10 —
     * so it builds two int-free hash sets and no output arrays. The
     * division of the same two ints is bit-identical IEEE in any engine
     * (the oracle replays list_intersect/list_union and divides the same
