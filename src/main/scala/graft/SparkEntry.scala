@@ -3417,9 +3417,9 @@ FROM e JOIN c USING (g) GROUP BY doc_id"""),
         s"CAST(min($c) AS VARCHAR) AS min_str, CAST(max($c) AS VARCHAR) AS max_str FROM orders")
       .mkString(" UNION ALL "),
     "q92_quantized_topk" -> quantizedTopkOracleSql,
-    "q47_minhash_pairs" -> minhashPortableOracleSql,
+    "q47_minhash_pairs" -> minhashPairsOracleSql,
     "q48_minhash_dedup" -> minhashDedupOracleSql,
-    "q93_minhash_portable" -> minhashPortableOracleSql,
+    "q93_minhash_portable" -> minhashPairsOracleSql,
     "q94_simhash_portable" ->
       s"""WITH tok AS (SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\\s+')) AS t FROM documents),
 hx AS (SELECT doc_id, CAST(list_sum(list_transform(range(1, 16),
@@ -3936,7 +3936,7 @@ b AS (SELECT rep_id AS id, p_name AS s,
 SELECT a.id AS id_a, bb.id AS id_b, CAST(levenshtein(a.s, bb.s) AS INTEGER) AS dist
 FROM b a JOIN b bb ON a.blk = bb.blk AND a.id < bb.id
 WHERE levenshtein(a.s, bb.s) <= 2""",
-    "q154_minhash_dedup_portable" -> minhashDedupPortableOracleSql,
+    "q154_minhash_dedup_portable" -> minhashDedupCCOracleSql,
     "q155_quality_buckets" ->
       // NULLS FIRST pins DuckDB to Spark's ASC default (nulls rank first ->
       // bucket 0, the operator's documented policy); latent until a fixture
@@ -4712,7 +4712,7 @@ WHERE rank <= 5"""
     * it, q48 drops each pair's larger id, q154 closes the pairs into
     * components, and q166 filters the cross fresh/prior pairs, so the
     * oracles cannot drift apart. The permutation constants come from the
-    * SAME portablePerms call that builds the Spark plan, so both engines
+    * SAME MinHash.perms call that builds the Spark plan, so both engines
     * compute identical signatures and band keys. The
     * keptbk CTE replays minhashPairs' whole-bucket window-count
     * exclusion with the cap interpolated from the SAME constant the Scala
@@ -4722,8 +4722,8 @@ WHERE rank <= 5"""
     * counting per bucket over ALL documents when fresh/prior partition
     * the corpus.
     */
-  private lazy val minhashPortableCtes: String = {
-    val (as, bs) = graft.operators.NearDedup.portablePerms(32)
+  private lazy val minhashCtes: String = {
+    val (as, bs) = graft.expressions.MinHash.perms(32, graft.expressions.MinHash.Seed)
     val permValues = (0 until 32).map(i => s"(${i}, ${as(i)}, ${bs(i)})").mkString(", ")
     s"""perms(i, a, b) AS (SELECT * FROM (VALUES $permValues) AS v(i, a, b)),
 sh AS (SELECT doc_id, list_distinct(
@@ -4749,8 +4749,8 @@ j AS (SELECT id_a, id_b, len(list_intersect(sa.s, sb.s)) AS i, len(sa.s) AS na, 
   FROM cand JOIN sh sa ON sa.doc_id = cand.id_a JOIN sh sb ON sb.doc_id = cand.id_b)"""
   }
 
-  private lazy val minhashPortableOracleSql: String =
-    s"""WITH $minhashPortableCtes
+  private lazy val minhashPairsOracleSql: String =
+    s"""WITH $minhashCtes
 SELECT id_a, id_b, round(CAST(i AS DOUBLE) / (na + nb - i), 4) AS jaccard
 FROM j WHERE CAST(i AS DOUBLE) / (na + nb - i) >= 0.7"""
 
@@ -4758,7 +4758,7 @@ FROM j WHERE CAST(i AS DOUBLE) / (na + nb - i) >= 0.7"""
     * document that is the larger id of a qualifying pair drops.
     */
   private lazy val minhashDedupOracleSql: String =
-    s"""WITH $minhashPortableCtes,
+    s"""WITH $minhashCtes,
 pp AS (SELECT id_a, id_b FROM j WHERE CAST(i AS DOUBLE) / (na + nb - i) >= 0.7)
 SELECT doc_id, lang, source FROM documents
 WHERE doc_id NOT IN (SELECT id_b FROM pp)"""
@@ -4767,8 +4767,8 @@ WHERE doc_id NOT IN (SELECT id_b FROM pp)"""
     * propagation, the q74/q75 ground-truth formulation) with the min-id
     * representative kept — the full minhashDedup pipeline replayed.
     */
-  private lazy val minhashDedupPortableOracleSql: String =
-    s"""WITH RECURSIVE $minhashPortableCtes,
+  private lazy val minhashDedupCCOracleSql: String =
+    s"""WITH RECURSIVE $minhashCtes,
 p AS (SELECT id_a, id_b FROM j WHERE CAST(i AS DOUBLE) / (na + nb - i) >= 0.7),
 e AS (SELECT id_a AS src, id_b AS dst FROM p UNION SELECT id_b, id_a FROM p),
 reach(id, comp) AS (
@@ -4785,7 +4785,7 @@ WHERE doc_id NOT IN (SELECT id FROM losers)"""
     * ordered id_a < id_b, so the contaminated set is one filter over it.
     */
   private lazy val nearDedupSnapshotOracleSql: String =
-    s"""WITH $minhashPortableCtes,
+    s"""WITH $minhashCtes,
 pp AS (SELECT id_a, id_b FROM j WHERE CAST(i AS DOUBLE) / (na + nb - i) >= 0.7)
 SELECT doc_id, lang, source FROM documents
 WHERE doc_id >= 250

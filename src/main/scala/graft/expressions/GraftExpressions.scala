@@ -1186,7 +1186,7 @@ object KernelCall {
 }
 
 /** The minhash permutation constants, the one definition the kernel and the
-  * DuckDB oracle SQL (via NearDedup.portablePerms) share.
+  * DuckDB oracle SQL (SparkEntry's minhash CTEs) share.
   */
 object MinHash {
   // Canonical MinHash prime: 2^31-1. An earlier HOF formulation used 2^61-1,
@@ -1195,8 +1195,14 @@ object MinHash {
   // signature caches (Memoize/parquet) from before the switch must be rebuilt.
   val P: Long = 2147483647L
 
+  /** The permutation seed of every minhash pipeline and its oracle. */
+  val Seed: Long = 42L
+
   /** The (a, b) permutation constants, a_i in [1, P-1] and b_i in [0, P-1]:
-    * all a_i drawn from the seeded generator before all b_i.
+    * all a_i drawn from the seeded generator before all b_i. The SAME
+    * arrays parameterize the Spark plan's signature kernel and the
+    * external oracle SQL, so both engines compute identical signatures.
+    * P = 2^31-1 keeps a·h+b inside 2^62 (ANSI-safe).
     */
   def perms(numPerms: Int, seed: Long): (Array[Long], Array[Long]) = {
     val rnd = new scala.util.Random(seed)
@@ -1263,7 +1269,7 @@ object GraftFunctions {
   }
 
   /** MinHash signature of a shingle array (see [[MinHash]]). */
-  def minhashSignature(c: Column, numPerms: Int, seed: Long = 42L): Column = {
+  def minhashSignature(c: Column, numPerms: Int, seed: Long = MinHash.Seed): Column = {
     val (a, b) = MinHash.perms(numPerms, seed)
     kernel("minhashSig", longs, e(c), const(a), const(b), Literal(MinHash.P))
   }
@@ -1334,7 +1340,7 @@ object GraftFunctions {
     "graft_type_probe" -> (a => typeProbe(a(0))),
     "graft_cosine" -> (a => cosine(a(0), a(1))),
     "graft_minhash_sig" -> (a => minhashSignature(a(0), intArg(a(1), "numPerms"),
-      if (a.length > 2) longArg(a(2), "seed") else 42L)),
+      if (a.length > 2) longArg(a(2), "seed") else MinHash.Seed)),
     "graft_hyperplane_sig" -> (a => hyperplaneSignature(a(0), intArg(a(1), "dim"),
       intArg(a(2), "bits"), if (a.length > 3) longArg(a(3), "seed") else 7L)),
     "graft_repetition_stats" -> (a => repetitionStats(a(0), intArg(a(1), "n"))),

@@ -59,8 +59,8 @@ object NearDedup {
     // Bucket sizes WITHOUT materializing bucket contents: a count-only
     // aggregate (map-side combined, no arrays) finds the oversized buckets,
     // which are then anti-joined away as a broadcast — the degenerate bucket
-    // (millions of flat images sharing one chunk value) never exists as
-    // a collected array in any task. Oversized buckets are degenerate
+    // (boilerplate text or flat images sharing one chunk value) never exists
+    // as a collected array in any task. Oversized buckets are degenerate
     // content: joining them is quadratic and their pairs rarely add dups
     // smaller buckets don't surface. The dropped volume is surfaced via an
     // observed metric (readable from a QueryExecutionListener after the
@@ -82,12 +82,13 @@ object NearDedup {
   /** MinHash-LSH near-dup pairs over (idCol, textCol): (id_a, id_b,
     * jaccard) for candidate pairs whose exact shingle Jaccard reaches
     * `threshold`, id_a < id_b, deduped across bands, jaccard rounded to 4
-    * places. `id` must be unique (see [[portableBands]]).
+    * places. `id` must be unique (see [[minhashBands]]).
     *
     * Every hash is engine-portable, so an external SQL engine replays the
-    * WHOLE pipeline bit for bit (SparkEntry.minhashPortableCtes): shingles
+    * WHOLE pipeline bit for bit (SparkEntry.minhashCtes): shingles
     * hash through the first 60 bits of md5, permutations come from
-    * [[portablePerms]], the signature is one compiled kernel call per row
+    * [[graft.expressions.MinHash.perms]] (seed [[graft.expressions.MinHash.Seed]]),
+    * the signature is one compiled kernel call per row
     * (Kernels.minhashSig) and each band key is md5 of the comma-joined
     * signature slice.
     *
@@ -110,24 +111,26 @@ object NearDedup {
   def minhashPairs(df: DataFrame, idCol: String, textCol: String,
                    shingleSize: Int = 3, numPerms: Int = 32,
                    bands: Int = 8, threshold: Double = 0.7,
-                   seed: Long = 42L,
                    maxBucketSize: Int = DefaultMaxBucketSize): DataFrame = {
-    val sh = portableShingles(df, idCol, textCol, shingleSize)
+    val sh = shingleSets(df, idCol, textCol, shingleSize)
     // Not materialized: the banded keys are a few narrow operators over
     // the scan, cheap to plan for both self-join sides, which share them at
     // runtime through exchange reuse.
-    val banded = portableBands(sh, numPerms, bands, seed)
+    val banded = minhashBands(sh, numPerms, bands, MinHash.Seed)
     val wB = org.apache.spark.sql.expressions.Window
       .partitionBy(col("band"), col("bk"))
     val hot = col("__n") > maxBucketSize
-    val kept = banded.withColumn("__n", count(lit(1)).over(wB))
+    // Exchange reuse happens below the window, so the window count runs
+    // once per join side. The observe rides the a side only: on both, its
+    // sums would run twice per banded row under one metric name.
+    val counted = banded.withColumn("__n", count(lit(1)).over(wB))
+    val aSide = counted
       .observe(s"lsh_dropped_buckets_${dropSeq.incrementAndGet()}",
         round(sum(when(hot, lit(1.0) / col("__n")).otherwise(lit(0.0))))
           .cast(LongType).as("dropped_buckets"),
         sum(when(hot, lit(1L)).otherwise(lit(0L))).as("dropped_rows"))
-      .filter(!hot).drop("__n")
-    val aSide = kept.select(col("band"), col("bk"), col("id").as("id_a"))
-    val bSide = kept.select(col("band"), col("bk"), col("id").as("id_b"))
+      .filter(!hot).select(col("band"), col("bk"), col("id").as("id_a"))
+    val bSide = counted.filter(!hot).select(col("band"), col("bk"), col("id").as("id_b"))
     val cand0 = aSide.join(bSide, Seq("band", "bk"))
       .filter(col("id_a") < col("id_b"))
       .select("id_a", "id_b").distinct()
@@ -180,20 +183,10 @@ object NearDedup {
     df.join(losers, Seq(idCol), "left_anti")
   }
 
-  /** Minhash permutation constants: the SAME arrays parameterize the
-    * Spark plan's signature kernel and the external oracle SQL, so both
-    * engines compute identical signatures. p = 2^31-1 keeps a·h+b inside
-    * 2^62 (ANSI-safe).
-    */
-  def portablePerms(numPerms: Int, seed: Long = 42L): (Seq[Long], Seq[Long]) = {
-    val (as, bs) = MinHash.perms(numPerms, seed)
-    (as.toSeq, bs.toSeq)
-  }
-
   /** (id, sh) shingle sets — the verify-stage relation of the minhash
     * pipelines.
     */
-  private def portableShingles(df: DataFrame, idCol: String, textCol: String,
+  private def shingleSets(df: DataFrame, idCol: String, textCol: String,
                                shingleSize: Int): DataFrame =
     // Spread a single-split scan before the shingle kernel: the signature
     // kernel evaluates downstream of this projection, and a one-row-group
@@ -204,7 +197,7 @@ object NearDedup {
         graft.expressions.GraftFunctions.shingles(col("__t"), shingleSize).as("sh"))
 
   /** (id, band, bk) banded minhash keys on the md5 basis — the
-    * candidate-stage relation. Together with [[portableShingles]] this IS
+    * candidate-stage relation. Together with [[shingleSets]] this IS
     * the persistable near-dup index of a corpus release: store both per
     * release and incremental batches join against them without rescanning
     * prior text.
@@ -217,7 +210,7 @@ object NearDedup {
     * PRECONDITION: `id` is unique in `sh`. Each row gets its own
     * signature; rows sharing an id are not merged into one shingle set.
     */
-  private[graft] def portableBands(sh: DataFrame, numPerms: Int, bands: Int,
+  private[graft] def minhashBands(sh: DataFrame, numPerms: Int, bands: Int,
                                    seed: Long): DataFrame = {
     require(numPerms % bands == 0, "numPerms must divide into bands")
     val rowsPerBand = numPerms / bands
@@ -406,7 +399,7 @@ object NearDedup {
   private def shingleTokens(df: DataFrame, idCol: String, textCol: String,
                             shingleSize: Int, maxDf: Int): DataFrame = {
     // Spread before the shingle kernel — same single-split rationale as
-    // portableShingles; the df-cap/anti-join branches all re-execute this
+    // shingleSets; the df-cap/anti-join branches all re-execute this
     // front end, so each re-execution is parallel too.
     val sh = Tuning.spread(
         df.select(col(idCol).as("id"), col(textCol).as("__t")), col("id"))
@@ -842,10 +835,10 @@ object NearDedup {
                                       idCol: String, textCol: String,
                                       shingleSize: Int = 3, numPerms: Int = 32,
                                       bands: Int = 8, threshold: Double = 0.7,
-                                      seed: Long = 42L,
+                                      seed: Long = MinHash.Seed,
                                       maxBucketSize: Int = DefaultMaxBucketSize): DataFrame = {
-    val fsh = portableShingles(fresh, idCol, textCol, shingleSize)
-    val psh = portableShingles(prior, idCol, textCol, shingleSize)
+    val fsh = shingleSets(fresh, idCol, textCol, shingleSize)
+    val psh = shingleSets(prior, idCol, textCol, shingleSize)
     // Both sides' banded keys materialized ONCE (round 16): the tagged
     // union feeds the window count and both filtered candidate branches.
     // The checkpoint dates from the explode + min-aggregate signature,
@@ -855,9 +848,9 @@ object NearDedup {
     // this relation is the persisted release index anyway. The shingle
     // ARRAYS (fsh/psh) stay un-materialized for the verify rejoin —
     // re-scan beats caching for payload-sized relations.
-    val tagged = portableBands(fsh, numPerms, bands, seed)
+    val tagged = minhashBands(fsh, numPerms, bands, seed)
       .select(col("band"), col("bk"), col("id"), lit(true).as("__fresh"))
-      .unionAll(portableBands(psh, numPerms, bands, seed)
+      .unionAll(minhashBands(psh, numPerms, bands, seed)
         .select(col("band"), col("bk"), col("id"), lit(false).as("__fresh")))
       .localCheckpoint()
     val wB = org.apache.spark.sql.expressions.Window

@@ -37,8 +37,8 @@ object Tuning {
     * OFF; graft.Probe flips it on for attribution runs. Side-channel
     * observes (dropped-bucket/shingle/fingerprint volumes) stay
     * unconditional: they hang off count-only aggregate branches, or, for
-    * minhashPairs' dropped buckets, off the (band, bk) window-count cap,
-    * never the candidate stream. No filter on the pair output can cross
+    * minhashPairs' dropped buckets, off one self-join side's (band, bk)
+    * window-count cap, never the candidate stream. No filter on the pair output can cross
     * that window anyway: a filter on ids moves into the band self-join as
     * a join condition, and a window only passes filters on its partition
     * keys.

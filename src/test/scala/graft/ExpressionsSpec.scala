@@ -380,10 +380,8 @@ class ExpressionsSpec extends SparkSpec {
 
   test("portable minhash kernel matches the explode/md5/min-aggregate bands exactly") {
     import graft.operators.NearDedup
-    val (as, bs) = NearDedup.portablePerms(32)
     // the kernel's constants ARE the ones the oracle SQL interpolates
-    val portablePerms = MinHash.perms(32, 42L)
-    assert(portablePerms._1.toSeq == as && portablePerms._2.toSeq == bs)
+    val (as, bs) = MinHash.perms(32, MinHash.Seed)
 
     // The formulation the kernel replaced: one row per shingle, md5 → 60
     // bits → mod p, then 32 min aggregates grouped by id.
@@ -419,7 +417,7 @@ class ExpressionsSpec extends SparkSpec {
 
     inBothCodegenModes { mode =>
       val sh = spark.read.parquet(dir)
-      val got = NearDedup.portableBands(sh, 32, 8, 42L)
+      val got = NearDedup.minhashBands(sh, 32, 8, MinHash.Seed)
       val want = reference(sh)
       // 8 bands per signed row; the null text and the empty array get none
       assert(got.collect().length == (texts.count(_._2 != null) + 1) * 8)

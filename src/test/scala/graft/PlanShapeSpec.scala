@@ -148,11 +148,15 @@ class PlanShapeSpec extends SparkSpec {
   test("q47/q48 minhash pairs run one signature pass on the md5 band keys") {
     // The aggregate + anti-join bucket cap of the xxhash64 pipeline planned
     // a second signature branch that exchange reuse did not share; the
-    // window cap rides the exchange the band self-join needs.
+    // window cap rides the exchange the band self-join needs. Each join
+    // side runs the window count; the dropped-bucket observe rides one of
+    // them, or its sums run twice per banded row under one metric name.
     for (q <- Seq("q47_minhash_pairs", "q48_minhash_dedup")) {
       val p = finalPlanOf(q)
       assert(occurrences(p, "graft_minhash_sig(") == 1, s"$q signature kernel count in:\n$p")
       assert(!p.contains("xxhash64(concat_ws"), s"$q xxhash64 band key in:\n$p")
+      assert(occurrences(p, "CollectMetrics lsh_dropped_buckets_") == 1,
+        s"$q dropped-bucket observe count in:\n$p")
     }
   }
 
