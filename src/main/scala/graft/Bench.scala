@@ -31,34 +31,26 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    narrow projection plans, so a write is the honest unit of work;
   *  - the JSON is ALSO written whole to BENCH_local_<sf>.json in the working
   *    directory so no consumer ever depends on a bounded stdout tail;
-  *  - RETRY pass (round 13): guard offenders from the main pass are
-  *    re-timed with the suite idle before the guard refuses anything — a
-  *    contended host window during the 195-query pass (the cause of three
-  *    consecutive refused driver benches, each exonerated on re-run) can
-  *    no longer erase the round's official artifact. See [[retryPass]].
-  *  - FORK-ISOLATED confirmation (round 15, after the in-JVM retry
-  *    "confirmed" r14's q176 at 6.37 s while a fresh JVM ran it at
-  *    1.73 s): refusal now requires a fresh-JVM min over the limit, and
-  *    any query > 2x its all-time reference min is re-taken isolated
-  *    before it may enter the canonical snapshot. See [[forkAdjudicate]]
-  *    and [[forkRetime]]; the reference ledger (BENCH_ref_<sf>.json,
-  *    [[mergeRefMins]]) only ever moves downward. A refusal that would
-  *    rest on fresh-JVM evidence escalates once more: a SECOND child
-  *    re-times just those names and the final fresh min is the min across
-  *    both children — min-of-2 within one child cannot see past a host
-  *    window longer than the child itself (observed once at ~80x).
+  *  - ONE confirmation path, the fork-isolated re-time (round 15, after an
+  *    in-JVM retry "confirmed" r14's q176 at 6.37 s while a fresh JVM ran
+  *    it at 1.73 s): on a full run, the main pass's absolute offenders and
+  *    the snapshot commit-gate candidates (> 2x the all-time reference
+  *    min, broadcast regime only) are re-timed in ONE forked fresh JVM,
+  *    min-of-2 each. An absolute offender refuses the snapshot only when
+  *    its fresh-JVM min is over the limit, or when the fork produced no
+  *    sample for it (the main-pass evidence stands); a faster fresh min is
+  *    spliced in, a slower one never worsens the record. See
+  *    [[forkAdjudicate]] and [[forkRetime]]; the reference ledger
+  *    (BENCH_ref_<sf>.json, [[mergeRefMins]]) only ever moves downward;
   *  - BETWEEN-QUERY hygiene (round 15): each query's leftover persists,
   *    cache entries, and final localCheckpoint blocks are dropped after
-  *    its last run (SPARK_GRAFT_BENCH_KEEP_STATE=1 opts out for
-  *    attribution runs); per-query stor_mb/rdds/heap_mb fields in the
-  *    detail artifact measure the session-accumulation either way.
+  *    its last run; per-query stor_mb/rdds/heap_mb fields in the detail
+  *    artifact measure what each query left behind.
   *
-  * A/B attribution mode (SPARK_GRAFT_BENCH_AB=/path/to/other.jar): loads
-  * the other jar's graft.SparkEntry through a child-first classloader and
-  * alternates A(other)/B(HEAD) per query in ONE JVM session — same warmup,
-  * same GC state, same host pressure — so a suite-wide drift is attributed
-  * per query: A≈B means host, A<B means a code regression in HEAD. Results
-  * go to BENCH_ab_<sf>.json; the normal snapshot is NOT written.
+  * Cross-commit A/B: one filtered fresh-JVM bench per jar
+  * (SPARK_GRAFT_BENCH_ONLY, `java -cp <jar>:<spark jars> graft.Bench`),
+  * alternating the sides; filtered runs key their queries object by full
+  * name, so the two legs' JSON lines match key for key.
   */
 object Bench {
   private def gcMs(): Long = {
@@ -66,40 +58,6 @@ object Bench {
     var s = 0L
     while (it.hasNext) { val t = it.next().getCollectionTime; if (t > 0) s += t }
     s
-  }
-
-  /** Child-first loader for `graft.*` only — Spark/Scala/JDK stay shared
-    * with the parent so DataFrames and Maps cross the boundary untouched.
-    */
-  private final class GraftJarLoader(jar: java.net.URL, parent: ClassLoader)
-      extends java.net.URLClassLoader(Array(jar), parent) {
-    override def loadClass(name: String, resolve: Boolean): Class[_] = synchronized {
-      if (name.startsWith("graft.")) {
-        val c = Option(findLoadedClass(name)).getOrElse(
-          try findClass(name)
-          catch { case _: ClassNotFoundException => super.loadClass(name, false) })
-        if (resolve) resolveClass(c)
-        c
-      } else super.loadClass(name, resolve)
-    }
-  }
-
-  private def loadQueries(jar: String): Map[String, (SparkSession, String) => DataFrame] = {
-    val loader = new GraftJarLoader(new java.io.File(jar).toURI.toURL,
-      getClass.getClassLoader)
-    val cls = Class.forName("graft.SparkEntry$", true, loader)
-    val module = cls.getField("MODULE$").get(null)
-    // The A side is a SECOND SparkEntry module in the same JVM: offset its
-    // uniqueness counters (Derby db dirs, memory-sink query names) so they
-    // never collide with the HEAD side's — both start at 0 otherwise.
-    for (f <- Seq("derbySeq", "memSeq"))
-      try {
-        val fld = cls.getDeclaredField(f)
-        fld.setAccessible(true)
-        fld.get(module).asInstanceOf[java.util.concurrent.atomic.AtomicLong].set(1000000L)
-      } catch { case _: Throwable => () }
-    cls.getMethod("queries").invoke(module)
-      .asInstanceOf[Map[String, (SparkSession, String) => DataFrame]]
   }
 
   private def fmt(v: Double, digits: Int): String =
@@ -130,21 +88,6 @@ object Bench {
     }
   }
 
-  /** End-of-suite retry pass (round 13, after three consecutive driver
-    * benches — BENCH_r10/r11/r12 — were refused by the guard while a
-    * re-run each time exonerated the code): when the full suite finishes
-    * with unremarked offenders, re-time JUST those queries. The suite is
-    * idle at that point, so a transiently contended window during the main
-    * pass can no longer erase the round's official artifact: an offender
-    * whose fresh samples come in under its limit is CLEARED (its improved
-    * min replaces the recorded timing) and only confirmed offenders refuse
-    * the snapshot.
-    *
-    * `retryMin(name)` returns the min of the fresh samples, or None if
-    * every retry run threw — a retry failure never clears an offender, it
-    * only fails to add evidence. Returns (improved mins to splice into the
-    * timing map, confirmed offenders with their post-retry mins).
-    */
   /** Per-sf default for the slow-query guard: 5 s sized for sf0.1 and
     * below, the documented 30 s convention for sf1-class runs, and 30·sf
     * above that (300 s at sf10 — a limit the round-12 k ∝ n quadratics at
@@ -160,19 +103,6 @@ object Bench {
       case _                  => 5.0
     }
 
-  private[graft] def retryPass(slow: Seq[(String, Double, Double)],
-                               retryMin: String => Option[Double])
-      : (Map[String, Double], Seq[(String, Double, Double)]) = {
-    val updated = scala.collection.mutable.LinkedHashMap[String, Double]()
-    val confirmed = scala.collection.mutable.ArrayBuffer[(String, Double, Double)]()
-    slow.foreach { case (n, mainMin, lim) =>
-      val m = retryMin(n).fold(mainMin)(_.min(mainMin))
-      if (m < mainMin) updated(n) = m
-      if (m > lim) confirmed += ((n, m, lim))
-    }
-    (updated.toMap, confirmed.toSeq)
-  }
-
   /** Snapshot file suffix for a run's guard state: a guard-clean run owns
     * the canonical `.json` names; a red run is quarantined to
     * `.rejected.json` so the committed snapshot can never carry a non-empty
@@ -181,9 +111,9 @@ object Bench {
   private[graft] def snapshotSuffix(slow: Seq[_]): String =
     if (slow.isEmpty) ".json" else ".rejected.json"
 
-  /** qNN-prefix keys when unambiguous, full names otherwise — shared by the
-    * normal snapshot and the A/B artifact (two queries sharing a q-number
-    * prefix must not silently shadow each other in the JSON).
+  /** qNN-prefix keys when unambiguous, full names otherwise — the keys of
+    * a full run's snapshot and of the reference ledger (two queries sharing
+    * a q-number prefix must not silently shadow each other in the JSON).
     */
   private[graft] def shortKeys(names: Seq[String]): Map[String, String] = {
     val short = names.map(n => n -> n.takeWhile(_ != '_'))
@@ -216,12 +146,13 @@ object Bench {
     * stayed under the 5 s absolute limit and so tripped nothing): flag any
     * query whose min exceeds `factor`× its committed-snapshot min while
     * big enough to matter (>= floorSec — sub-half-second queries swing 4×
-    * on scheduler noise alone). Offenders get the same idle-suite retry as
-    * absolute ones; survivors are REPORTED in the artifact's
-    * `slow_relative` field with limit = factor×reference. Never a refusal:
-    * the absolute contract still holds — this exists so a regression that
-    * hides under the absolute limit on a fast host is visible in the
-    * artifact instead of only in a human diff of snapshots.
+    * on scheduler noise alone). At factor 2 this picks the snapshot
+    * commit-gate candidates, which get the same fork-isolated re-time as
+    * absolute offenders; survivors of the default 4× are REPORTED in the
+    * artifact's `slow_relative` field with limit = factor×reference. Never a
+    * refusal: the absolute contract still holds — this exists so a
+    * regression that hides under the absolute limit on a fast host is
+    * visible in the artifact instead of only in a human diff of snapshots.
     */
   private[graft] def slowRelative(mins: Seq[(String, Double)],
                                   keyOf: Map[String, String],
@@ -249,17 +180,6 @@ object Bench {
     * disable [[slowRelative]] and the commit gate for that query. The
     * threshold is the smallest value that round-trips the format non-zero.
     */
-  /** Per-name min across two fork children's evidence (union of keys):
-    * the second-opinion escalation takes the best honest sample either
-    * child produced, so one contaminated child can delay a refusal only
-    * until the other child measures the query honestly.
-    */
-  private[graft] def combineFreshMins(a: Map[String, Double],
-                                      b: Map[String, Double]): Map[String, Double] =
-    (a.keySet ++ b.keySet).map { k =>
-      k -> (a.get(k).toSeq ++ b.get(k).toSeq).min
-    }.toMap
-
   private[graft] def mergeRefMins(ref: Map[String, Double],
                                   fresh: Map[String, Double]): Map[String, Double] =
     fresh.filter(_._2 >= 0.005).foldLeft(ref) { case (acc, (k, v)) =>
@@ -270,47 +190,38 @@ object Bench {
     }
 
   /** Adjudicate guard offenders on FORK-ISOLATED evidence (round 15, after
-    * the same phenomenon burned four of five official rounds: the in-JVM
-    * retry pass inherits the 197-query session's heap/block state, so it
+    * session pressure burned four of five official rounds: an in-JVM
+    * re-time inherits the ~200-query session's heap/block state, so it
     * "confirmed" q176 at 6.37 s in r14 while a fresh JVM at the same HEAD
     * ran it in 1.73 s). `freshMin` is the per-query min from a fresh-JVM
     * re-time ([[main]] wires it to one forked child running all offenders,
-    * min-of-2 each); `fallbackMin` is the in-process escape hatch (deep
-    * clean — clearCache + unpersist sweep + forced GC — then re-time) used
-    * only when the fork produced no sample for an ABSOLUTE offender.
+    * min-of-2 each).
     *
-    * Laws: an absolute offender is confirmed ONLY if its freshest isolated
-    * evidence still exceeds the limit; with no isolated sample at all the
-    * main-pass evidence stands (a fork failure must not silently clear a
-    * genuine monster). Inflation candidates (over the reference-min gate
-    * but under the absolute limit) only ever SPLICE an improved min — they
-    * are report-only and never confirm. A fresh sample slower than the
-    * prior min never worsens the recorded timing.
+    * Laws: an absolute offender is confirmed ONLY if its isolated evidence
+    * still exceeds the limit; with no isolated sample at all the main-pass
+    * evidence stands (a fork failure must not silently clear a genuine
+    * monster). Inflation candidates (over the reference-min gate but under
+    * the absolute limit) only ever SPLICE an improved min — they are
+    * report-only and never confirm. A fresh sample slower than the prior
+    * min never worsens the recorded timing.
     *
     * Returns (improved mins to splice, still-confirmed absolute offenders).
     */
   private[graft] def forkAdjudicate(
-      absConfirmed: Seq[(String, Double, Double)],
+      absolute: Seq[(String, Double, Double)],
       inflated: Seq[(String, Double, Double)],
-      freshMin: String => Option[Double],
-      fallbackMin: String => Option[Double])
+      freshMin: String => Option[Double])
       : (Map[String, Double], Seq[(String, Double, Double)]) = {
-    val updates = scala.collection.mutable.LinkedHashMap[String, Double]()
-    val confirmed = scala.collection.mutable.ArrayBuffer[(String, Double, Double)]()
-    val absNames = absConfirmed.map(_._1).toSet
-    absConfirmed.foreach { case (n, prior, lim) =>
-      freshMin(n).orElse(fallbackMin(n)) match {
-        case Some(f) =>
-          if (f < prior) updates(n) = f
-          if (f > lim) confirmed += ((n, f.min(prior), lim))
-        case None =>
-          confirmed += ((n, prior, lim))
-      }
+    val absNames = absolute.map(_._1).toSet
+    val updates = (absolute ++ inflated.filterNot(o => absNames(o._1))).flatMap {
+      case (n, prior, _) => freshMin(n).filter(_ < prior).map(n -> _)
+    }.toMap
+    val confirmed = absolute.flatMap { case (n, prior, lim) =>
+      val fresh = freshMin(n)
+      if (fresh.forall(_ > lim)) Some((n, fresh.fold(prior)(_.min(prior)), lim))
+      else None
     }
-    inflated.filterNot(o => absNames(o._1)).foreach { case (n, prior, _) =>
-      freshMin(n).foreach(f => if (f < prior) updates(n) = f)
-    }
-    (updates.toMap, confirmed.toSeq)
+    (updates, confirmed)
   }
 
   /** Re-time `names` in a FRESH JVM: one forked child running the existing
@@ -319,8 +230,9 @@ object Bench {
     * process shape as the sf100 anchor methodology — cold session, only
     * the offenders — so its mins carry none of the parent's accumulated
     * heap/block state. Returns per-query fresh mins parsed from the
-    * child's JSON line; empty on any failure (fork unavailable, timeout,
-    * unparseable output) — the caller falls back to in-process evidence.
+    * child's JSON line, which a filtered run keys by full name; empty on
+    * any failure (fork unavailable, timeout, unparseable output) — the
+    * main-pass evidence then stands.
     *
     * Works because build.sbt pins `run / fork := true`: this JVM was
     * itself forked by sbt with the full app classpath in java.class.path
@@ -352,16 +264,6 @@ object Bench {
       env.put("SPARK_GRAFT_CPUS", cpus)
       env.put("SPARK_GRAFT_TMP_DIR",
         new java.io.File("target/tmp-fork").getAbsolutePath)
-      // full-name keys in the child's queries object: the short-key
-      // mapping is per-side (computed over whatever survived), so a query
-      // failing in the child could shift it onto keys the parent can't
-      // resolve — full names make the parse side-independent
-      env.put("SPARK_GRAFT_BENCH_FULLKEYS", "1")
-      env.remove("SPARK_GRAFT_BENCH_AB")
-      // the child always measures in the normal hygienic regime — a
-      // KEEP_STATE attribution parent must not propagate accumulation
-      // into its own isolation evidence
-      env.remove("SPARK_GRAFT_BENCH_KEEP_STATE")
       // child stderr (Spark startup, its own [bench] lines) interleaves
       // into ours — harmless; child stdout is captured whole for parsing
       pb.redirectError(ProcessBuilder.Redirect.INHERIT)
@@ -378,13 +280,11 @@ object Bench {
       if (!done) {
         p.destroyForcibly()
         System.err.println("[bench] fork confirmation TIMED OUT (45 min); " +
-          "falling back to in-process evidence")
+          "the main-pass evidence stands")
         return Map.empty
       }
       drain.join(10000)
       val mins = parseCommittedMins(outBytes.toString("UTF-8"))
-      // the child ran with FULLKEYS, so its queries object is keyed by
-      // full name regardless of which offenders survived in it
       val got = names.flatMap(n => mins.get(n).map(n -> _)).toMap
       got.foreach { case (n, v) =>
         System.err.println(s"[bench] fork confirmation: $n fresh-JVM min ${fmt(v, 2)} s")
@@ -393,8 +293,8 @@ object Bench {
     } catch {
       case e: Throwable =>
         System.err.println(s"[bench] fork confirmation FAILED " +
-          s"(${e.getClass.getSimpleName}: ${e.getMessage}); falling back " +
-          "to in-process evidence")
+          s"(${e.getClass.getSimpleName}: ${e.getMessage}); the main-pass " +
+          "evidence stands")
         Map.empty
     }
   }
@@ -441,7 +341,6 @@ object Bench {
     // otherwise run the full suite yet skip the snapshot write below)
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").toSeq.filter(_.nonEmpty)).filter(_.nonEmpty)
-    val abJar = sys.env.get("SPARK_GRAFT_BENCH_AB").filter(_.nonEmpty)
     val sfName = new java.io.File(sfDir).getName
 
     def timeOnce(fn: (SparkSession, String) => DataFrame): (Double, Long) = {
@@ -450,8 +349,6 @@ object Bench {
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       ((System.nanoTime() - t0) / 1e9, gcMs() - g0)
     }
-
-    if (abJar.isDefined) { runAb(spark, sfDir, sfName, abJar.get, runs, only, timeOnce); spark.stop(); return }
 
     val errors = scala.collection.mutable.ArrayBuffer[String]()
     val selected = SparkEntry.queries.toSeq.sortBy(_._1).filter { case (n, _) =>
@@ -471,10 +368,8 @@ object Bench {
     // runs 2..n of a query still reuse run 1's cache (the clean runs only
     // after its LAST run), cross-query in-memory reuse was never part of
     // any query's own timing, and Memoize's parquet caches live on disk
-    // untouched. SPARK_GRAFT_BENCH_KEEP_STATE=1 restores the accumulating
-    // behavior for attribution runs; the per-query stor_mb/rdds/heap_mb
-    // fields in BENCH_detail make the difference measurable either way.
-    val keepState = sys.env.get("SPARK_GRAFT_BENCH_KEEP_STATE").contains("1")
+    // untouched. The per-query stor_mb/rdds/heap_mb fields in BENCH_detail
+    // keep what each query leaves behind measurable.
     def storageState(): (Long, Int) = try {
       val st = spark.sparkContext.getExecutorMemoryStatus
       val used = st.values.map { case (mx, rem) => (mx - rem).max(0L) }.sum
@@ -519,7 +414,7 @@ object Bench {
           extend = false }
       if (!failed) details(name) = (ts.toSeq, gs.toSeq)
       val (storMb, rddN) = storageState()
-      if (!keepState) dropQueryState()
+      dropQueryState()
       val heapMb = (Runtime.getRuntime.totalMemory - Runtime.getRuntime.freeMemory) /
         (1024L * 1024L)
       sessionStats(name) = (storMb, rddN, heapMb)
@@ -530,24 +425,22 @@ object Bench {
     // it), and with 100 queries a full-name JSON line outgrows that buffer.
     // Three defenses: per-query timings go first (front-truncatable) and the
     // headline total/errors go LAST so they always survive; per-query keys
-    // are the unique qNN id prefix (full names live in the CORRECTNESS
-    // output, which shares the numbering); 2-decimal rounding.
+    // of a full run are the unique qNN id prefix (full names live in the
+    // CORRECTNESS output, which shares the numbering); 2-decimal rounding.
     // Locale.ROOT: the default-locale formatter would
     // emit decimal COMMAS on comma-decimal locales and break the JSON.
     // Failed queries live ONLY in "errors": a -1.0 sentinel inside the
     // timing map made sum-of-queries diverge from "value" for any consumer
     // that aggregates the map.
     val timed = results.filter(_._2 >= 0)
-    // FULLKEYS (set for fork children only): the parent parses the child's
-    // queries object by FULL name — the qNN short-key mapping is computed
-    // over each side's own surviving set, so a query failing in the child
-    // could silently shift the child onto short keys the parent can't
-    // resolve. The child's stdout is captured whole (never tail-bounded),
-    // so full names cost nothing there.
-    val keyOf =
-      if (sys.env.get("SPARK_GRAFT_BENCH_FULLKEYS").contains("1"))
-        timed.map(t => t._1 -> t._1).toMap
-      else shortKeys(timed.map(_._1))
+    // Short keys are also the reference ledger's keys. A filtered run keys
+    // its queries object by FULL name instead: the short-key mapping is
+    // computed over each run's own surviving set, so matching a filtered
+    // run by short key (the parent parsing its fork child, the two legs of
+    // an A/B or of tools/nb_ab.sh) could silently pair different queries;
+    // a filtered run writes no snapshot and its line is short.
+    val refKey = shortKeys(timed.map(_._1))
+    val keyOf = if (only.isEmpty) refKey else timed.map(t => t._1 -> t._1).toMap
     val errs = errors.map("\"" + _ + "\"").mkString("[", ",", "]")
     // Slow-query guard: a monster timing must be impossible to commit
     // unremarked (round 10's q193 sat at 658 s inside a 747 s suite with
@@ -576,47 +469,6 @@ object Bench {
         try src.mkString finally src.close()
       } catch { case _: Throwable => "" }
     val firstPassSlow = slowUnremarked(timed, slowLimit, plansText)
-    // Retry pass: the main pass interleaves 195 queries, so one contended
-    // host window smears across whichever queries ran inside it. Re-timing
-    // only the offenders with the suite otherwise idle separates "this
-    // query is slow" from "the host was busy at 14:07". Fresh samples are
-    // appended to the detail artifact (retry_from marks where they start).
-    val retryRuns = sys.env.getOrElse("SPARK_GRAFT_BENCH_RETRY_RUNS", "2").toInt.max(0)
-    val retryFrom = scala.collection.mutable.Map[String, Int]()
-    // Names that got >= 1 successful idle-suite sample — the refusal
-    // message below must not claim "confirmed by retry" for an offender
-    // whose every retry run threw (or when retries are disabled): in those
-    // cases the guard refuses on main-pass evidence alone and says so.
-    val retrySampled = scala.collection.mutable.Set[String]()
-    def idleRetry(name: String): Option[Double] = {
-      System.err.println(s"[bench] retry pass: re-timing $name ($retryRuns idle-suite runs)")
-      // only the FIRST retry batch marks the main-pass/retry boundary: a
-      // second call for the same offender (the deep-clean fallback after a
-      // failed fork) must not re-label earlier retry samples as main-pass
-      if (!retryFrom.contains(name))
-        retryFrom(name) = details.get(name).map(_._1.size).getOrElse(0)
-      val samples = (1 to retryRuns).flatMap { _ =>
-        try Some(timeOnce(SparkEntry.queries(name)))
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name retry run failed: ${e.getMessage}")
-          None }
-      }
-      if (samples.nonEmpty) {
-        retrySampled += name
-        details.get(name).foreach { case (ts, gs) =>
-          details(name) = (ts ++ samples.map(_._1), gs ++ samples.map(_._2))
-        }
-      }
-      samples.map(_._1).minOption
-    }
-    // Filtered runs skip the retry pass: they never refuse a snapshot, so
-    // there is nothing to clear — their offenders go straight to the
-    // report-only slow_unremarked field.
-    val (retryUpdates, inJvmConfirmed) =
-      if (firstPassSlow.isEmpty || retryRuns == 0 || only.nonEmpty)
-        (Map.empty[String, Double], firstPassSlow)
-      else retryPass(firstPassSlow, idleRetry)
-    val timedAfterAbs = timed.map { case (n, v) => n -> retryUpdates.getOrElse(n, v) }
     // Reference mins for the relative check and the snapshot commit gate:
     // the all-time downward-only ledger (BENCH_ref_<sf>.json) when present,
     // else the last committed snapshot. Round 15: r14 committed a
@@ -632,103 +484,39 @@ object Bench {
     val refLedger = readMins(s"BENCH_ref_$sfName.json")
     val refMins = if (refLedger.nonEmpty) refLedger
                   else readMins(s"BENCH_local_$sfName.json")
-    // Fork-isolated confirmation (round 15, after the in-JVM retry pass
-    // "confirmed" r14's q176 at 6.37 s — with 4-7 s of GC per sample —
-    // while a fresh JVM at the same HEAD ran it in 1.73 s: the retry
-    // inherits exactly the session pressure it exists to rule out). Two
-    // offender classes share ONE forked child (min-of-2 each, cold
-    // session, same shape as the sf100 anchor methodology):
-    //  - absolute offenders the in-JVM retry confirmed — refusal now
-    //    REQUIRES the fresh-JVM min over the limit;
+    // Fork-isolated confirmation, the one path ([[forkAdjudicate]]). On a
+    // full run, two offender classes share ONE forked child (min-of-2
+    // each, cold session, same shape as the sf100 anchor methodology):
+    //  - absolute offenders of the main pass — refusal REQUIRES the
+    //    fresh-JVM min over the limit, or no fresh sample at all;
     //  - the snapshot commit gate: any query > 2x its reference min
     //    (>= 0.5 s) is re-taken isolated before its value may enter the
     //    canonical snapshot, so a pressured band can no longer contaminate
     //    the committed evidence chain (r14's q64-q77/q170-q176 at 2-3x).
-    // If the fork yields no sample for an ABSOLUTE offender, the escape
-    // hatch is an in-process deep clean (clearCache + unpersist sweep +
-    // forced GC, delta logged) followed by one more in-JVM retry; with no
-    // isolated sample at all the main-pass evidence stands — a fork
-    // failure must never silently clear a genuine monster.
-    val doIsolate = retryRuns > 0 && only.isEmpty
-    // the commit gate compares against the BROADCAST-regime ledger, so a
+    // The commit gate compares against the BROADCAST-regime ledger, so a
     // no-broadcast certification run — where join-heavy queries are
-    // deliberately slower than that reference — must not burn a fork pass
+    // deliberately slower than that reference — must not burn fork time
     // re-timing a regime difference (its evidence never enters the
-    // canonical snapshot or the ledger anyway); absolute offenders still
-    // fork, because NB runs do refuse on them
+    // canonical snapshot or the ledger anyway); its absolute offenders
+    // still fork, because NB runs do refuse on them. Filtered runs never
+    // refuse and never fork: their offenders go straight to the
+    // report-only slow_unremarked field.
     val inflated =
-      if (doIsolate && !noBroadcast)
-        slowRelative(timedAfterAbs, keyOf, refMins, factor = 2.0)
+      if (only.isEmpty && !noBroadcast) slowRelative(timed, refKey, refMins, factor = 2.0)
       else Nil
-    val forkNames = (inJvmConfirmed.map(_._1) ++ inflated.map(_._1)).distinct
+    val forkNames = (firstPassSlow ++ inflated).map(_._1).distinct
     val freshMins: Map[String, Double] =
-      if (doIsolate && forkNames.nonEmpty) {
+      if (only.isEmpty && forkNames.nonEmpty) {
         // Shrink the parent before the child starts: the parent sits idle
         // through the fork, but a fat resident heap is exactly the co-tenant
-        // load the child's measurements must not share a host with (observed
-        // once against a KEEP_STATE parent: a transient window inflated two
-        // child queries ~80x; the downward-only splice and the
-        // main+retry+fork triple-evidence refusal rule both contained it,
-        // this makes the window less likely in the first place).
+        // load the child's measurements must not share a host with.
         dropQueryState()
         System.gc()
         forkRetime(forkNames, sfDir, cpus, 2)
       } else Map.empty
-    var deepCleaned = false
-    // names with >= 1 successful POST-deep-clean sample — the refusal
-    // message must not credit the deep clean for an offender whose only
-    // samples came from the earlier (pre-clean) retry pass
-    val fallbackSampled = scala.collection.mutable.Set[String]()
-    def fallbackMin(name: String): Option[Double] =
-      if (!doIsolate) None
-      else {
-        if (!deepCleaned) {
-          deepCleaned = true
-          dropQueryState()
-          val g0 = gcMs()
-          System.gc()
-          Thread.sleep(1000)
-          System.err.println(s"[bench] fork unavailable — in-process deep " +
-            s"clean before fallback retry (forced-GC delta ${gcMs() - g0} ms)")
-        }
-        val m = idleRetry(name)
-        if (m.isDefined) fallbackSampled += name
-        m
-      }
-    // memoized: adjudication may run twice (second-opinion fork below) and
-    // the fallback's retry batches must not double for names whose answer
-    // the first pass already produced
-    val fallbackCache = scala.collection.mutable.Map[String, Option[Double]]()
-    def fallbackMemo(name: String): Option[Double] =
-      fallbackCache.getOrElseUpdate(name, fallbackMin(name))
-    val (forkUpdates0, slow0) =
-      forkAdjudicate(inJvmConfirmed, inflated, freshMins.get, fallbackMemo)
-    // Second-opinion fork: a refusal about to rest on fresh-JVM evidence
-    // gets ONE more child, and the final fresh min is the min across both.
-    // Rationale: the one contaminated fork observed (round 15's keep-state
-    // stress test) was a transient ~85 s host window that spanned the
-    // child's whole lifetime and inflated its queries ~80x — min-of-2
-    // WITHIN one child cannot see past a window longer than the child, but
-    // a second child launched after the first has ended usually can. The
-    // escalation runs only for would-be refusals (rare), so its cost is
-    // bounded by the refusal path itself; a genuinely slow query is slow
-    // in both children and still refuses.
-    val secondNames = slow0.map(_._1).filter(freshMins.contains)
-    val freshSecond: Map[String, Double] =
-      if (doIsolate && secondNames.nonEmpty) {
-        System.err.println(s"[bench] second-opinion fork: " +
-          s"${secondNames.mkString(",")} would be refused on first-child " +
-          "evidence; launching one more fresh JVM")
-        forkRetime(secondNames, sfDir, cpus, 2)
-      } else Map.empty
-    val freshAll = combineFreshMins(freshMins, freshSecond)
-    val (forkUpdates, slow) =
-      if (freshSecond.isEmpty) (forkUpdates0, slow0)
-      else forkAdjudicate(inJvmConfirmed, inflated, freshAll.get, fallbackMemo)
-    val slowRel = slowRelative(
-      timedAfterAbs.map { case (n, v) => n -> forkUpdates.getOrElse(n, v) },
-      keyOf, refMins).sortBy(_._1)
-    val timedFinal = timedAfterAbs.map { case (n, v) => n -> forkUpdates.getOrElse(n, v) }
+    val (forkUpdates, slow) = forkAdjudicate(firstPassSlow, inflated, freshMins.get)
+    val timedFinal = timed.map { case (n, v) => n -> forkUpdates.getOrElse(n, v) }
+    val slowRel = slowRelative(timedFinal, refKey, refMins).sortBy(_._1)
     val qsFinal = timedFinal.map { case (k, v) =>
       "\"" + keyOf(k) + "\":" + fmt(v, 2)
     }.mkString("{", ",", "}")
@@ -761,27 +549,25 @@ object Bench {
     } else if (only.isEmpty) {
       writeFile(s"BENCH_local_$sfName$suffix", json)
       val det = details.map { case (name, (ts, gs)) =>
-        val key = keyOf.getOrElse(name, name)
         val sorted = ts.sorted
         val med = sorted((sorted.size - 1) / 2)
-        "\"" + key + "\":{\"min\":" + fmt(ts.min, 2) +
+        "\"" + keyOf(name) + "\":{\"min\":" + fmt(ts.min, 2) +
           ",\"med\":" + fmt(med, 2) +
           ",\"min_run\":" + ts.indexOf(ts.min) +
-          retryFrom.get(name).fold("")(i => s""",\"retry_from\":$i""") +
-          freshAll.get(name).fold("")(v => s""",\"fork_min\":${fmt(v, 2)}""") +
+          freshMins.get(name).fold("")(v => s""",\"fork_min\":${fmt(v, 2)}""") +
           sessionStats.get(name).fold("") { case (st, rd, hp) =>
             s""",\"stor_mb\":$st,\"rdds\":$rd,\"heap_mb\":$hp""" } +
           ",\"t\":[" + ts.map(fmt(_, 2)).mkString(",") + "]" +
           ",\"gc_ms\":[" + gs.mkString(",") + "]}"
       }.mkString("{", ",", "}")
       writeFile(s"BENCH_detail_$sfName$suffix",
-        s"""{"sf":"$sfDir","base_runs":$runs,"keep_state":$keepState,"detail":$det}""")
+        s"""{"sf":"$sfDir","base_runs":$runs,"detail":$det}""")
       // All-time reference ledger: merge this run's mins DOWNWARD-only —
       // written on every full normal-regime run (a red run's mins are
       // still honest lower-bound evidence; the merge direction makes
       // pollution impossible), never by filtered or no-broadcast runs.
       val ledger = mergeRefMins(refMins,
-        timedFinal.map { case (n, v) => keyOf(n) -> v }.toMap)
+        timedFinal.map { case (n, v) => refKey(n) -> v }.toMap)
       val ledgerBody = ledger.toSeq.sortBy(_._1)
         .map { case (k, v) => "\"" + k + "\":" + fmt(v, 2) }
         .mkString("{", ",", "}")
@@ -814,19 +600,12 @@ object Bench {
     spark.stop()
     if (slow.nonEmpty && only.isEmpty) {
       slow.foreach { case (n, t, lim) =>
-        // State the strongest evidence class that actually ran for THIS
-        // offender: fresh-JVM isolation > deep-cleaned in-JVM retry >
-        // main-pass only — a refusal must never claim isolation it
-        // didn't perform (the r14 failure mode, inverted).
+        // State the evidence class that actually ran for THIS offender — a
+        // refusal must never claim isolation it didn't perform (the r14
+        // failure mode, inverted).
         val how =
-          if (freshSecond.contains(n))
-            "confirmed by TWO independent fresh-JVM isolated retries"
-          else if (freshAll.contains(n)) "confirmed by fresh-JVM isolated retry"
-          else if (fallbackSampled.contains(n))
-            "fork unavailable; confirmed by deep-cleaned in-JVM retry"
-          else if (retrySampled.contains(n))
-            "confirmed by same-JVM idle-suite retry only; no isolated sample ran"
-          else "main-pass evidence only; no retry sample ran"
+          if (freshMins.contains(n)) "confirmed by fresh-JVM re-time"
+          else "main-pass evidence only; the fork produced no sample"
         System.err.println(s"[bench] SLOW-QUERY GUARD ($how): $n ran ${fmt(t, 2)} s " +
           s"(limit ${fmt(lim, 2)} s) with no committed PLANS.md slow-budget " +
           s"line — add `slow-budget: $n <sec>` with a justification section " +
@@ -846,61 +625,9 @@ object Bench {
     }
   }
 
-  /** Interleaved A/B: per query, alternate other-jar (A) and HEAD (B)
-    * executions `runs` times each in one session. Queries missing on
-    * either side are skipped (listed in "only_b"/"only_a").
-    */
-  private def runAb(spark: SparkSession, sfDir: String, sfName: String,
-                    jar: String, runs: Int, only: Option[Seq[String]],
-                    timeOnce: ((SparkSession, String) => DataFrame) => (Double, Long)): Unit = {
-    val a = loadQueries(jar)
-    val b = SparkEntry.queries
-    val common = (a.keySet intersect b.keySet).toSeq.sorted.filter { n =>
-      only.forall(_.exists(n.contains))
-    }
-    val errsA = scala.collection.mutable.ArrayBuffer[String]()
-    val errsB = scala.collection.mutable.ArrayBuffer[String]()
-    val rows = common.flatMap { name =>
-      val ta = scala.collection.mutable.ArrayBuffer[Double]()
-      val tb = scala.collection.mutable.ArrayBuffer[Double]()
-      var i = 0
-      var dead = false
-      while (i < runs && !dead) {
-        try ta += timeOnce(a(name))._1
-        catch { case e: Throwable =>
-          System.err.println(s"[bench-ab] A $name FAILED: ${e.getMessage}")
-          errsA += name; dead = true }
-        if (!dead)
-          try tb += timeOnce(b(name))._1
-          catch { case e: Throwable =>
-            System.err.println(s"[bench-ab] B $name FAILED: ${e.getMessage}")
-            errsB += name; dead = true }
-        i += 1
-      }
-      if (dead) None else Some(name -> ((ta.min, tb.min)))
-    }
-    val keyOf = shortKeys(rows.map(_._1))
-    val qs = rows.map { case (k, (am, bm)) =>
-      "\"" + keyOf(k) + "\":{\"a\":" + fmt(am, 2) + ",\"b\":" + fmt(bm, 2) +
-        ",\"ratio\":" + fmt(if (am > 0) bm / am else -1.0, 2) + "}"
-    }.mkString("{", ",", "}")
-    val json = s"""{"ab_jar":"$jar","sf":"$sfDir","queries":$qs""" +
-      s""","only_a":${(a.keySet -- b.keySet).toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")}""" +
-      s""","only_b":${(b.keySet -- a.keySet).toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")}""" +
-      s""","errors_a":${errsA.map("\"" + _ + "\"").mkString("[", ",", "]")}""" +
-      s""","errors_b":${errsB.map("\"" + _ + "\"").mkString("[", ",", "]")}""" +
-      s""","a_total":${fmt(rows.map(_._2._1).sum, 3)},"b_total":${fmt(rows.map(_._2._2).sum, 3)}}"""
-    // Same contract as the normal-path snapshots: a filtered iteration run
-    // (SPARK_GRAFT_BENCH_ONLY) must never clobber the committed full-suite
-    // A/B artifact.
-    if (only.isEmpty) writeFile(s"BENCH_ab_$sfName.json", json)
-    println(json)
-  }
-
   private def writeFile(path: String, content: String): Unit =
     try {
       val w = new java.io.PrintWriter(path, "UTF-8")
       try w.println(content) finally w.close()
     } catch { case _: Throwable => () } // read-only cwd must not kill the run
 }
-

@@ -55,23 +55,25 @@ class BenchGuardSpec extends AnyFunSuite {
       ".rejected.json")
   }
 
+  // The retry pass is the fork-isolated re-time: [[Bench.forkAdjudicate]]
+  // over the fresh-JVM mins of one forked child.
   test("retry pass clears a contended first pass, keeps the improved min") {
     // round 13: the driver's r10/r11/r12 benches were all refused by the
     // guard while an idle re-run exonerated the code each time. Simulate
     // exactly that: two offenders whose main-pass mins landed inside a
-    // contended window, both come back under budget on the idle retry.
+    // contended window, both come back under budget on the fresh JVM.
     val contended = Seq(("q61_recall", 6.1, 5.0), ("q154_minhash", 16.3, 5.0))
-    val idleMins = Map("q61_recall" -> 0.9, "q154_minhash" -> 2.1)
-    val (updated, confirmed) = Bench.retryPass(contended, n => idleMins.get(n))
+    val freshMins = Map("q61_recall" -> 0.9, "q154_minhash" -> 2.1)
+    val (updated, confirmed) = Bench.forkAdjudicate(contended, Nil, freshMins.get)
     assert(confirmed.isEmpty)                       // snapshot no longer refused
-    assert(updated == idleMins)                     // artifact carries the real floor
+    assert(updated == freshMins)                    // artifact carries the real floor
     assert(Bench.snapshotSuffix(confirmed) == ".json")
   }
 
   test("retry pass refuses only confirmed offenders") {
-    // one query is genuinely slow (retry agrees), one was host noise
+    // one query is genuinely slow (the fresh JVM agrees), one was host noise
     val slow = Seq(("q_real_monster", 700.0, 5.0), ("q_noise", 9.0, 5.0))
-    val (updated, confirmed) = Bench.retryPass(slow,
+    val (updated, confirmed) = Bench.forkAdjudicate(slow, Nil,
       Map("q_real_monster" -> 690.0, "q_noise" -> 1.2).get)
     assert(confirmed == Seq(("q_real_monster", 690.0, 5.0)))
     assert(updated == Map("q_real_monster" -> 690.0, "q_noise" -> 1.2))
@@ -79,11 +81,11 @@ class BenchGuardSpec extends AnyFunSuite {
   }
 
   test("a retry that throws never clears an offender and never worsens the min") {
-    // retryMin = None (every retry run threw): the main-pass evidence stands
-    val (u1, c1) = Bench.retryPass(Seq(("q_x", 8.0, 5.0)), _ => None)
+    // no fresh sample (every re-time run threw): the main-pass evidence stands
+    val (u1, c1) = Bench.forkAdjudicate(Seq(("q_x", 8.0, 5.0)), Nil, _ => None)
     assert(u1.isEmpty && c1 == Seq(("q_x", 8.0, 5.0)))
-    // a retry SLOWER than the main pass must not replace the min
-    val (u2, c2) = Bench.retryPass(Seq(("q_y", 8.0, 5.0)), _ => Some(12.0))
+    // a re-time SLOWER than the main pass must not replace the min
+    val (u2, c2) = Bench.forkAdjudicate(Seq(("q_y", 8.0, 5.0)), Nil, _ => Some(12.0))
     assert(u2.isEmpty && c2 == Seq(("q_y", 8.0, 5.0)))
   }
 
@@ -133,15 +135,20 @@ class BenchGuardSpec extends AnyFunSuite {
       Map("q17" -> 0.0)).isEmpty)
   }
 
-  test("relative offenders clear through the same idle-suite retry pass") {
-    // contended main pass: 6x the committed min; idle retry lands at 1.1x
-    // -> cleared (min spliced), nothing reported
+  test("relative offenders clear through the same fork-isolated re-time") {
+    // contended main pass: 6x the committed min; the fresh JVM lands at
+    // 1.1x -> cleared (min spliced), nothing reported
+    val ref = Map("q17" -> 0.50)
+    val keyOf = Map("q17_join_warn" -> "q17")
     val flagged = Seq(("q17_join_warn", 3.0, 2.0))
-    val (updated, confirmed) = Bench.retryPass(flagged, _ => Some(0.55))
-    assert(confirmed.isEmpty && updated == Map("q17_join_warn" -> 0.55))
-    // a genuine regression survives the retry and stays reported
-    val (u2, c2) = Bench.retryPass(flagged, _ => Some(2.9))
-    assert(u2 == Map("q17_join_warn" -> 2.9) && c2 == Seq(("q17_join_warn", 2.9, 2.0)))
+    def reported(fresh: Double) = {
+      val (updated, confirmed) = Bench.forkAdjudicate(Nil, flagged, _ => Some(fresh))
+      assert(confirmed.isEmpty && updated == Map("q17_join_warn" -> fresh))
+      Bench.slowRelative(Seq("q17_join_warn" -> updated("q17_join_warn")), keyOf, ref)
+    }
+    assert(reported(0.55).isEmpty)
+    // a genuine regression survives the re-time and stays reported
+    assert(reported(2.9) == Seq(("q17_join_warn", 2.9, 2.0)))
   }
 
   test("fork adjudication: a fresh-JVM min under the limit clears a confirmed offender") {
@@ -151,7 +158,7 @@ class BenchGuardSpec extends AnyFunSuite {
     // isolated floor.
     val (updates, confirmed) = Bench.forkAdjudicate(
       Seq(("q176_winnow_pairs", 6.37, 5.0)), Nil,
-      Map("q176_winnow_pairs" -> 1.73).get, _ => None)
+      Map("q176_winnow_pairs" -> 1.73).get)
     assert(confirmed.isEmpty)
     assert(updates == Map("q176_winnow_pairs" -> 1.73))
   }
@@ -159,26 +166,26 @@ class BenchGuardSpec extends AnyFunSuite {
   test("fork adjudication: a genuinely slow query stays confirmed with the isolated min") {
     val (updates, confirmed) = Bench.forkAdjudicate(
       Seq(("q_real_monster", 700.0, 5.0)), Nil,
-      Map("q_real_monster" -> 690.0).get, _ => None)
+      Map("q_real_monster" -> 690.0).get)
     assert(confirmed == Seq(("q_real_monster", 690.0, 5.0)))
     assert(updates == Map("q_real_monster" -> 690.0))
     // a fresh sample SLOWER than the main pass never worsens the min but
     // still confirms (isolated evidence over the limit)
     val (u2, c2) = Bench.forkAdjudicate(
-      Seq(("q_y", 8.0, 5.0)), Nil, Map("q_y" -> 12.0).get, _ => None)
+      Seq(("q_y", 8.0, 5.0)), Nil, Map("q_y" -> 12.0).get)
     assert(u2.isEmpty && c2 == Seq(("q_y", 8.0, 5.0)))
   }
 
-  test("fork adjudication: fork failure falls back to the deep-cleaned in-JVM retry") {
-    // fork yields nothing; the deep-cleaned fallback exonerates one
-    // offender and confirms the other; an offender with NO isolated
-    // sample at all stands on main-pass evidence (never silently cleared)
-    val fallback = Map("q_noise" -> 1.2, "q_monster" -> 650.0)
-    val (updates, confirmed) = Bench.forkAdjudicate(
-      Seq(("q_noise", 9.0, 5.0), ("q_monster", 700.0, 5.0), ("q_dead", 8.0, 5.0)),
-      Nil, _ => None, fallback.get)
-    assert(updates == Map("q_noise" -> 1.2, "q_monster" -> 650.0))
-    assert(confirmed == Seq(("q_monster", 650.0, 5.0), ("q_dead", 8.0, 5.0)))
+  test("fork adjudication: fork failure keeps every offender at its main-pass min") {
+    // the fork yields nothing: with no isolated sample an offender stands
+    // on main-pass evidence (never silently cleared, never re-timed in the
+    // pressured session)
+    val offenders =
+      Seq(("q_noise", 9.0, 5.0), ("q_monster", 700.0, 5.0), ("q_dead", 8.0, 5.0))
+    val (updates, confirmed) = Bench.forkAdjudicate(offenders, Nil, _ => None)
+    assert(updates.isEmpty)
+    assert(confirmed == offenders)
+    assert(Bench.snapshotSuffix(confirmed) == ".rejected.json")
   }
 
   test("fork adjudication: inflation candidates splice mins but never confirm") {
@@ -188,13 +195,13 @@ class BenchGuardSpec extends AnyFunSuite {
     val (updates, confirmed) = Bench.forkAdjudicate(
       Nil,
       Seq(("q74_cc", 3.67, 2.0), ("q75_keep", 3.94, 2.0), ("q70_x", 3.23, 2.0)),
-      Map("q74_cc" -> 1.88, "q70_x" -> 4.0).get, _ => None)
+      Map("q74_cc" -> 1.88, "q70_x" -> 4.0).get)
     assert(confirmed.isEmpty)
     assert(updates == Map("q74_cc" -> 1.88))
     // a query in BOTH sets is adjudicated once, as an absolute offender
     val (u2, c2) = Bench.forkAdjudicate(
       Seq(("q_both", 6.0, 5.0)), Seq(("q_both", 6.0, 2.0)),
-      Map("q_both" -> 1.5).get, _ => None)
+      Map("q_both" -> 1.5).get)
     assert(c2.isEmpty && u2 == Map("q_both" -> 1.5))
   }
 
@@ -215,17 +222,6 @@ class BenchGuardSpec extends AnyFunSuite {
       "q197" -> 1.83, "q_edge" -> 0.005))
     // idempotent on itself
     assert(Bench.mergeRefMins(merged, merged) == merged)
-  }
-
-  test("second-opinion fork evidence combines as the per-name min") {
-    // q_a: both children sampled, best wins; q_b: only child 1; q_c: only
-    // child 2 (child 1 lost it — a query can fail in one child and not the
-    // other); empty second child leaves the first untouched
-    val c1 = Map("q_a" -> 6.2, "q_b" -> 1.1)
-    val c2 = Map("q_a" -> 1.4, "q_c" -> 0.9)
-    assert(Bench.combineFreshMins(c1, c2) ==
-      Map("q_a" -> 1.4, "q_b" -> 1.1, "q_c" -> 0.9))
-    assert(Bench.combineFreshMins(c1, Map.empty) == c1)
   }
 
   test("shortKeys shortens to the q-number prefix only when unambiguous") {
