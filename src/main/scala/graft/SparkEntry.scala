@@ -1365,8 +1365,8 @@ object SparkEntry {
     "q95_lsh_portable" -> ((s, d) =>
       // sign-LSH bucketed embedding near-dup on shared plane literals —
       // signatures, bucket join, and cosine verify all oracle-replayed
-      VectorFunctions.cosineNearDupPortable(t(s, d, "embeddings"),
-        "vec_id", "embedding", dim = 64, threshold = 0.25)),
+      VectorFunctions.cosineNearDupPairs(t(s, d, "embeddings"),
+        "vec_id", "embedding", dim = 64, threshold = 0.25, bits = 6)),
     "q96_ivf_portable" -> ((s, d) => {
       // portable IVF: systematic centroid seed (id % 25 == 0), cosine
       // assignment + probing, exact verify — fully oracle-replayed
@@ -2102,18 +2102,17 @@ object SparkEntry {
       }.toDF("tbl", "col_name", "ctype")
     }),
     "q146_cosine_dup_portable" -> ((s, d) => {
-      // q53's injected-exact-copy recall path on the portable plane basis:
-      // copies (vec_id+100000) hash to identical signatures in every
-      // table, so the bucket join MUST surface them and the 0.95-threshold
-      // verify keeps them (cosine exactly 1.0). The full pipeline —
-      // planes, signatures, candidate join, exact verify — replays
-      // bit-for-bit in DuckDB; the native xxhash64 variant q53 stays the
-      // production path.
+      // q53's injected-exact-copy recall path at bits 6: copies
+      // (vec_id+100000) hash to identical signatures in every table, so
+      // the bucket join MUST surface them and the 0.95-threshold verify
+      // keeps them (cosine exactly 1.0). The full pipeline — planes,
+      // signatures, hot-bucket cap, candidate join, exact verify — replays
+      // bit-for-bit in DuckDB, as q53's does at bits 8.
       val emb = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
       val dups = emb.filter(col("vec_id") < 20)
         .withColumn("vec_id", col("vec_id") + 100000L)
-      VectorFunctions.cosineNearDupPortable(emb.unionByName(dups),
-        "vec_id", "embedding", dim = 64, threshold = 0.95)
+      VectorFunctions.cosineNearDupPairs(emb.unionByName(dups),
+        "vec_id", "embedding", dim = 64, threshold = 0.95, bits = 6)
     }),
     "q147_heavy_hitters_stream" -> ((s, d) => {
       // batch-parity gate for STREAMING heavy hitters (Misra-Gries in
@@ -2778,7 +2777,7 @@ object SparkEntry {
     }),
     "q196_twin_gate" -> ((s, d) => {
       // MACHINE-gate for the rows-only natives (round-12 verdict #6): the
-      // 6 no-oracle LSH/IVF surfaces are correctness-gated through their
+      // no-oracle simhash/IVF surfaces are correctness-gated through their
       // oracle-green portable twins, and this query moves that pairing
       // from prose into the driver's CORRECTNESS artifact itself — one
       // row per (rows_only_query, twin), so a consumer mechanically joins
@@ -2914,9 +2913,7 @@ object SparkEntry {
     */
   val rowsOnlyTwins: Map[String, String] = Map(
     "q49_simhash_pairs" -> "q94_simhash_portable",
-    "q51_lsh_topk" -> "q95_lsh_portable",
-    "q52_ivf_topk" -> "q96_ivf_portable",
-    "q53_cosine_neardup" -> "q146_cosine_dup_portable")
+    "q52_ivf_topk" -> "q96_ivf_portable")
 
   /** q147 Misra-Gries parity constants — the ONLY definition; the oracle
     * SQL interpolates them so capacity/shard changes cannot desync the two
@@ -3136,6 +3133,8 @@ agg AS (SELECT sentence, count(DISTINCT doc_id) AS n_docs, count(*) AS n_total
 SELECT sentence, n_docs, n_total FROM agg
 ORDER BY n_docs DESC, n_total DESC, sentence ASC LIMIT 20""",
     "q50_cosine_topk" -> cosineTopkOracleSql,
+    "q51_lsh_topk" -> lshTopKOracleSql(embVectorsSql, queriesBelow = 5, k = 5, bits = 4, tables = 16),
+    "q53_cosine_neardup" -> lshPairsOracleSql(embWithCopiesSql, "0.95", bits = 8, tables = 4),
     "q54_flatten_json" ->
       ("SELECT * FROM (VALUES (48.8, 'flo', CAST(1 AS BIGINT)), (51.5, 'dou', CAST(2 AS BIGINT))) " +
         "AS t(author_geo_lat, author_name, id)"),
@@ -3438,7 +3437,7 @@ cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
 h2 AS (SELECT id_a, id_b, bit_count(xor(sa.sig, sb.sig)) AS hamming
   FROM cand JOIN sig sa ON sa.doc_id = cand.id_a JOIN sig sb ON sb.doc_id = cand.id_b)
 SELECT id_a, id_b, CAST(hamming AS INTEGER) AS hamming FROM h2 WHERE hamming <= 3""",
-    "q95_lsh_portable" -> lshPortableOracleSql,
+    "q95_lsh_portable" -> lshPairsOracleSql(embVectorsSql, "0.25", bits = 6, tables = 4),
     "q96_ivf_portable" -> ivfPortableOracleSql,
     "q97_dup_spans" ->
       """WITH tk AS (SELECT doc_id, regexp_split_to_array(trim(coalesce(text, '')), '\s+') AS toks FROM documents),
@@ -3845,13 +3844,9 @@ SELECT tbl, col_name, CASE
   WHEN t = 'VARCHAR[]' THEN 'arr<str>'
   ELSE lower(t) END AS ctype
 FROM d""" },
-    // q53's recall path replayed end-to-end: same planes/threshold, corpus
-    // with the injected exact copies unioned in.
-    "q146_cosine_dup_portable" -> lshPortableOracleSqlWith(
-      "SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings " +
-        "UNION ALL SELECT vec_id + 100000, list_transform(embedding, x -> CAST(x AS DOUBLE)) " +
-        "FROM embeddings WHERE vec_id < 20",
-      "0.95"),
+    // q53's recall path replayed end-to-end at bits 6: same threshold,
+    // corpus with the injected exact copies unioned in.
+    "q146_cosine_dup_portable" -> lshPairsOracleSql(embWithCopiesSql, "0.95", bits = 6, tables = 4),
     // capacity >= distinct items ⇒ Misra-Gries counts are exact ⇒ the
     // streaming candidate table equals this GROUP BY; err is the per-shard
     // MG bound floor(rows/(capacity+1)).
@@ -4666,45 +4661,86 @@ WHERE rank <= 5"""
       "FROM scored QUALIFY rank <= 5"
   }
 
-  /** DuckDB replay of the portable sign-LSH near-dup pipeline: plane
-    * literals from the same portablePlanes call as the Spark plan.
+  /** The embeddings as (vec_id, v DOUBLE[]) — the emb CTE of the sign-LSH
+    * replays; the second form adds q53/q146's injected exact copies.
     */
-  private lazy val lshPortableOracleSql: String =
-    lshPortableOracleSqlWith(
-      "SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings",
-      "0.25")
+  private lazy val embVectorsSql =
+    "SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings"
+  private lazy val embWithCopiesSql = embVectorsSql +
+    " UNION ALL SELECT vec_id + 100000, list_transform(embedding, x -> CAST(x AS DOUBLE)) " +
+    "FROM embeddings WHERE vec_id < 20"
 
-  /** DuckDB replay of the full portable sign-LSH near-dup pipeline
-    * (planes, signatures, bucket join, exact-cosine verify), parameterized
-    * by the emb CTE body and the cosine threshold — shared by q95 (raw
-    * corpus, low threshold) and q146 (injected exact copies, q53's 0.95
-    * recall path).
+  /** Shared CTE chain of the sign-LSH DuckDB replay — the ONLY definition
+    * of VectorFunctions' bucket relation in SQL: plane literals from the
+    * same portablePlanes call as the Spark plan, the sequential dot per
+    * (vector, table, plane), the signature per (vector, table) (`sig`),
+    * and the corpus buckets under the whole-bucket window cap (`keep`,
+    * interpolating VectorFunctions.DefaultMaxBucketSize). A dot is NULL,
+    * so its bit unset, unless the vector has the plane's length and no
+    * NULL element — Kernels.planeSigs' rule; `list_sum` alone would skip
+    * the NULL products `list_zip` pads in. A NULL vector has no `sig`
+    * rows, as `posexplode` of a NULL signature array emits none.
     */
-  private def lshPortableOracleSqlWith(embCte: String, threshold: String): String = {
-    val bits = 6; val tables = 4
+  private def lshCtes(embCte: String, bits: Int, tables: Int): String = {
     val planes = VectorFunctions.portablePlanes(64, bits, tables)
     val planeValues = (0 until tables).flatMap { t =>
       (0 until bits).map { b =>
         s"($t, $b, [${planes(t * bits + b).mkString(", ")}])"
       }
     }.mkString(", ")
-    val cos = "(CASE WHEN sqrt(list_sum(list_transform(va, x -> x * x))) * " +
+    s"emb AS ($embCte), " +
+      s"planes(t, b, w) AS (SELECT * FROM (VALUES $planeValues) AS p(t, b, w)), " +
+      "dots AS (SELECT vec_id, t, b, CASE WHEN len(v) = len(w) AND list_count(v) = len(v) " +
+      "THEN list_sum(list_transform(list_zip(v, w), p -> p[1] * p[2])) END AS d " +
+      "FROM emb CROSS JOIN planes WHERE v IS NOT NULL), " +
+      "sig AS (SELECT vec_id, t, CAST(SUM(CASE WHEN d >= 0 THEN (CAST(1 AS BIGINT) << CAST(b AS INTEGER)) " +
+      "ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS sig FROM dots GROUP BY vec_id, t), " +
+      "keep AS (SELECT vec_id, t, sig FROM (SELECT vec_id, t, sig, " +
+      "count(*) OVER (PARTITION BY t, sig) AS n FROM sig) " +
+      s"WHERE n <= ${VectorFunctions.DefaultMaxBucketSize})"
+  }
+
+  /** Exact cosine of the DOUBLE[] columns `va` and `vb`, in Kernels.cosine's
+    * operation order.
+    */
+  private lazy val lshCosSql =
+    "(CASE WHEN sqrt(list_sum(list_transform(va, x -> x * x))) * " +
       "sqrt(list_sum(list_transform(vb, x -> x * x))) = 0.0 THEN 0.0 " +
       "ELSE list_sum(list_transform(list_zip(va, vb), p -> p[1] * p[2])) " +
       "/ (sqrt(list_sum(list_transform(va, x -> x * x))) * " +
       "sqrt(list_sum(list_transform(vb, x -> x * x)))) END)"
-    s"WITH emb AS ($embCte), " +
-      s"planes(t, b, w) AS (SELECT * FROM (VALUES $planeValues) AS p(t, b, w)), " +
-      "dots AS (SELECT vec_id, t, b, list_sum(list_transform(list_zip(v, w), p -> p[1] * p[2])) AS d " +
-      "FROM emb CROSS JOIN planes), " +
-      "sig AS (SELECT vec_id, t, CAST(SUM(CASE WHEN d >= 0 THEN (CAST(1 AS BIGINT) << CAST(b AS INTEGER)) " +
-      "ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS sig FROM dots GROUP BY vec_id, t), " +
+
+  /** DuckDB replay of `cosineNearDupPairs` over the emb CTE body: the
+    * bucket self-join over `keep`, then the exact-cosine verify at
+    * `threshold` — q95 (raw corpus, low threshold), q146 and q53 (injected
+    * exact copies at 0.95).
+    */
+  private def lshPairsOracleSql(embCte: String, threshold: String,
+                                bits: Int, tables: Int): String =
+    s"WITH ${lshCtes(embCte, bits, tables)}, " +
       "cand AS (SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b " +
-      "FROM sig a JOIN sig b ON a.t = b.t AND a.sig = b.sig AND a.vec_id < b.vec_id), " +
+      "FROM keep a JOIN keep b ON a.t = b.t AND a.sig = b.sig AND a.vec_id < b.vec_id), " +
       "pairs AS (SELECT id_a, id_b, ea.v AS va, eb.v AS vb FROM cand " +
       "JOIN emb ea ON ea.vec_id = cand.id_a JOIN emb eb ON eb.vec_id = cand.id_b) " +
-      s"SELECT id_a, id_b, round($cos, 6) AS cosine FROM pairs WHERE $cos >= $threshold"
-  }
+      s"SELECT id_a, id_b, round($lshCosSql, 6) AS cosine FROM pairs WHERE $lshCosSql >= $threshold"
+
+  /** DuckDB replay of `lshTopK` with the corpus as the emb CTE body and the
+    * queries its rows with vec_id < `queriesBelow`: each query's uncapped
+    * signatures probe `keep`, and bucket-mates other than the query itself
+    * rank by (cosine desc, neighbor_id) — q51.
+    */
+  private def lshTopKOracleSql(embCte: String, queriesBelow: Int, k: Int,
+                               bits: Int, tables: Int): String =
+    s"WITH ${lshCtes(embCte, bits, tables)}, " +
+      "cand AS (SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id " +
+      "FROM sig q JOIN keep c ON q.t = c.t AND q.sig = c.sig " +
+      s"WHERE q.vec_id < $queriesBelow AND c.vec_id <> q.vec_id), " +
+      "pairs AS (SELECT query_id, neighbor_id, eq.v AS va, ec.v AS vb FROM cand " +
+      "JOIN emb eq ON eq.vec_id = cand.query_id JOIN emb ec ON ec.vec_id = cand.neighbor_id), " +
+      s"scored AS (SELECT query_id, neighbor_id, $lshCosSql AS c FROM pairs) " +
+      "SELECT query_id, neighbor_id, round(c, 6) AS cosine, " +
+      "CAST(row_number() OVER (PARTITION BY query_id ORDER BY c DESC, neighbor_id) AS INTEGER) AS rank " +
+      s"FROM scored QUALIFY rank <= $k"
 
   /** Shared CTE chain of the minhash DuckDB replay (hashing,
     * permutations, banding, hot-bucket exclusion, candidate join,

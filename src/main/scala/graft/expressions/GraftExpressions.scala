@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, TimeZoneAwareExpression, UnaryExpression, XxHash64Function}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GetArrayItem, Literal, TimeZoneAwareExpression, UnaryExpression, XxHash64Function}
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftshim.Shim
@@ -985,25 +985,6 @@ object Kernels {
     bestCid
   }
 
-  /** Sign-LSH signature: bit i = [dot(vec, plane_i) >= 0], sig = Σ bit·2^i —
-    * parity with the transform/aggregate formulation, where SQL orders a
-    * NaN dot above every number and so sets its bit.
-    */
-  def hyperplaneSig(vec: ArrayData, planes: Array[Array[Double]]): Long = {
-    var sig = 0L
-    var i = 0
-    while (i < planes.length) {
-      val plane = planes(i)
-      var dot = 0.0
-      var j = 0
-      val n = math.min(vec.numElements(), plane.length)
-      while (j < n) { dot += vec.getDouble(j) * plane(j); j += 1 }
-      if (!(dot < 0.0)) sig += (1L << i)
-      i += 1
-    }
-    sig
-  }
-
   /** Per-table sign-LSH signatures over a LITERAL plane matrix (the
     * PORTABLE basis, planes(t*bits + b) = table t's plane b): one compiled
     * loop over tables × bits × dim per row, replacing tables × bits
@@ -1274,11 +1255,15 @@ object GraftFunctions {
     kernel("minhashSig", longs, e(c), const(a), const(b), Literal(MinHash.P))
   }
   def cosine(a: Column, b: Column): Column = kernel("cosine", DoubleType, e(a), e(b))
-  def hyperplaneSignature(c: Column, dim: Int, bits: Int, seed: Long = 7L): Column = {
-    val rnd = new scala.util.Random(seed)
-    kernel("hyperplaneSig", LongType, e(c),
-      const(Array.fill(bits)(Array.fill(dim)(rnd.nextGaussian()))))
-  }
+  /** One `bits`-bit sign-LSH signature over `dim` Gaussian planes drawn
+    * from `Random(seed)` — table 0 of [[planeSigs]] over
+    * `VectorFunctions.portablePlanes(dim, bits, 1, seed)`, so a null
+    * element or a length other than `dim` leaves the bits it touches unset.
+    */
+  def hyperplaneSignature(c: Column, dim: Int, bits: Int, seed: Long = 7L): Column =
+    Shim.column(GetArrayItem(
+      e(planeSigs(c, graft.functions.VectorFunctions.portablePlanes(dim, bits, 1, seed), bits)),
+      Literal(0)))
   def planeSigs(c: Column, planes: Seq[Seq[Double]], bits: Int): Column =
     kernel("planeSigs", longs, e(c), const(planes.map(_.toArray).toArray), Literal(bits))
   def nearestCentroids(c: Column, cents: Array[Array[Double]], n: Int): Column =

@@ -15,11 +15,11 @@ import org.apache.spark.sql.types._
   * final per-query top-k (TakeOrdered-style, tiny). The LSH variant buckets
   * both sides by sign-pattern so each query only scans its bucket.
   *
-  * The hyperplane matrix is carried as ONE nested-array literal
-  * (`typedLit(Seq[Seq[Double]])` — a single Catalyst Literal holding
-  * ArrayData), and the signature is computed with higher-order functions over
-  * it. At dim=768 × 16 bits this is one constant, not 12k+ literal expression
-  * nodes, so the plan and codegen stay small at real embedding dims.
+  * The hyperplane matrix is carried as ONE kernel constant (all tables ×
+  * bits × dim doubles), and every table's signature comes from one compiled
+  * kernel call per row. At dim=768 × 16 bits this is one constant, not 12k+
+  * literal expression nodes, so the plan and codegen stay small at real
+  * embedding dims.
   */
 object VectorFunctions {
 
@@ -43,6 +43,13 @@ object VectorFunctions {
     * first binds on, and far below the broadcast-table ceiling.
     */
   val DefaultMaxCentroids: Int = 256
+
+  /** Default cap on a sign-LSH (table, signature) bucket before the bucket
+    * join ([[lshTopK]], [[cosineNearDupPairs]]) — the one definition the
+    * DuckDB oracles interpolate. Buckets over it are dropped whole, as in
+    * [[graft.operators.NearDedup.DefaultMaxBucketSize]]'s contract.
+    */
+  val DefaultMaxBucketSize: Int = 100000
 
   def dot(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0d), (acc, v) => acc + v)
@@ -547,15 +554,6 @@ object VectorFunctions {
     }
   }
 
-  /** The hyperplane matrix for sign-LSH as a single plan literal:
-    * `bits` rows of `dim` pseudo-random Gaussian components (deterministic
-    * per seed).
-    */
-  def hyperplanes(dim: Int, bits: Int, seed: Long): Column = {
-    val rnd = new scala.util.Random(seed)
-    typedLit(Seq.fill(bits)(Seq.fill(dim)(rnd.nextGaussian())))
-  }
-
   /** Plane values for the PORTABLE sign-LSH variant: one seeded RNG per
     * table. The same sequence parameterizes the Spark plan and the
     * generated oracle SQL, so both engines compute identical signatures
@@ -643,90 +641,73 @@ object VectorFunctions {
         round(col("cosine"), 6).as("cosine"), col("rank"))
   }
 
-  /** Embedding near-dup pairs on the portable plane basis: signature =
-    * Σ_b [dot(v, plane_b) >= 0] << b per table via the sequential-fold HOF
-    * dot (mirrors SQL list_sum over list_zip exactly — the q50/q92
-    * precedent), bucket-join per (table, signature), exact-cosine verify.
-    * Same semantics as `cosineNearDupPairs`; exists so the whole
-    * bucketed-ANN pipeline is replayable by an external SQL engine.
+  /** (id, __v) rows of `df`, the vector widened to double element-wise
+    * unless it is array<double> already.
     */
-  def cosineNearDupPortable(df: DataFrame, idCol: String, vecCol: String,
-                            dim: Int, threshold: Double,
-                            bits: Int = 6, tables: Int = 4,
-                            seed: Long = 7L): DataFrame = {
-    val planes = portablePlanes(dim, bits, tables, seed)
-    val v = df.select(col(idCol).as("id"),
-      transform(col(vecCol), x => x.cast("double")).as("__v"))
-    // Round 16: the tables × bits plane projections run in ONE compiled
-    // loop per row (Kernels.planeSigs — bit-parity with the zip_with/aggregate
-    // HOF fold the oracle replays, spec-pinned), the scan is spread before
-    // the kernel (a 2-split embeddings scan serialized it on 2 of 32
-    // cores), and the bucketed keys (id, t, sig — 24 bytes/row, the
-    // hammingPairs64 size class) are materialized once: the candidate
-    // self-join's broadcast side re-executed the whole projection pipeline
-    // otherwise, and the triplicated subtree dominated driver planning
-    // time at bench SF. The vector payloads (vA/vB) stay un-materialized —
-    // the rejoin re-scans, the cast is free.
-    val bucketed = graft.operators.Tuning.spread(v, col("id"))
-      .select(col("id"), posexplode(
-        graft.expressions.GraftFunctions.planeSigs(col("__v"), planes, bits)))
-      .select(col("id"), col("pos").cast("int").as("t"), col("col").as("sig"))
-      .localCheckpoint()
-    val a = bucketed.select(col("t"), col("sig"), col("id").as("id_a"))
-    val b = bucketed.select(col("t"), col("sig"), col("id").as("id_b"))
-    val cand = a.join(b, Seq("t", "sig")).filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
-    val vA = v.select(col("id").as("id_a"), col("__v").as("__va"))
-    val vB = v.select(col("id").as("id_b"), col("__v").as("__vb"))
-    cand.join(vA, Seq("id_a")).join(vB, Seq("id_b"))
-      .withColumn("cosine", cosine(col("__va"), col("__vb")))
-      .filter(col("cosine") >= threshold)
-      .select(col("id_a"), col("id_b"), round(col("cosine"), 6).as("cosine"))
+  private def vectors(df: DataFrame, idCol: String, vecCol: String): DataFrame = {
+    val v = df.schema(vecCol).dataType match {
+      case ArrayType(DoubleType, _) => col(vecCol)
+      case _ => transform(col(vecCol), x => x.cast("double"))
+    }
+    df.select(col(idCol).as("id"), v.as("__v"))
   }
 
-  /** Random-hyperplane signature: `bits` sign bits of projections onto fixed
-    * pseudo-random hyperplanes (Charikar 2002 — sign-LSH). Cosine-similar
-    * vectors agree on most bits, so bucketing on the signature confines each
-    * query to a tiny corpus slice. Computed as one fold over the literal
-    * plane matrix: sig = Σ_i [dot(vec, plane_i) >= 0] << i.
+  /** The sign-LSH bucket relation of (id, __v) rows: one (id, t, sig) row
+    * per table, where sig = Σ_b [dot(v, plane_b) >= 0] << b over table t's
+    * planes of the portable basis ([[portablePlanes]]), so a DuckDB replay
+    * computes the same signatures (SparkEntry's lshCtes). All tables × bits
+    * projections run in ONE compiled loop per row (Kernels.planeSigs,
+    * bit-parity with the zip_with/aggregate HOF fold, spec-pinned). A
+    * null vector has no signature and so no rows; a null element or a
+    * length other than `dim` leaves the bits it touches unset.
     */
-  def hyperplaneSignature(vec: Column, dim: Int, bits: Int, seed: Long = 7L): Column =
-    graft.expressions.GraftFunctions.hyperplaneSignature(vec, dim, bits, seed)
+  private def planeBuckets(v: DataFrame, dim: Int, bits: Int, tables: Int): DataFrame =
+    v.select(col("id"), posexplode(graft.expressions.GraftFunctions
+        .planeSigs(col("__v"), portablePlanes(dim, bits, tables), bits)))
+      .select(col("id"), col("pos").cast("int").as("t"), col("col").as("sig"))
 
-  /** Explode a (id, vec) side into `tables` (table, signature) bucket rows —
-    * ids only; vectors are re-joined after candidate dedup.
+  /** The sign-LSH buckets of a corpus with hot buckets dropped whole by
+    * [[graft.operators.NearDedup.windowCapped]] over (t, sig); the
+    * returned pair is the observed and the unobserved copy of the kept
+    * rows. The scan is spread before the kernel (a 2-split embeddings scan
+    * serialized it on 2 of 32 cores). The window's (t, sig) exchange,
+    * which the bucket join reads too, is an explicit repartition to the
+    * spread width: AQE coalesces a required exchange of these narrow rows
+    * down to one partition, and at sf1 the bucket join then streamed from
+    * that one task (q95 5.5 s → 11 s on 4 cores).
     */
-  private def bucketRows(side: DataFrame, idCol: String, vecCol: String,
-                         dim: Int, bits: Int, tables: Int, idAs: String): DataFrame =
-    side.select(col(idCol).as(idAs), col(vecCol).as("__v"))
-      .withColumn("__t", explode(array(Seq.tabulate(tables) { t =>
-        struct(lit(t).as("ti"),
-          hyperplaneSignature(col("__v"), dim, bits, seed = 7L + t).as("sig"))
-      }: _*)))
-      .select(col("__t"), col(idAs))
+  private def cappedBuckets(v: DataFrame, dim: Int, bits: Int, tables: Int,
+                            maxBucketSize: Int): (DataFrame, DataFrame) =
+    graft.operators.NearDedup.windowCapped(
+      planeBuckets(graft.operators.Tuning.spread(v, col("id")), dim, bits, tables)
+        .repartition(graft.operators.Tuning.spreadTarget(v.sparkSession), col("t"), col("sig")),
+      Seq("t", "sig"), maxBucketSize)
 
-  /** LSH-bucketed ANN: both sides keyed by hyperplane signature; candidates
+  /** LSH-bucketed ANN: both sides keyed by sign-LSH signature; candidates
     * are bucket-mates in any of `tables` independent hash tables — id-only
     * through the candidate shuffle, vectors re-joined for the exact-cosine
-    * verification, reduced to per-query top-k. Multi-table union trades
-    * recall vs cost — the standard sign-LSH arrangement.
+    * verification, reduced to per-query top-k by (cosine desc,
+    * neighbor_id). Multi-table union trades recall vs cost — the standard
+    * sign-LSH arrangement. The corpus side's hot buckets are dropped whole
+    * (e.g. all-zero vectors collapse to one signature); the query side
+    * probes what is kept. The whole pipeline replays in DuckDB.
     */
   def lshTopK(corpus: DataFrame, queries: DataFrame,
               idCol: String, vecCol: String, dim: Int, k: Int,
               bits: Int = 12, tables: Int = 4,
-              maxBucketSize: Int = 100000): DataFrame = {
-    val c = bucketRows(corpus, idCol, vecCol, dim, bits, tables, "neighbor_id")
-    val q = bucketRows(queries, idCol, vecCol, dim, bits, tables, "query_id")
-    // Cap degenerate buckets (e.g. all-zero vectors collapse to one signature).
-    val hot = c.groupBy(col("__t")).count().filter(col("count") > maxBucketSize)
-      .select(col("__t"))
-    val cand = c.join(broadcast(hot), Seq("__t"), "left_anti")
-      .join(q, Seq("__t"))
+              maxBucketSize: Int = DefaultMaxBucketSize): DataFrame = {
+    val cv = vectors(corpus, idCol, vecCol)
+    val qv = vectors(queries, idCol, vecCol)
+    val c = cappedBuckets(cv, dim, bits, tables, maxBucketSize)._1
+      .select(col("t"), col("sig"), col("id").as("neighbor_id"))
+    val q = planeBuckets(qv, dim, bits, tables)
+      .select(col("t"), col("sig"), col("id").as("query_id"))
+    val cand = c.join(q, Seq("t", "sig"))
       .filter(col("neighbor_id") =!= col("query_id"))
-      .select("query_id", "neighbor_id").dropDuplicates("query_id", "neighbor_id")
-    val cv = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("__cv"))
-    val qv = queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv"))
-    val scored = cand.join(cv, Seq("neighbor_id")).join(broadcast(qv), Seq("query_id"))
+      .select("query_id", "neighbor_id").distinct()
+    val scored = cand
+      .join(cv.select(col("id").as("neighbor_id"), col("__v").as("__cv")), Seq("neighbor_id"))
+      .join(broadcast(qv.select(col("id").as("query_id"), col("__v").as("__qv"))), Seq("query_id"))
       .withColumn("cosine", cosine(col("__qv"), col("__cv")))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cosine").desc, col("neighbor_id").asc)
@@ -735,23 +716,25 @@ object VectorFunctions {
       .select(col("query_id"), col("neighbor_id"), round(col("cosine"), 6).as("cosine"), col("rank"))
   }
 
-  /** Embedding-cosine near-duplicate pairs via LSH buckets: pairs whose
-    * cosine >= threshold, discovered through shared buckets (no O(n²) scan).
-    * Pair-dedup on ids only; vectors re-joined for verification.
+  /** Embedding-cosine near-duplicate pairs via sign-LSH buckets: (id_a,
+    * id_b, cosine) with id_a < id_b for bucket-mates whose exact cosine
+    * reaches `threshold` (no O(n²) scan). Hot buckets are dropped whole
+    * before the bucket self-join; pair-dedup runs on ids only and the
+    * vectors are re-joined for the verify. The bucket relation is not
+    * materialized: both self-join sides read it through one exchange.
+    * The whole pipeline replays in DuckDB.
     */
   def cosineNearDupPairs(df: DataFrame, idCol: String, vecCol: String, dim: Int,
                          threshold: Double, bits: Int = 10, tables: Int = 4,
-                         maxBucketSize: Int = 100000): DataFrame = {
-    val side = bucketRows(df, idCol, vecCol, dim, bits, tables, "id")
-    val hot = side.groupBy(col("__t")).count().filter(col("count") > maxBucketSize)
-      .select(col("__t"))
-    val capped = side.join(broadcast(hot), Seq("__t"), "left_anti")
-    val a = capped.select(col("__t"), col("id").as("id_a"))
-    val b = capped.select(col("__t"), col("id").as("id_b"))
-    val cand = a.join(b, Seq("__t")).filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").dropDuplicates("id_a", "id_b")
-    val vA = df.select(col(idCol).as("id_a"), col(vecCol).as("__va"))
-    val vB = df.select(col(idCol).as("id_b"), col(vecCol).as("__vb"))
+                         maxBucketSize: Int = DefaultMaxBucketSize): DataFrame = {
+    val v = vectors(df, idCol, vecCol)
+    val (kept, keptUnobserved) = cappedBuckets(v, dim, bits, tables, maxBucketSize)
+    val a = kept.select(col("t"), col("sig"), col("id").as("id_a"))
+    val b = keptUnobserved.select(col("t"), col("sig"), col("id").as("id_b"))
+    val cand = a.join(b, Seq("t", "sig")).filter(col("id_a") < col("id_b"))
+      .select("id_a", "id_b").distinct()
+    val vA = v.select(col("id").as("id_a"), col("__v").as("__va"))
+    val vB = v.select(col("id").as("id_b"), col("__v").as("__vb"))
     cand.join(vA, Seq("id_a")).join(vB, Seq("id_b"))
       .withColumn("cosine", cosine(col("__va"), col("__vb")))
       .filter(col("cosine") >= threshold)

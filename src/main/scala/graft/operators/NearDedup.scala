@@ -79,6 +79,37 @@ object NearDedup {
       .select("id_a", "id_b").dropDuplicates("id_a", "id_b")
   }
 
+  /** The whole-bucket cap of the LSH self-joins: rows of every `keys`
+    * bucket holding more than `maxBucketSize` rows are dropped, by a
+    * count-over-`keys` window filter. The window rides the exchange a
+    * `keys`-equi-join needs anyway, so the bucket relation under it runs
+    * once; an aggregate + broadcast anti-join would plan a second branch
+    * of it. The trade: a hot bucket's rows buffer in one window task,
+    * spill-bounded and linear. The DuckDB oracles replay the rule as
+    * `count(*) OVER (PARTITION BY keys) <= cap`.
+    *
+    * Returns the kept rows twice, without the count. The first carries
+    * the always-on dropped-volume observe (`lsh_dropped_buckets_*`,
+    * readable from a QueryExecutionListener after the action, no extra
+    * pass): every row of a hot bucket adds 1 to `dropped_rows` and 1/n to
+    * `dropped_buckets`, rounded. The second is the same rows unobserved,
+    * for the other side of a self-join: exchange reuse happens below the
+    * window, so the count runs once per join side, and an observe on both
+    * would sum every row twice under one metric name.
+    */
+  private[graft] def windowCapped(buckets: DataFrame, keys: Seq[String],
+                                  maxBucketSize: Int): (DataFrame, DataFrame) = {
+    val w = org.apache.spark.sql.expressions.Window.partitionBy(keys.map(col): _*)
+    val hot = col("__n") > maxBucketSize
+    val counted = buckets.withColumn("__n", count(lit(1)).over(w))
+    val observed = counted
+      .observe(s"lsh_dropped_buckets_${dropSeq.incrementAndGet()}",
+        round(sum(when(hot, lit(1.0) / col("__n")).otherwise(lit(0.0))))
+          .cast(LongType).as("dropped_buckets"),
+        sum(when(hot, lit(1L)).otherwise(lit(0L))).as("dropped_rows"))
+    (observed.filter(!hot).drop("__n"), counted.filter(!hot).drop("__n"))
+  }
+
   /** MinHash-LSH near-dup pairs over (idCol, textCol): (id_a, id_b,
     * jaccard) for candidate pairs whose exact shingle Jaccard reaches
     * `threshold`, id_a < id_b, deduped across bands, jaccard rounded to 4
@@ -97,16 +128,9 @@ object NearDedup {
     * `maxBucketSize`, before the self-join — the same deterministic
     * whole-bucket rule as [[simhashPairsPortable]], so the oracle SQL
     * replays it exactly; a bucket of n identical docs would otherwise cost
-    * n²/2 candidate rows. The cap is a count-over-(band, bk) window filter,
-    * not an aggregate + broadcast anti-join: the anti-join's bucket-size
-    * branch ran the signature kernel a second time, while the window rides
-    * the exchange the candidate self-join needs anyway and both join sides
-    * share ONE signature pass. The trade: a hot bucket's (id, band, bk)
-    * rows buffer in one window task, spill-bounded and linear. The dropped
-    * volume is observed on the window (`lsh_dropped_buckets_*`, readable
-    * from a QueryExecutionListener after the action, no extra pass): every
-    * row of a hot bucket adds 1 to `dropped_rows` and 1/n to
-    * `dropped_buckets`, rounded.
+    * n²/2 candidate rows. The cap is [[windowCapped]] over (band, bk): the
+    * anti-join cap it replaced ran the signature kernel a second time,
+    * while the window lets both join sides share ONE signature pass.
     */
   def minhashPairs(df: DataFrame, idCol: String, textCol: String,
                    shingleSize: Int = 3, numPerms: Int = 32,
@@ -117,20 +141,9 @@ object NearDedup {
     // the scan, cheap to plan for both self-join sides, which share them at
     // runtime through exchange reuse.
     val banded = minhashBands(sh, numPerms, bands, MinHash.Seed)
-    val wB = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("band"), col("bk"))
-    val hot = col("__n") > maxBucketSize
-    // Exchange reuse happens below the window, so the window count runs
-    // once per join side. The observe rides the a side only: on both, its
-    // sums would run twice per banded row under one metric name.
-    val counted = banded.withColumn("__n", count(lit(1)).over(wB))
-    val aSide = counted
-      .observe(s"lsh_dropped_buckets_${dropSeq.incrementAndGet()}",
-        round(sum(when(hot, lit(1.0) / col("__n")).otherwise(lit(0.0))))
-          .cast(LongType).as("dropped_buckets"),
-        sum(when(hot, lit(1L)).otherwise(lit(0L))).as("dropped_rows"))
-      .filter(!hot).select(col("band"), col("bk"), col("id").as("id_a"))
-    val bSide = counted.filter(!hot).select(col("band"), col("bk"), col("id").as("id_b"))
+    val (kept, keptUnobserved) = windowCapped(banded, Seq("band", "bk"), maxBucketSize)
+    val aSide = kept.select(col("band"), col("bk"), col("id").as("id_a"))
+    val bSide = keptUnobserved.select(col("band"), col("bk"), col("id").as("id_b"))
     val cand0 = aSide.join(bSide, Seq("band", "bk"))
       .filter(col("id_a") < col("id_b"))
       .select("id_a", "id_b").distinct()

@@ -167,6 +167,30 @@ class CurationSpec extends SparkSpec {
     assert(pairs == Set((100L, 101L)), s"expected only the honest pair, got $pairs")
   }
 
+  test("sign-LSH hot-bucket cap drops a bucket of identical vectors whole") {
+    import graft.functions.VectorFunctions
+    // n identical vectors share one (table, signature) bucket in every
+    // table; a few distinct vectors sit elsewhere. Over the cap the clone
+    // buckets are dropped whole, so neither the pair search nor the top-k
+    // ever sees a clone; under it the full clique comes back.
+    val clone = Seq(0.3, -1.2, 0.7, 2.0)
+    val rnd = new scala.util.Random(5)
+    val others = (1001L to 1010L).map(i => (i, Seq.fill(4)(rnd.nextGaussian())))
+    def corpus(n: Int) = ((1L to n).map(i => (i, clone)) ++ others).toDF("id", "v")
+    def pairs(n: Int) = VectorFunctions.cosineNearDupPairs(corpus(n), "id", "v", dim = 4,
+      threshold = 0.999, bits = 4, tables = 4, maxBucketSize = 10)
+      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
+    def neighbours(n: Int, cap: Int) = VectorFunctions.lshTopK(corpus(n),
+        Seq((0L, clone)).toDF("id", "v"), "id", "v", dim = 4, k = 3, bits = 4, tables = 4,
+        maxBucketSize = cap)
+      .select("neighbor_id").as[Long].collect().toSeq
+
+    assert(pairs(40).isEmpty, "a 40-clone bucket survived a cap of 10")
+    assert(!neighbours(40, cap = 10).exists(_ <= 40L), "a clone survived a cap of 10")
+    assert(neighbours(40, cap = 100).toSet == Set(1L, 2L, 3L))
+    assert(pairs(5) == (for (a <- 1L to 5L; b <- a + 1 to 5L) yield (a, b)).toSet)
+  }
+
   test("topKPerGroup keeps exactly k under a deterministic order") {
     val df = Seq(("a", 1L, 10L), ("a", 2L, 30L), ("a", 3L, 30L), ("a", 4L, 5L),
       ("b", 5L, 1L)).toDF("g", "id", "score")

@@ -535,8 +535,6 @@ class ExpressionsSpec extends SparkSpec {
     val gramTable = new java.util.HashMap[org.apache.spark.unsafe.types.UTF8String, java.lang.Long]()
     gramCounts.foreach { case (g, c) =>
       gramTable.put(org.apache.spark.unsafe.types.UTF8String.fromString(g), java.lang.Long.valueOf(c)) }
-    val hpBits = 6
-    val hpPlanes = { val r = new scala.util.Random(7L); Array.fill(hpBits)(Array.fill(dim)(r.nextGaussian())) }
     val (pmA, pmB) = graft.expressions.MinHash.perms(8, 42L)
 
     // reference building blocks
@@ -664,11 +662,6 @@ class ExpressionsSpec extends SparkSpec {
         val (a, b) = prefixes(c(0), c(1))
         cosHof(a, b)
       }),
-      KernelCase("hyperplaneSig", "LongType", in => Seq(in.va), c => G.hyperplaneSignature(c(0), dim, hpBits),
-        c => hpPlanes.indices.map { i =>
-          val (v, pl) = prefixes(c(0), typedLit(hpPlanes(i).toSeq))
-          when(dotHof(v, pl) >= 0, lit(1L << i)).otherwise(lit(0L))
-        }.reduce(_ + _)),
       KernelCase("planeSigs", "ArrayType(LongType,false)", in => Seq(in.va), c => G.planeSigs(c(0), planes, 3),
         c => array((0 until planes.length / 3).map { t =>
           (0 until 3).map { b =>

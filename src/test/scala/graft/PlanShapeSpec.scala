@@ -160,6 +160,21 @@ class PlanShapeSpec extends SparkSpec {
     }
   }
 
+  test("q51/q53/q95 sign-LSH buckets on the plane kernel under the windowed cap") {
+    // One bucket relation on the portable plane basis: the hyperplane
+    // kernel and its aggregate + anti-join cap are gone, the corpus side
+    // runs the plane kernel once (both self-join sides share its
+    // exchange), and the dropped-bucket observe rides one side. lshTopK's
+    // query side signs its own rows, so q51 has one more kernel call.
+    for ((q, kernels) <- Seq("q51_lsh_topk" -> 2, "q53_cosine_neardup" -> 1, "q95_lsh_portable" -> 1)) {
+      val p = finalPlanOf(q)
+      assert(occurrences(p, "graft_plane_sigs(") == kernels, s"$q plane kernel count in:\n$p")
+      assert(!p.contains("graft_hyperplane_sig("), s"$q hyperplane kernel in:\n$p")
+      assert(occurrences(p, "CollectMetrics lsh_dropped_buckets_") == 1,
+        s"$q dropped-bucket observe count in:\n$p")
+    }
+  }
+
   test("connected components symmetrize minhash edges in one pass, verifying once") {
     // A two-branch union shared the pair pipeline's exchanges, but the
     // stage after them (candidate read, both shingle rejoins, the verify
