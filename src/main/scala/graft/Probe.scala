@@ -75,7 +75,10 @@ object Probe {
     // wall time, stage/task counts, and the job group/description — the
     // "where do a multi-action query's seconds go" view (localCheckpoint
     // materializations, loop rounds, and streaming micro-batches are all
-    // separate jobs that a single wall number can't separate).
+    // separate jobs that a single wall number can't separate). Each stage
+    // line adds the stage's executor CPU (summed over its tasks), the
+    // records it read (scan input plus shuffle read) and the shuffle
+    // records it wrote: which operator's rows cost the CPU.
     val jobProf = sys.env.get("SPARK_GRAFT_JOBPROF").contains("1")
     val jobStart = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
     val jobLines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
@@ -99,8 +102,11 @@ object Probe {
           val si = sc.stageInfo
           val ms = (for (a <- si.completionTime; b <- si.submissionTime) yield a - b)
             .getOrElse(-1L)
-          jobLines.add(f"    stage ${si.stageId}%4d ${ms / 1000.0}%7.3f s " +
-            f"tasks=${si.numTasks}%4d  ${si.name.take(110)}")
+          val m = si.taskMetrics // the stage's sums over its tasks
+          jobLines.add(f"    stage ${si.stageId}%4d ${ms / 1000.0}%7.3f s tasks=${si.numTasks}%4d " +
+            f"cpu=${m.executorCpuTime / 1e9}%7.3f s " +
+            f"read=${m.inputMetrics.recordsRead + m.shuffleReadMetrics.recordsRead}%9d " +
+            f"shuffle_w=${m.shuffleWriteMetrics.recordsWritten}%9d  ${si.name.take(110)}")
         }
       })
     def drainJobs(): Unit = if (jobProf) {

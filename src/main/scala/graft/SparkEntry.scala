@@ -1364,7 +1364,7 @@ object SparkEntry {
       NearDedup.simhashPairsPortable(t(s, d, "documents"), "doc_id", "text")),
     "q95_lsh_portable" -> ((s, d) =>
       // sign-LSH bucketed embedding near-dup on shared plane literals —
-      // signatures, bucket join, and cosine verify all oracle-replayed
+      // signatures, bucket pairs, and cosine verify all oracle-replayed
       VectorFunctions.cosineNearDupPairs(t(s, d, "embeddings"),
         "vec_id", "embedding", dim = 64, threshold = 0.25, bits = 6)),
     "q96_ivf_portable" -> ((s, d) => {
@@ -2104,9 +2104,9 @@ object SparkEntry {
     "q146_cosine_dup_portable" -> ((s, d) => {
       // q53's injected-exact-copy recall path at bits 6: copies
       // (vec_id+100000) hash to identical signatures in every table, so
-      // the bucket join MUST surface them and the 0.95-threshold verify
+      // the bucket pair search MUST surface them and the 0.95-threshold verify
       // keeps them (cosine exactly 1.0). The full pipeline — planes,
-      // signatures, hot-bucket cap, candidate join, exact verify — replays
+      // signatures, hot-bucket cap, candidate pairs, exact verify — replays
       // bit-for-bit in DuckDB, as q53's does at bits 8.
       val emb = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
       val dups = emb.filter(col("vec_id") < 20)
@@ -4711,7 +4711,8 @@ WHERE rank <= 5"""
       "sqrt(list_sum(list_transform(vb, x -> x * x)))) END)"
 
   /** DuckDB replay of `cosineNearDupPairs` over the emb CTE body: the
-    * bucket self-join over `keep`, then the exact-cosine verify at
+    * bucket self-join over `keep` (the same pairs `bucketPairs` reads from
+    * each bucket's id list), then the exact-cosine verify at
     * `threshold` — q95 (raw corpus, low threshold), q146 and q53 (injected
     * exact copies at 0.95).
     */

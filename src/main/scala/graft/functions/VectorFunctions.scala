@@ -667,17 +667,16 @@ object VectorFunctions {
       .select(col("id"), col("pos").cast("int").as("t"), col("col").as("sig"))
 
   /** The sign-LSH buckets of a corpus with hot buckets dropped whole by
-    * [[graft.operators.NearDedup.windowCapped]] over (t, sig); the
-    * returned pair is the observed and the unobserved copy of the kept
-    * rows. The scan is spread before the kernel (a 2-split embeddings scan
-    * serialized it on 2 of 32 cores). The window's (t, sig) exchange,
-    * which the bucket join reads too, is an explicit repartition to the
-    * spread width: AQE coalesces a required exchange of these narrow rows
-    * down to one partition, and at sf1 the bucket join then streamed from
-    * that one task (q95 5.5 s → 11 s on 4 cores).
+    * [[graft.operators.NearDedup.windowCapped]] over (t, sig). The scan is
+    * spread before the kernel (a 2-split embeddings scan serialized it on
+    * 2 of 32 cores). The window's (t, sig) exchange, which the bucket
+    * search above it reads too, is an explicit repartition to the spread
+    * width: AQE coalesces a required exchange of these narrow rows down to
+    * one partition, and at sf1 the bucket join then streamed from that one
+    * task (q95 5.5 s → 11 s on 4 cores).
     */
   private def cappedBuckets(v: DataFrame, dim: Int, bits: Int, tables: Int,
-                            maxBucketSize: Int): (DataFrame, DataFrame) =
+                            maxBucketSize: Int): DataFrame =
     graft.operators.NearDedup.windowCapped(
       planeBuckets(graft.operators.Tuning.spread(v, col("id")), dim, bits, tables)
         .repartition(graft.operators.Tuning.spreadTarget(v.sparkSession), col("t"), col("sig")),
@@ -698,7 +697,7 @@ object VectorFunctions {
               maxBucketSize: Int = DefaultMaxBucketSize): DataFrame = {
     val cv = vectors(corpus, idCol, vecCol)
     val qv = vectors(queries, idCol, vecCol)
-    val c = cappedBuckets(cv, dim, bits, tables, maxBucketSize)._1
+    val c = cappedBuckets(cv, dim, bits, tables, maxBucketSize)
       .select(col("t"), col("sig"), col("id").as("neighbor_id"))
     val q = planeBuckets(qv, dim, bits, tables)
       .select(col("t"), col("sig"), col("id").as("query_id"))
@@ -718,21 +717,19 @@ object VectorFunctions {
 
   /** Embedding-cosine near-duplicate pairs via sign-LSH buckets: (id_a,
     * id_b, cosine) with id_a < id_b for bucket-mates whose exact cosine
-    * reaches `threshold` (no O(n²) scan). Hot buckets are dropped whole
-    * before the bucket self-join; pair-dedup runs on ids only and the
-    * vectors are re-joined for the verify. The bucket relation is not
-    * materialized: both self-join sides read it through one exchange.
-    * The whole pipeline replays in DuckDB.
+    * reaches `threshold` (no O(n²) scan). Hot buckets are dropped whole,
+    * then each kept bucket's pairs come from its sorted id list
+    * ([[graft.operators.NearDedup.bucketPairs]], one read of the capped
+    * relation, no self-join); pair-dedup runs on ids only and the
+    * vectors are re-joined for the verify. The whole pipeline replays in
+    * DuckDB.
     */
   def cosineNearDupPairs(df: DataFrame, idCol: String, vecCol: String, dim: Int,
                          threshold: Double, bits: Int = 10, tables: Int = 4,
                          maxBucketSize: Int = DefaultMaxBucketSize): DataFrame = {
     val v = vectors(df, idCol, vecCol)
-    val (kept, keptUnobserved) = cappedBuckets(v, dim, bits, tables, maxBucketSize)
-    val a = kept.select(col("t"), col("sig"), col("id").as("id_a"))
-    val b = keptUnobserved.select(col("t"), col("sig"), col("id").as("id_b"))
-    val cand = a.join(b, Seq("t", "sig")).filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
+    val cand = graft.operators.NearDedup.bucketPairs(
+      cappedBuckets(v, dim, bits, tables, maxBucketSize), Seq("t", "sig"))
     val vA = v.select(col("id").as("id_a"), col("__v").as("__va"))
     val vB = v.select(col("id").as("id_b"), col("__v").as("__vb"))
     cand.join(vA, Seq("id_a")).join(vB, Seq("id_b"))

@@ -11,16 +11,17 @@ import graft.functions.TextFunctions
   *
   *  - a minhash signature is one compiled kernel call per row over the
   *    shingle array (Kernels.minhashSig, one narrow map, no UDFs);
-  *  - candidate generation is `explode(bands) -> groupBy(band) -> self-join
-  *    within bucket`, the standard LSH shape: the shuffle is on (band-index,
-  *    band-hash), whose cardinality scales with document count, never with
-  *    the quadratic pair space;
+  *  - candidate generation is `explode(bands) -> groupBy(band, bk) ->
+  *    pairs from each bucket's sorted id list` ([[bucketPairs]]), the
+  *    standard LSH shape: the shuffle is on (band-index, band-hash), whose
+  *    cardinality scales with document count, never with the quadratic
+  *    pair space;
   *  - candidate pairs are generated and deduplicated on (id_a, id_b) ONLY —
   *    the heavy payloads (shingle arrays / embedding vectors) are re-joined
   *    AFTER the pair-dedup, so they never ride through the candidate shuffle;
   *  - degenerate LSH buckets (e.g. all-empty/boilerplate docs hashing to one
   *    band value) are capped: any bucket larger than `maxBucketSize` is
-  *    dropped before the in-bucket self-join, bounding the worst case at
+  *    dropped before the in-bucket pair search, bounding the worst case at
   *    O(buckets * cap²) instead of O(n²). Dropped-bucket volume matters at
   *    100 TB, so it is surfaced via an `observe` metric and a WARN log.
   *  - exact Jaccard / Hamming verification runs only on candidate pairs.
@@ -30,10 +31,11 @@ import graft.functions.TextFunctions
   */
 object NearDedup {
 
-  /** Default cap on LSH bucket size before the in-bucket self-join —
+  /** Default cap on LSH bucket size before the in-bucket pair search —
     * shared by the aggregate+anti-join caps, the window-count caps, AND
     * the DuckDB oracle CTEs (SparkEntry interpolates this constant into
-    * the keptbk SQL), so the two sides cannot drift.
+    * the keptbk SQL), so the two sides cannot drift. Under the window cap
+    * it also bounds the id list [[bucketPairs]] collects per bucket.
     *
     * CONTRACT: buckets over the cap are dropped WHOLE — their members are
     * never compared, so a corpus dominated by >cap near-identical docs is
@@ -79,36 +81,54 @@ object NearDedup {
       .select("id_a", "id_b").dropDuplicates("id_a", "id_b")
   }
 
-  /** The whole-bucket cap of the LSH self-joins: rows of every `keys`
-    * bucket holding more than `maxBucketSize` rows are dropped, by a
-    * count-over-`keys` window filter. The window rides the exchange a
-    * `keys`-equi-join needs anyway, so the bucket relation under it runs
-    * once; an aggregate + broadcast anti-join would plan a second branch
-    * of it. The trade: a hot bucket's rows buffer in one window task,
+  /** The whole-bucket cap of the LSH bucket searches: rows of every
+    * `keys` bucket holding more than `maxBucketSize` rows are dropped, by
+    * a count-over-`keys` window filter, before anything is collected or
+    * joined. The window's `keys` exchange is the one the bucket search
+    * above it needs anyway ([[bucketPairs]]' aggregate, or a
+    * `keys`-equi-join), so the bucket relation under it runs once; an
+    * aggregate + broadcast anti-join would plan a second branch of it.
+    * The trade: a hot bucket's rows buffer in one window task,
     * spill-bounded and linear. The DuckDB oracles replay the rule as
     * `count(*) OVER (PARTITION BY keys) <= cap`.
     *
-    * Returns the kept rows twice, without the count. The first carries
-    * the always-on dropped-volume observe (`lsh_dropped_buckets_*`,
-    * readable from a QueryExecutionListener after the action, no extra
-    * pass): every row of a hot bucket adds 1 to `dropped_rows` and 1/n to
-    * `dropped_buckets`, rounded. The second is the same rows unobserved,
-    * for the other side of a self-join: exchange reuse happens below the
-    * window, so the count runs once per join side, and an observe on both
-    * would sum every row twice under one metric name.
+    * Returns the kept rows, without the count, carrying the always-on
+    * dropped-volume observe (`lsh_dropped_buckets_*`, readable from a
+    * QueryExecutionListener after the action, no extra pass): every row
+    * of a hot bucket adds 1 to `dropped_rows` and 1/n to
+    * `dropped_buckets`, rounded.
     */
   private[graft] def windowCapped(buckets: DataFrame, keys: Seq[String],
-                                  maxBucketSize: Int): (DataFrame, DataFrame) = {
+                                  maxBucketSize: Int): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window.partitionBy(keys.map(col): _*)
     val hot = col("__n") > maxBucketSize
-    val counted = buckets.withColumn("__n", count(lit(1)).over(w))
-    val observed = counted
+    buckets.withColumn("__n", count(lit(1)).over(w))
       .observe(s"lsh_dropped_buckets_${dropSeq.incrementAndGet()}",
         round(sum(when(hot, lit(1.0) / col("__n")).otherwise(lit(0.0))))
           .cast(LongType).as("dropped_buckets"),
         sum(when(hot, lit(1L)).otherwise(lit(0L))).as("dropped_rows"))
-    (observed.filter(!hot).drop("__n"), counted.filter(!hot).drop("__n"))
+      .filter(!hot).drop("__n")
   }
+
+  /** Deduplicated (id_a, id_b) pairs, id_a < id_b, of the `id`s sharing
+    * a `keys` bucket of `kept` ([[windowCapped]]'s output) — what a
+    * `keys` self-join of `kept` yields, read once. Each bucket's ids are
+    * collected into one sorted list (at most the cap's number of ids;
+    * the aggregate reuses the window's `keys` partitioning, so no new
+    * exchange), and each id pairs with the ids after it. The self-join
+    * it replaced ran the window and its sort once per join side
+    * (exchange reuse sits below the window) and broadcast one side.
+    * `sort_array` is compiled; `array_sort` would run an interpreted
+    * lambda. A repeated id in a bucket pairs with nothing new, and null
+    * ids are never collected. PRECONDITION: no key is null (a self-join
+    * would never match a null key, while a group collects it); both
+    * callers' keys are non-nullable.
+    */
+  private[graft] def bucketPairs(kept: DataFrame, keys: Seq[String]): DataFrame =
+    kept.groupBy(keys.map(col): _*).agg(sort_array(collect_list(col("id"))).as("ids"))
+      .select(col("ids"), posexplode(col("ids")).as(Seq("i", "id_a")))
+      .select(col("id_a"), explode(slice(col("ids"), col("i") + 2, size(col("ids")))).as("id_b"))
+      .filter(col("id_a") < col("id_b")).distinct()
 
   /** MinHash-LSH near-dup pairs over (idCol, textCol): (id_a, id_b,
     * jaccard) for candidate pairs whose exact shingle Jaccard reaches
@@ -125,34 +145,27 @@ object NearDedup {
     *
     * Degenerate band buckets (a boilerplate corpus collapsing thousands of
     * docs onto one (band, bk) value) are dropped WHOLE when larger than
-    * `maxBucketSize`, before the self-join — the same deterministic
+    * `maxBucketSize`, before any pair is made — the same deterministic
     * whole-bucket rule as [[simhashPairsPortable]], so the oracle SQL
     * replays it exactly; a bucket of n identical docs would otherwise cost
-    * n²/2 candidate rows. The cap is [[windowCapped]] over (band, bk): the
-    * anti-join cap it replaced ran the signature kernel a second time,
-    * while the window lets both join sides share ONE signature pass.
+    * n²/2 candidate rows. The cap is [[windowCapped]] over (band, bk) (the
+    * anti-join cap it replaced ran the signature kernel a second time),
+    * and the candidates come from [[bucketPairs]]: one signature pass,
+    * one window, one read of the capped relation.
     */
   def minhashPairs(df: DataFrame, idCol: String, textCol: String,
                    shingleSize: Int = 3, numPerms: Int = 32,
                    bands: Int = 8, threshold: Double = 0.7,
                    maxBucketSize: Int = DefaultMaxBucketSize): DataFrame = {
     val sh = shingleSets(df, idCol, textCol, shingleSize)
-    // Not materialized: the banded keys are a few narrow operators over
-    // the scan, cheap to plan for both self-join sides, which share them at
-    // runtime through exchange reuse.
-    val banded = minhashBands(sh, numPerms, bands, MinHash.Seed)
-    val (kept, keptUnobserved) = windowCapped(banded, Seq("band", "bk"), maxBucketSize)
-    val aSide = kept.select(col("band"), col("bk"), col("id").as("id_a"))
-    val bSide = keptUnobserved.select(col("band"), col("bk"), col("id").as("id_b"))
-    val cand0 = aSide.join(bSide, Seq("band", "bk"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
+    val cand0 = bucketPairs(windowCapped(minhashBands(sh, numPerms, bands, MinHash.Seed),
+      Seq("band", "bk"), maxBucketSize), Seq("band", "bk"))
     // Observed attribution for the verify stage (at sf10 the exact verify
     // over candidates is the dominant term): how many candidate pairs
     // entered the verify. OPT-IN ([[graft.operators.Tuning.observeMetrics]],
     // Probe sets it): a CollectMetrics node here is a pushdown barrier, and
     // callers that filter the pair output selectively (the q61-class recall
-    // gates) rely on that filter reaching the band self-join.
+    // gates) rely on that filter reaching the pair generation.
     val cand = if (graft.operators.Tuning.observeMetrics)
       cand0.observe(s"minhash_verify_${dropSeq.incrementAndGet()}",
         count(lit(1)).as("candidate_pairs"))

@@ -191,6 +191,99 @@ class CurationSpec extends SparkSpec {
     assert(pairs(5) == (for (a <- 1L to 5L; b <- a + 1 to 5L) yield (a, b)).toSet)
   }
 
+  test("bucketPairs equals the capped bucket self-join it replaced, dropped-bucket metrics too") {
+    import org.apache.spark.sql.{DataFrame, Row}
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.types.LongType
+    import graft.operators.NearDedup
+    val cap = 4
+    val keys = Seq("band", "bk")
+    val refSeq = new java.util.concurrent.atomic.AtomicLong(0L)
+    // The pair search bucketPairs replaced, as the reference: the window
+    // count once per self-join side, the dropped-bucket observe on one.
+    def selfJoinPairs(buckets: DataFrame): DataFrame = {
+      val hot = col("__n") > cap
+      val counted = buckets.withColumn("__n", count(lit(1)).over(Window.partitionBy(keys.map(col): _*)))
+      val observed = counted.observe(s"lsh_dropped_buckets_ref${refSeq.incrementAndGet()}",
+        round(sum(when(hot, lit(1.0) / col("__n")).otherwise(lit(0.0))))
+          .cast(LongType).as("dropped_buckets"),
+        sum(when(hot, lit(1L)).otherwise(lit(0L))).as("dropped_rows"))
+      val a = observed.filter(!hot).select(col("band"), col("bk"), col("id").as("id_a"))
+      val b = counted.filter(!hot).select(col("band"), col("bk"), col("id").as("id_b"))
+      a.join(b, keys).filter(col("id_a") < col("id_b")).select("id_a", "id_b").distinct()
+    }
+    val events = new java.util.concurrent.LinkedBlockingQueue[Map[String, Row]]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             ns: Long): Unit =
+        events.add(qe.observedMetrics.filter(_._1.startsWith("lsh_dropped_buckets_")))
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             e: Exception): Unit = ()
+    }
+    // (pair set, (dropped_buckets, dropped_rows) if the plan reported them)
+    def run(pairs: DataFrame): (Set[(Any, Any)], Option[(Long, Long)]) = {
+      events.clear()
+      val got = pairs.select("id_a", "id_b").collect().map(r => (r.get(0), r.get(1))).toSet
+      val metrics = Option(events.poll(10, java.util.concurrent.TimeUnit.SECONDS))
+        .getOrElse(fail("no query-execution event after the action"))
+      assert(metrics.size <= 1, s"more than one dropped-bucket observe: $metrics")
+      (got, metrics.values.headOption.map(r =>
+        (r.getAs[Long]("dropped_buckets"), r.getAs[Long]("dropped_rows"))))
+    }
+    def check(label: String, buckets: DataFrame, isEmpty: Boolean = false): Unit = {
+      val (got, gotDrops) = run(NearDedup.bucketPairs(NearDedup.windowCapped(buckets, keys, cap), keys))
+      val (want, wantDrops) = run(selfJoinPairs(buckets))
+      val (extra, missing) = (got -- want, want -- got)
+      assert(extra.isEmpty && missing.isEmpty, s"$label: extra pairs $extra, missing pairs $missing")
+      // An empty input lets the optimizer replace the reference's whole
+      // join, observe included, by an empty relation; an observe that
+      // still runs there must read zero.
+      if (isEmpty) assert((gotDrops ++ wantDrops).forall(_ == ((0L, 0L))),
+        s"$label: dropped-bucket metrics $gotDrops vs $wantDrops")
+      else assert(gotDrops == wantDrops, s"$label: dropped-bucket metrics $gotDrops vs $wantDrops")
+    }
+    // Buckets of 1, 2, cap and cap + 1 rows, a repeated id inside a bucket,
+    // a null id and ids shared across buckets, then a random mix over a
+    // few keys.
+    val edge: Seq[(Int, String, Option[Long])] =
+      Seq((0, "a", Some(1L))) ++
+      Seq(2L, 3L).map(i => (0, "b", Some(i))) ++
+      (4L to 7L).map(i => (0, "c", Some(i))) ++
+      (8L to 12L).map(i => (0, "d", Some(i))) ++
+      Seq(3L, 2L, 2L).map(i => (1, "a", Some(i))) ++
+      Seq(None, Some(5L), Some(4L)).map(i => (1, "b", i)) ++
+      Seq(2L, 3L, 9L).map(i => (1, "c", Some(i)))
+    val rnd = new scala.util.Random(12)
+    val mixed = Seq.fill(200)((rnd.nextInt(3), s"k${rnd.nextInt(40)}", Some(rnd.nextInt(120).toLong)))
+    val longIds = (edge ++ mixed).toDF("band", "bk", "id")
+    // String ids order as strings: "10" < "9", so the sorted list and the
+    // id_a < id_b filter must agree on that order.
+    val stringIds = longIds.withColumn("id", col("id").cast("string"))
+    val empty = longIds.limit(0)
+    spark.listenerManager.register(listener)
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    try {
+      for (adaptive <- Seq("true", "false")) {
+        spark.conf.set("spark.sql.adaptive.enabled", adaptive)
+        check(s"long ids, AQE $adaptive", longIds)
+        check(s"string ids, AQE $adaptive", stringIds)
+        check(s"empty input, AQE $adaptive", empty, isEmpty = true)
+      }
+      // the edge buckets alone, spelled out: sizes 1 and cap + 1 give no
+      // pair, the repeated and the null id pair only with the other ids,
+      // and the one hot bucket is observed with its 5 rows
+      spark.conf.set("spark.sql.adaptive.enabled", aqe)
+      val (edgePairs, edgeDrops) = run(NearDedup.bucketPairs(
+        NearDedup.windowCapped(edge.toDF("band", "bk", "id"), keys, cap), keys))
+      assert(edgePairs == Set[(Any, Any)]((2L, 3L), (4L, 5L), (4L, 6L), (4L, 7L), (5L, 6L),
+        (5L, 7L), (6L, 7L), (2L, 9L), (3L, 9L)), s"edge pairs $edgePairs")
+      assert(edgeDrops.contains((1L, 5L)), s"edge dropped-bucket metrics $edgeDrops")
+    } finally {
+      spark.conf.set("spark.sql.adaptive.enabled", aqe)
+      spark.listenerManager.unregister(listener)
+    }
+  }
+
   test("topKPerGroup keeps exactly k under a deterministic order") {
     val df = Seq(("a", 1L, 10L), ("a", 2L, 30L), ("a", 3L, 30L), ("a", 4L, 5L),
       ("b", 5L, 1L)).toDF("g", "id", "score")

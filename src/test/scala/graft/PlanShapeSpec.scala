@@ -148,30 +148,35 @@ class PlanShapeSpec extends SparkSpec {
   test("q47/q48 minhash pairs run one signature pass on the md5 band keys") {
     // The aggregate + anti-join bucket cap of the xxhash64 pipeline planned
     // a second signature branch that exchange reuse did not share; the
-    // window cap rides the exchange the band self-join needs. Each join
-    // side runs the window count; the dropped-bucket observe rides one of
-    // them, or its sums run twice per banded row under one metric name.
+    // window cap rides the exchange the pair search needs. The pairs come
+    // from one read of the capped relation, so the window count runs once
+    // (a band self-join ran it once per join side, below exchange reuse),
+    // and so does the dropped-bucket observe on it.
     for (q <- Seq("q47_minhash_pairs", "q48_minhash_dedup")) {
       val p = finalPlanOf(q)
       assert(occurrences(p, "graft_minhash_sig(") == 1, s"$q signature kernel count in:\n$p")
       assert(!p.contains("xxhash64(concat_ws"), s"$q xxhash64 band key in:\n$p")
       assert(occurrences(p, "CollectMetrics lsh_dropped_buckets_") == 1,
         s"$q dropped-bucket observe count in:\n$p")
+      assert(occurrences(p, "Window [count(1)") == 1, s"$q window-count cap count in:\n$p")
     }
   }
 
   test("q51/q53/q95 sign-LSH buckets on the plane kernel under the windowed cap") {
     // One bucket relation on the portable plane basis: the hyperplane
     // kernel and its aggregate + anti-join cap are gone, the corpus side
-    // runs the plane kernel once (both self-join sides share its
-    // exchange), and the dropped-bucket observe rides one side. lshTopK's
-    // query side signs its own rows, so q51 has one more kernel call.
+    // runs the plane kernel once, and the pair search (q53, q95) reads the
+    // capped relation once, so the window count and the dropped-bucket
+    // observe on it run once (q51's top-k caps the corpus side once too).
+    // lshTopK's query side signs its own rows, so q51 has one more kernel
+    // call.
     for ((q, kernels) <- Seq("q51_lsh_topk" -> 2, "q53_cosine_neardup" -> 1, "q95_lsh_portable" -> 1)) {
       val p = finalPlanOf(q)
       assert(occurrences(p, "graft_plane_sigs(") == kernels, s"$q plane kernel count in:\n$p")
       assert(!p.contains("graft_hyperplane_sig("), s"$q hyperplane kernel in:\n$p")
       assert(occurrences(p, "CollectMetrics lsh_dropped_buckets_") == 1,
         s"$q dropped-bucket observe count in:\n$p")
+      assert(occurrences(p, "Window [count(1)") == 1, s"$q window-count cap count in:\n$p")
     }
   }
 
@@ -473,34 +478,36 @@ class PlanShapeSpec extends SparkSpec {
     assert(p.contains("LeftAnti"), s"no hot-fingerprint cap in:\n$p")
   }
 
-  test("q93 portable minhash: windowed hot-bucket cap guards the band self-join") {
+  test("q93 portable minhash: windowed hot-bucket cap guards the band pair search") {
     val p = planOf("q93_minhash_portable")
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
       s"pairwise join in:\n$p")
     // the round-12 cap: oversized (band, bk) buckets are dropped whole by
-    // a count-over-(band, bk) window filter BEFORE the candidate self-join
-    // — previously the one uncapped quadratic in the library (native
+    // a count-over-(band, bk) window filter BEFORE any pair is made —
+    // previously the one uncapped quadratic in the library (native
     // minhashPairs and portable simhash both already had a cap). The
     // window form is one signature pass: the bucket count rides the same
-    // exchange the self-join needs.
+    // exchange the pair search needs.
     assert(p.contains("Window"), s"no window-count cap in:\n$p")
-    // the window filter must sit UNDER the candidate join (guarding it),
-    // not above: the plan line order proves the cap runs pre-join. (At
-    // sf0.001 AQE broadcasts the small join side so exchange reuse is not
-    // visible here; at shuffle scale both sides reuse one signature pass.)
+    // the window filter must sit UNDER the (band, bk) collect_list
+    // aggregate whose id lists feed the pairs (guarding it), not above:
+    // the plan line order proves the cap runs before any id is collected.
     // Anchor on the SPECIFIC nodes (round-13 advice): the cap is the
-    // window over (band, bk) and the guarded join is the candidate
-    // self-join keyed on (band, bk) — a bare indexOf("Window") /
-    // indexOf("Join") would flip on any unrelated window or join the
-    // plan gains later.
+    // window over (band, bk) and the guarded node is the aggregate keyed
+    // on (band, bk) — a bare indexOf("Window") / indexOf("Aggregate")
+    // would flip on any unrelated window or aggregate the plan gains later.
     val capIdx = "(?m)^.*Window.*band#.*bk#.*$".r
       .findFirstMatchIn(p).map(_.start).getOrElse(-1)
-    val joinIdx = "(?m)^.*Join.*band#.*bk#.*$".r
+    val aggIdx = "(?m)^.*Aggregate\\(keys=\\[band#\\d+, bk#\\d+\\].*collect_list.*$".r
       .findFirstMatchIn(p).map(_.start).getOrElse(-1)
     assert(capIdx >= 0, s"no count-over-(band, bk) window cap in:\n$p")
-    assert(joinIdx >= 0, s"no (band, bk)-keyed candidate join in:\n$p")
-    assert(capIdx > joinIdx,
-      s"window cap not below the candidate join in:\n$p")
+    assert(aggIdx >= 0, s"no (band, bk)-keyed collect_list aggregate in:\n$p")
+    assert(capIdx > aggIdx,
+      s"window cap not below the pair-feeding aggregate in:\n$p")
+    // the pairs come from the per-bucket id lists: no band self-join is
+    // left to run the window once per side
+    assert(!"(?m)^.*Join.*band#.*bk#.*$".r.findFirstIn(p).isDefined,
+      s"(band, bk)-keyed join in:\n$p")
     // The signature is one compiled kernel per row: no shingle explode
     // feeding a min aggregation (the formulation it replaced ran 32 min
     // aggregates over one row per shingle, behind a shuffle on id).
