@@ -1359,9 +1359,11 @@ object SparkEntry {
       // pipeline as q47, kept under both names for the bench history.
       NearDedup.minhashPairs(t(s, d, "documents"), "doc_id", "text")),
     "q94_simhash_portable" -> ((s, d) =>
-      // portable simhash: 60-bit majority-vote signatures over md5 token
-      // hashes, chunk bucketing + Hamming verify all replayed by the oracle
-      NearDedup.simhashPairsPortable(t(s, d, "documents"), "doc_id", "text")),
+      // 60-bit majority-vote signatures over md5 token hashes, chunk
+      // buckets under the window cap and the Hamming verify, all replayed
+      // by the oracle. The same pipeline as q49, kept under both names for
+      // the bench history.
+      NearDedup.simhashPairs(t(s, d, "documents"), "doc_id", "text")),
     "q95_lsh_portable" -> ((s, d) =>
       // sign-LSH bucketed embedding near-dup on shared plane literals —
       // signatures, bucket pairs, and cosine verify all oracle-replayed
@@ -2777,8 +2779,8 @@ object SparkEntry {
     }),
     "q196_twin_gate" -> ((s, d) => {
       // MACHINE-gate for the rows-only natives (round-12 verdict #6): the
-      // no-oracle simhash/IVF surfaces are correctness-gated through their
-      // oracle-green portable twins, and this query moves that pairing
+      // no-oracle IVF surface is correctness-gated through its
+      // oracle-green portable twin, and this query moves that pairing
       // from prose into the driver's CORRECTNESS artifact itself — one
       // row per (rows_only_query, twin), so a consumer mechanically joins
       // each native's own artifact row (non-trivial row count) to its
@@ -2902,17 +2904,16 @@ object SparkEntry {
     "embeddings")
 
   /** The rows-only ↔ oracle-green twin pairing, machine-readable: each
-    * key is a registered query with NO DuckDB oracle (a native LSH/IVF
-    * surface whose non-portable hashing the oracle cannot replay); its
-    * value is the registered PORTABLE twin — the same pipeline on an
-    * engine-neutral basis — that IS oracle-checked bit-for-bit. Verify
+    * key is a registered query with NO DuckDB oracle (today only native
+    * IVF, whose results are judged by recall, not replayed); its value is
+    * the registered PORTABLE twin — the same search on an engine-neutral
+    * basis — that IS oracle-checked bit-for-bit. Verify
     * dumps this as rows_only_twins.json next to oracle_sql.json so
     * correctness consumers can verify the pairing automatically instead
     * of trusting COVERAGE.md prose. A spec pins the invariants: every
     * no-oracle query has a twin, every twin has an oracle.
     */
   val rowsOnlyTwins: Map[String, String] = Map(
-    "q49_simhash_pairs" -> "q94_simhash_portable",
     "q52_ivf_topk" -> "q96_ivf_portable")
 
   /** q147 Misra-Gries parity constants — the ONLY definition; the oracle
@@ -3418,25 +3419,9 @@ FROM e JOIN c USING (g) GROUP BY doc_id"""),
     "q92_quantized_topk" -> quantizedTopkOracleSql,
     "q47_minhash_pairs" -> minhashPairsOracleSql,
     "q48_minhash_dedup" -> minhashDedupOracleSql,
+    "q49_simhash_pairs" -> simhashPairsOracleSql,
     "q93_minhash_portable" -> minhashPairsOracleSql,
-    "q94_simhash_portable" ->
-      s"""WITH tok AS (SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\\s+')) AS t FROM documents),
-hx AS (SELECT doc_id, CAST(list_sum(list_transform(range(1, 16),
-  i -> (CAST(strpos('0123456789abcdef', substr(md5(t), CAST(i AS INTEGER), 1)) - 1 AS BIGINT)
-        << ((15 - CAST(i AS INTEGER)) * 4)))) AS BIGINT) AS h FROM tok),
-votes AS (SELECT doc_id, j, SUM(CASE WHEN (h >> CAST(j AS INTEGER)) & 1 = 1 THEN 1 ELSE -1 END) AS v
-  FROM hx CROSS JOIN range(60) r(j) GROUP BY doc_id, j),
-sig AS (SELECT doc_id, CAST(SUM(CASE WHEN v > 0 THEN (CAST(1 AS BIGINT) << CAST(j AS INTEGER)) ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS sig
-  FROM votes GROUP BY doc_id),
-qr0 AS (SELECT doc_id, CAST(q AS INTEGER) AS q, (sig >> CAST(q * 15 AS INTEGER)) & 32767 AS qv
-  FROM sig CROSS JOIN range(4) r(q)),
-big AS (SELECT q, qv FROM qr0 GROUP BY q, qv HAVING count(*) > 10000),
-qr AS (SELECT qr0.* FROM qr0 LEFT JOIN big USING (q, qv) WHERE big.q IS NULL),
-cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM qr a JOIN qr b ON a.q = b.q AND a.qv = b.qv AND a.doc_id < b.doc_id),
-h2 AS (SELECT id_a, id_b, bit_count(xor(sa.sig, sb.sig)) AS hamming
-  FROM cand JOIN sig sa ON sa.doc_id = cand.id_a JOIN sig sb ON sb.doc_id = cand.id_b)
-SELECT id_a, id_b, CAST(hamming AS INTEGER) AS hamming FROM h2 WHERE hamming <= 3""",
+    "q94_simhash_portable" -> simhashPairsOracleSql,
     "q95_lsh_portable" -> lshPairsOracleSql(embVectorsSql, "0.25", bits = 6, tables = 4),
     "q96_ivf_portable" -> ivfPortableOracleSql,
     "q97_dup_spans" ->
@@ -4785,6 +4770,30 @@ cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
 j AS (SELECT id_a, id_b, len(list_intersect(sa.s, sb.s)) AS i, len(sa.s) AS na, len(sb.s) AS nb
   FROM cand JOIN sh sa ON sa.doc_id = cand.id_a JOIN sh sb ON sb.doc_id = cand.id_b)"""
   }
+
+  /** q49/q94: the simhash pipeline replayed — whitespace tokens of the
+    * trimmed text, the 60-bit md5-prefix majority vote, hammingPairs64's
+    * 4×16-bit chunks under the window-count cap (interpolated from
+    * NearDedup.DefaultMaxBucketSize, like minhashCtes' keptbk), the chunk
+    * self-join and the Hamming verify.
+    */
+  private lazy val simhashPairsOracleSql: String =
+    s"""WITH tok AS (SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\\s+')) AS t FROM documents),
+hx AS (SELECT doc_id, CAST(list_sum(list_transform(range(1, 16),
+  i -> (CAST(strpos('0123456789abcdef', substr(md5(t), CAST(i AS INTEGER), 1)) - 1 AS BIGINT)
+        << ((15 - CAST(i AS INTEGER)) * 4)))) AS BIGINT) AS h FROM tok),
+votes AS (SELECT doc_id, j, SUM(CASE WHEN (h >> CAST(j AS INTEGER)) & 1 = 1 THEN 1 ELSE -1 END) AS v
+  FROM hx CROSS JOIN range(60) r(j) GROUP BY doc_id, j),
+sig AS (SELECT doc_id, CAST(SUM(CASE WHEN v > 0 THEN (CAST(1 AS BIGINT) << CAST(j AS INTEGER)) ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS sig
+  FROM votes GROUP BY doc_id),
+ch AS (SELECT doc_id, sig, CAST(q AS INTEGER) AS qi, (sig >> CAST(q * 16 AS INTEGER)) & 65535 AS qv
+  FROM sig CROSS JOIN range(4) r(q)),
+keep AS (SELECT doc_id, sig, qi, qv FROM (
+  SELECT *, count(*) OVER (PARTITION BY qi, qv) AS n FROM ch)
+  WHERE n <= ${graft.operators.NearDedup.DefaultMaxBucketSize}),
+pairs AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b, bit_count(xor(a.sig, b.sig)) AS hamming
+  FROM keep a JOIN keep b ON a.qi = b.qi AND a.qv = b.qv AND a.doc_id < b.doc_id)
+SELECT id_a, id_b, CAST(hamming AS INTEGER) AS hamming FROM pairs WHERE hamming <= 3"""
 
   private lazy val minhashPairsOracleSql: String =
     s"""WITH $minhashCtes

@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
-import org.apache.spark.sql.catalyst.expressions.{Expression, GetArrayItem, Literal, TimeZoneAwareExpression, UnaryExpression, XxHash64Function}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GetArrayItem, Literal, TimeZoneAwareExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftshim.Shim
@@ -24,14 +24,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * projection stays inside the generated code path (one static call per
   * row, no closure dispatch).
   *
-  * Value parity with the expression formulations is exact (same xxhash64
-  * seed/semantics via XxHash64Function, same fold order for doubles), so
-  * swapping implementations never changes results.
+  * Value parity with the expression formulations is exact (the same md5
+  * prefix hash as `conv(substring(md5(s), 1, 15), 16, 10)`, the same fold
+  * order for doubles), so swapping implementations never changes results.
   */
 object Kernels {
-
-  private def xxh64(s: UTF8String): Long =
-    XxHash64Function.hash(s, StringType, 42L)
 
   // -- HTML → text extraction (the WARC→WET step of a crawl pipeline) --
 
@@ -245,25 +242,44 @@ object Kernels {
     UTF8String.fromString(java.text.Normalizer.normalize(
       s.toString, java.text.Normalizer.Form.valueOf(form)))
 
-  /** SimHash64 over whitespace tokens of the trimmed text — parity with
-    * `aggregate`-based bit sums over xxhash64(token).
+  /** 60-bit SimHash: bit j is 1 when more tokens have bit j of their
+    * [[md5Prefix60]] hash set than clear (bits 60-63 are always 0). Tokens
+    * are exactly Spark's `split(trim(text), "\\s+")`: a 0x20-only trim,
+    * then a split on runs of `[ \t\n\x0B\f\r]` that keeps a leading and a
+    * trailing empty segment, so `""` is one empty token. Value parity with
+    * that split + md5 vote, which the DuckDB oracle replays.
+    *
+    * Works on the UTF-8 bytes like [[shingles]]: in valid UTF-8 every byte
+    * <= 0x7F is its own character, and each token's bytes are hashed in
+    * place. Malformed UTF-8 is decoded first (bad bytes to U+FFFD), as the
+    * split does.
     */
   def simhash64(text: UTF8String): Long = {
-    val tokens = text.toString.trim.split("\\s+")
-    val counts = new Array[Int](64)
-    var t = 0
-    while (t < tokens.length) {
-      val h = xxh64(UTF8String.fromString(tokens(t)))
+    val bytes = (if (text.isValid) text else UTF8String.fromString(text.toString)).trim().getBytes
+    val n = bytes.length
+    def isSep(b: Byte): Boolean = b == ' ' || (b >= '\t' && b <= '\r')
+    val counts = new Array[Int](60)
+    def vote(from: Int, to: Int): Unit = {
+      val h = md5Prefix60(bytes, from, to - from)
       var j = 0
-      while (j < 64) {
+      while (j < 60) {
         if (((h >>> j) & 1L) == 1L) counts(j) += 1 else counts(j) -= 1
         j += 1
       }
-      t += 1
     }
+    var s = 0
+    var i = 0
+    while (i < n) {
+      if (isSep(bytes(i))) {
+        vote(s, i)
+        while (i < n && isSep(bytes(i))) i += 1
+        s = i
+      } else i += 1
+    }
+    vote(s, n)
     var sig = 0L
     var j = 0
-    while (j < 64) { if (counts(j) > 0) sig |= (1L << j); j += 1 }
+    while (j < 60) { if (counts(j) > 0) sig |= (1L << j); j += 1 }
     sig
   }
 
@@ -278,8 +294,14 @@ object Kernels {
     * (`conv(substring(md5(s), 1, 15), 16, 10)`).
     */
   private def md5Prefix60(s: UTF8String): Long = {
+    val b = s.getBytes
+    md5Prefix60(b, 0, b.length)
+  }
+
+  /** [[md5Prefix60]] of `len` bytes of `b` from `off`. */
+  private def md5Prefix60(b: Array[Byte], off: Int, len: Int): Long = {
     val m = md5State.get
-    m.md.update(s.getBytes)
+    m.md.update(b, off, len)
     m.md.digest(m.out, 0, 16)
     var h = 0L
     var i = 0

@@ -815,8 +815,8 @@ object VectorFunctions {
       quantizedLloyd(df, idCol, vecCol, centroidEvery, rounds, quantScale,
         trainEvery, maxCentroids)
     // maxCell > 0 bounds the within-cell pairwise join — the same contract
-    // as minhashPairs' bucket cap (NearDedup.bucketedCandidates): a
-    // degenerate cell (zero-ish embeddings, one boilerplate topic swallowing
+    // as the LSH bucket cap (NearDedup.windowCapped: a bucket over the cap
+    // is dropped whole), in its aggregate form: a degenerate cell (zero-ish embeddings, one boilerplate topic swallowing
     // the corpus) would make the self-join quadratic in ITS size, so cells
     // larger than the cap are excluded from pair generation (their members
     // stay kept=true, uncompared) and the dropped volume is surfaced via an

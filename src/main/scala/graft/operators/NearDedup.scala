@@ -11,14 +11,17 @@ import graft.functions.TextFunctions
   *
   *  - a minhash signature is one compiled kernel call per row over the
   *    shingle array (Kernels.minhashSig, one narrow map, no UDFs);
+  *  - a simhash is one compiled kernel call per row over the text's
+  *    tokens (Kernels.simhash64), on the same md5 basis;
   *  - candidate generation is `explode(bands) -> groupBy(band, bk) ->
   *    pairs from each bucket's sorted id list` ([[bucketPairs]]), the
-  *    standard LSH shape: the shuffle is on (band-index, band-hash), whose
-  *    cardinality scales with document count, never with the quadratic
-  *    pair space;
-  *  - candidate pairs are generated and deduplicated on (id_a, id_b) ONLY —
-  *    the heavy payloads (shingle arrays / embedding vectors) are re-joined
-  *    AFTER the pair-dedup, so they never ride through the candidate shuffle;
+  *    standard LSH shape: the shuffle is on (band-index, band-hash) or
+  *    (chunk-index, chunk-value), whose cardinality scales with document
+  *    count, never with the quadratic pair space;
+  *  - minhash candidate pairs are generated and deduplicated on (id_a,
+  *    id_b) ONLY — the shingle arrays are re-joined AFTER the pair-dedup,
+  *    so they never ride through the candidate shuffle; a simhash pair
+  *    carries its two 8-byte signatures instead of rejoining them;
   *  - degenerate LSH buckets (e.g. all-empty/boilerplate docs hashing to one
   *    band value) are capped: any bucket larger than `maxBucketSize` is
   *    dropped before the in-bucket pair search, bounding the worst case at
@@ -32,10 +35,10 @@ import graft.functions.TextFunctions
 object NearDedup {
 
   /** Default cap on LSH bucket size before the in-bucket pair search —
-    * shared by the aggregate+anti-join caps, the window-count caps, AND
-    * the DuckDB oracle CTEs (SparkEntry interpolates this constant into
-    * the keptbk SQL), so the two sides cannot drift. Under the window cap
-    * it also bounds the id list [[bucketPairs]] collects per bucket.
+    * shared by the window-count caps ([[windowCapped]]) AND the DuckDB
+    * oracle CTEs (SparkEntry interpolates this constant into the keptbk
+    * and simhash keep SQL), so the two sides cannot drift. It also bounds
+    * the id list [[bucketPairs]] collects per bucket.
     *
     * CONTRACT: buckets over the cap are dropped WHOLE — their members are
     * never compared, so a corpus dominated by >cap near-identical docs is
@@ -51,35 +54,6 @@ object NearDedup {
     * duplicate CollectMetrics names), so each candidate stage gets a suffix.
     */
   private val dropSeq = new java.util.concurrent.atomic.AtomicLong(0L)
-
-  /** Candidate (id_a, id_b) pairs from an exploded (bucket, id) relation:
-    * caps oversized buckets, self-joins within bucket, dedups pairs on the
-    * two ids alone (narrow shuffle rows — ids only, no payloads).
-    */
-  private def bucketedCandidates(buckets: DataFrame, bucketCol: String,
-                                 maxBucketSize: Int): DataFrame = {
-    // Bucket sizes WITHOUT materializing bucket contents: a count-only
-    // aggregate (map-side combined, no arrays) finds the oversized buckets,
-    // which are then anti-joined away as a broadcast — the degenerate bucket
-    // (boilerplate text or flat images sharing one chunk value) never exists
-    // as a collected array in any task. Oversized buckets are degenerate
-    // content: joining them is quadratic and their pairs rarely add dups
-    // smaller buckets don't surface. The dropped volume is surfaced via an
-    // observed metric (readable from a QueryExecutionListener after the
-    // action — no extra pass). Caveat: if EVERY bucket is dropped, AQE's
-    // empty-relation propagation can prune the CollectMetrics node from the
-    // final plan and the metric is not reported for that action.
-    val sized = buckets.groupBy(col(bucketCol)).agg(count(lit(1)).as("n"))
-      .observe(s"lsh_dropped_buckets_${dropSeq.incrementAndGet()}",
-        sum(when(col("n") > maxBucketSize, lit(1L)).otherwise(lit(0L))).as("dropped_buckets"),
-        sum(when(col("n") > maxBucketSize, col("n")).otherwise(lit(0L))).as("dropped_rows"))
-    val hot = sized.filter(col("n") > maxBucketSize).select(col(bucketCol))
-    val kept = buckets.join(broadcast(hot), Seq(bucketCol), "left_anti")
-    val a = kept.select(col(bucketCol), col("id").as("id_a"))
-    val b = kept.select(col(bucketCol), col("id").as("id_b"))
-    a.join(b, Seq(bucketCol)).filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").dropDuplicates("id_a", "id_b")
-  }
 
   /** The whole-bucket cap of the LSH bucket searches: rows of every
     * `keys` bucket holding more than `maxBucketSize` rows are dropped, by
@@ -121,8 +95,9 @@ object NearDedup {
     * `sort_array` is compiled; `array_sort` would run an interpreted
     * lambda. A repeated id in a bucket pairs with nothing new, and null
     * ids are never collected. PRECONDITION: no key is null (a self-join
-    * would never match a null key, while a group collects it); both
-    * callers' keys are non-nullable.
+    * would never match a null key, while a group collects it): the
+    * minhash and sign-LSH keys are non-nullable, and [[hammingPairs64]]
+    * chunks no null signature.
     */
   private[graft] def bucketPairs(kept: DataFrame, keys: Seq[String]): DataFrame =
     kept.groupBy(keys.map(col): _*).agg(sort_array(collect_list(col("id"))).as("ids"))
@@ -146,7 +121,7 @@ object NearDedup {
     * Degenerate band buckets (a boilerplate corpus collapsing thousands of
     * docs onto one (band, bk) value) are dropped WHOLE when larger than
     * `maxBucketSize`, before any pair is made — the same deterministic
-    * whole-bucket rule as [[simhashPairsPortable]], so the oracle SQL
+    * whole-bucket rule as [[hammingPairs64]], so the oracle SQL
     * replays it exactly; a bucket of n identical docs would otherwise cost
     * n²/2 candidate rows. The cap is [[windowCapped]] over (band, bk) (the
     * anti-join cap it replaced ran the signature kernel a second time),
@@ -255,60 +230,6 @@ object NearDedup {
       .select(col("id"), col("q.band").as("band"), col("q.bk").as("bk"))
   }
 
-  /** SimHash pairs on the same portable md5 hash basis (see
-    * [[minhashPairs]]): 60-bit signatures (bit 63 would collide
-    * with two's-complement sign handling across engines), majority vote
-    * per bit over token hashes, 4×15-bit chunk bucketing, Hamming verify.
-    * Tokenization is split-on-whitespace of the trimmed text — defined
-    * here, mirrored in the oracle.
-    *
-    * Degenerate buckets (a corpus of near-identical docs collapsing onto
-    * one chunk value) are dropped WHOLE when larger than `maxBucketSize`
-    * — the same anti-join guard as the native [[simhashPairs]], but as
-    * whole-bucket exclusion so the rule stays deterministic and the
-    * oracle SQL replays it with a plain HAVING filter.
-    */
-  def simhashPairsPortable(df: DataFrame, idCol: String, textCol: String,
-                           maxHamming: Int = 3,
-                           maxBucketSize: Int = DefaultMaxBucketSize): DataFrame = {
-    val bits = 60
-    // Spread before the tokenize+md5 kernel (single-split scans serialize
-    // it on one core otherwise; no-op on an already-parallel scan).
-    val toks = Tuning.spread(
-        df.select(col(idCol).as("id"), col(textCol).as("__t")), col("id"))
-      .select(col("id"), explode(split(trim(col("__t")), "\\s+")).as("t"))
-      .withColumn("h", conv(substring(md5(col("t")), 1, 15), 16, 10).cast(LongType))
-    val votes = (0 until bits).map(j =>
-      sum(when(shiftright(col("h"), j).bitwiseAND(1L) === 1L, 1).otherwise(-1)).as(s"b$j"))
-    // (id, sig) materialized ONCE (round 16 — the hammingPairs64 trade,
-    // 16 bytes/row): the 60-vote majority aggregation feeds the chunk
-    // explode, the hot-bucket anti-join branch, AND both self-join sides —
-    // four planned copies of the signature pipeline whose AQE planning
-    // dominated the query at bench SF even though runtime stage reuse ran
-    // the aggregation once. Blocks are ContextCleaner-reclaimed.
-    val sig = toks.groupBy(col("id")).agg(votes.head, votes.tail: _*)
-      .select(col("id"),
-        (0 until bits).map(j =>
-          when(col(s"b$j") > 0, lit(1L << j)).otherwise(lit(0L)))
-          .reduce((a, b) => a + b).as("sig"))
-      .localCheckpoint()
-    val quarters = sig.select(col("id"), col("sig"),
-      explode(array((0 until 4).map(q =>
-        struct(lit(q).as("q"),
-          shiftright(col("sig"), q * 15).bitwiseAND(0x7FFFL).as("qv"))): _*)).as("c"))
-      .select(col("id"), col("sig"), col("c.q").as("q"), col("c.qv").as("qv"))
-    val hot = quarters.groupBy(col("q"), col("qv")).agg(count(lit(1)).as("n"))
-      .filter(col("n") > maxBucketSize).select(col("q"), col("qv"))
-    val kept = quarters.join(broadcast(hot), Seq("q", "qv"), "left_anti")
-    val aSide = kept.select(col("q"), col("qv"), col("id").as("id_a"), col("sig").as("sig_a"))
-    val bSide = kept.select(col("q"), col("qv"), col("id").as("id_b"), col("sig").as("sig_b"))
-    aSide.join(bSide, Seq("q", "qv")).filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        bit_count(col("sig_a").bitwiseXOR(col("sig_b"))).as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
-  }
-
   /** Transitive near-dup dedup: minhash-LSH pairs fed through connected
     * components, keeping the min-id representative of each CLUSTER (the
     * greedy pairwise rule above is not transitive — a chain a–b, b–c with
@@ -322,10 +243,13 @@ object NearDedup {
     Clustering.dedupByComponents(df, idCol,
       minhashPairs(df, idCol, textCol, shingleSize, numPerms, bands, threshold))
 
-  /** 64-bit SimHash over token xxhash64 values: bit j of the result is 1 when
-    * the sum over tokens of ±1 (by bit j of the token hash) is positive.
-    * Compiled kernel (graft.expressions.Kernels.simhash64): one
-    * compiled pass over the tokens instead of 64 interpreted array folds.
+  /** 60-bit SimHash on the md5 basis of [[minhashPairs]]: bit j of the
+    * result is 1 when more of the text's tokens have bit j of their
+    * md5-prefix hash set than clear; bits 60-63 are 0 (bit 63 would
+    * collide with two's-complement sign handling across engines). Tokens
+    * are Spark's `split(trim(text), "\\s+")`. One compiled kernel call
+    * per row (graft.expressions.Kernels.simhash64), replayed bit for bit
+    * by the DuckDB oracle's split + md5 vote.
     */
   def simhash64(textCol: Column): Column =
     graft.expressions.GraftFunctions.simhash64(textCol)
@@ -333,30 +257,40 @@ object NearDedup {
   /** Hamming distance between two simhashes (bit_count of xor). */
   def hammingDistance(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 
-  /** SimHash near-dup pairs: bucket by the 4 16-bit quarters of the simhash
-    * (any pair within Hamming distance 3 shares at least one exact quarter —
-    * the classic Charikar/Manku chunk trick), then verify Hamming distance.
-    * Shuffle key = (quarter-index, quarter-value): linear, never quadratic.
-    * Candidates are id-only; the 8-byte signatures are re-joined afterwards.
+  /** SimHash near-dup pairs (id_a, id_b, hamming), id_a < id_b: the
+    * [[simhash64]] of each non-null text through [[hammingPairs64]]'s
+    * 4×16-bit chunk buckets (any pair within Hamming distance 3 shares at
+    * least one exact chunk — the Charikar/Manku trick). Rows with a null
+    * text appear in no pair.
     */
   def simhashPairs(df: DataFrame, idCol: String, textCol: String,
                    maxHamming: Int = 3,
                    maxBucketSize: Int = DefaultMaxBucketSize): DataFrame =
+    // Spread a single-split scan before the kernel (a no-op on an
+    // already-parallel scan), as shingleSets does.
     hammingPairs64(
-      df.select(col(idCol).as("id"), simhash64(col(textCol)).as("sig")),
+      Tuning.spread(df.select(col(idCol).as("id"), col(textCol).as("__t")), col("id"))
+        .select(col("id"), simhash64(col("__t")).as("sig")),
       maxHamming, maxBucketSize)
 
-  /** Hamming-ball candidate pairs over ANY 64-bit signature relation
-    * (`id`, `sig`): the chunk trick generalized — the signature splits into
-    * `maxHamming + 1` (min 2, max 16) bit ranges, so by pigeonhole any
-    * pair within the distance budget agrees EXACTLY on at least one chunk;
-    * bucket on (chunk-index, chunk-value), verify bit_count(xor) on the
-    * survivors. With the default maxHamming = 3 this is precisely the
-    * 4×16-bit quarter scheme of Charikar/Manku SimHash dedup; image dHash
-    * callers pass a wider budget and get more, narrower chunks. Shuffle
-    * key cardinality stays linear in ids (chunks × n rows); candidates are
-    * id-only; oversized degenerate buckets (e.g. the all-flat hash-0
-    * image class) are capped and observable via `bucketedCandidates`.
+  /** Hamming-ball pairs (id_a, id_b, hamming), id_a < id_b, over ANY
+    * 64-bit signature relation (`id`, `sig`): the chunk trick generalized
+    * — the signature splits into `maxHamming + 1` (min 2, max 16) bit
+    * ranges, so by pigeonhole any pair within the distance budget agrees
+    * EXACTLY on at least one chunk. With the default maxHamming = 3 this
+    * is the 4×16-bit quarter scheme of Charikar/Manku SimHash dedup;
+    * image dHash callers pass a wider budget and get more, narrower
+    * chunks. Shuffle key cardinality stays linear in ids (chunks × n rows).
+    *
+    * The chunk rows carry `struct(id, sig)` as the id of the LSH pair
+    * search: oversized degenerate buckets (e.g. the all-flat hash-0 image
+    * class) are dropped whole by [[windowCapped]] over (qi, qv), observed
+    * as `lsh_dropped_buckets_*`, and [[bucketPairs]] pairs each kept
+    * bucket's rows, so each pair holds both signatures and no signature is
+    * rejoined. The Hamming filter is on the pair's grouping columns, so
+    * the optimizer runs it below the pair dedup: only pairs within the
+    * budget are shuffled. A null `sig` appears in no pair, and a repeated
+    * id never pairs with itself.
     */
   def hammingPairs64(signatures: DataFrame, maxHamming: Int = 3,
                      maxBucketSize: Int = DefaultMaxBucketSize): DataFrame = {
@@ -364,26 +298,20 @@ object NearDedup {
       s"hammingPairs64 supports maxHamming in [0, 15] (chunks cap at 16), got $maxHamming")
     val chunks = math.max(maxHamming + 1, 2)
     val bounds = (0 to chunks).map(i => i * 64 / chunks)
-    // The signature relation is 16 bytes/row and is read three times
-    // (chunking + both sides of the candidate rejoin): materialize it once
-    // instead of re-scanning the corpus and re-running the upstream kernel
-    // per use. (Contrast minhash, where the rejoin payload is the full
-    // shingle ARRAY — there re-scanning beats caching; 8-byte sigs are the
-    // opposite trade.) localCheckpoint storage is ContextCleaner-reclaimed.
-    val sigs = signatures.select(col("id"), col("sig")).localCheckpoint()
-    val chunked = sigs.withColumn("q", explode(array(Seq.tabulate(chunks) { q =>
-      val width = bounds(q + 1) - bounds(q)
-      val mask = if (width >= 64) -1L else (1L << width) - 1
-      struct(lit(q).as("qi"),
-        shiftright(col("sig"), bounds(q)).bitwiseAND(mask).as("qv"))
-    }: _*))).select("q", "id")
-    val cand = bucketedCandidates(chunked, "q", maxBucketSize)
-    val sA = sigs.select(col("id").as("id_a"), col("sig").as("sig_a"))
-    val sB = sigs.select(col("id").as("id_b"), col("sig").as("sig_b"))
-    cand.join(sA, Seq("id_a")).join(sB, Seq("id_b"))
-      .withColumn("hamming", hammingDistance(col("sig_a"), col("sig_b")))
-      .filter(col("hamming") <= maxHamming)
-      .select("id_a", "id_b", "hamming")
+    // The null check rides the explode (explode(null) emits nothing), so
+    // bucketPairs never sees a null key; a Filter on `sig` would be pushed
+    // below an upstream kernel's projection and run the kernel twice.
+    val chunked = signatures.select(struct(col("id"), col("sig")).as("id"),
+        explode(when(col("sig").isNotNull, array(Seq.tabulate(chunks) { q =>
+          val width = bounds(q + 1) - bounds(q)
+          val mask = if (width >= 64) -1L else (1L << width) - 1
+          struct(lit(q).as("qi"), shiftright(col("sig"), bounds(q)).bitwiseAND(mask).as("qv"))
+        }: _*))).as("q"))
+      .select(col("id"), col("q.qi").as("qi"), col("q.qv").as("qv"))
+    val hamming = hammingDistance(col("id_a.sig"), col("id_b.sig"))
+    bucketPairs(windowCapped(chunked, Seq("qi", "qv"), maxBucketSize), Seq("qi", "qv"))
+      .filter(col("id_a.id") < col("id_b.id") && hamming <= maxHamming)
+      .select(col("id_a.id").as("id_a"), col("id_b.id").as("id_b"), hamming.as("hamming"))
   }
 
   /** Exact word-n-gram Jaccard pairs — the exact-verification baseline for
@@ -402,7 +330,7 @@ object NearDedup {
     * `maxDf` (boilerplate present in "every" document — the degenerate
     * quadratic key) are pruned BEFORE the self-join by a count-only
     * aggregate + broadcast anti-join, the same guard family as
-    * `bucketedCandidates` and Retrieval's posting cap. Under the cap, set
+    * [[editDistancePairs]]' block cap and Retrieval's posting cap. Under the cap, set
     * sizes are recomputed over the SURVIVING shingles, so the reported
     * jaccard is EXACT on the boilerplate-free shingle universe — dropped
     * shingles contribute to neither intersection nor union (an earlier
@@ -604,8 +532,8 @@ object NearDedup {
                   maxDf: Int = 1000): DataFrame = {
     require(minShared >= 1, s"winnowPairs needs minShared >= 1, got $minShared")
     // The fingerprint lineage feeds THREE consumers: the df/hot branch and
-    // both sides of the self-join. Postings are 16 bytes/row — the
-    // hammingPairs64 trade (materialize once, probe cheap blocks) — so one
+    // both sides of the self-join. Postings are 16 bytes/row, cheap to
+    // materialize once and probe as blocks, so one
     // EAGER localCheckpoint here replaces three kernel recomputations;
     // storage is ContextCleaner-reclaimed. Before this, the operator's
     // wall time was bimodal under scheduler variance (the three lineages

@@ -37,11 +37,11 @@ object Tuning {
     * OFF; graft.Probe flips it on for attribution runs. Side-channel
     * observes (dropped-bucket/shingle/fingerprint volumes) stay
     * unconditional: they hang off count-only aggregate branches, or, for
-    * the LSH dropped buckets, off the (band, bk) / (t, sig) window-count
-    * cap, never the candidate stream. No filter on the pair output can
-    * cross that window anyway: a filter on ids stops right above the pair
-    * generation (the ids are generated there), and a window only passes
-    * filters on its partition keys.
+    * the LSH dropped buckets, off the (band, bk) / (t, sig) / (qi, qv)
+    * window-count cap, never the candidate stream. No filter on the pair
+    * output can cross that window anyway: a filter on ids stops right
+    * above the pair generation (the ids are generated there), and a window
+    * only passes filters on its partition keys.
     */
   def observeMetrics: Boolean =
     sys.props.get("graft.observeMetrics")

@@ -284,6 +284,84 @@ class CurationSpec extends SparkSpec {
     }
   }
 
+  test("hammingPairs64 drops an over-cap chunk bucket whole and observes it as the aggregate cap did") {
+    import org.apache.spark.sql.{DataFrame, Row}
+    import graft.operators.NearDedup
+    val events = new java.util.concurrent.LinkedBlockingQueue[Map[String, Row]]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             ns: Long): Unit =
+        events.add(qe.observedMetrics.filter(_._1.startsWith("lsh_dropped_buckets_")))
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             e: Exception): Unit = ()
+    }
+    // (id_a, id_b, hamming) rows and the reported (dropped_buckets, dropped_rows)
+    def run(pairs: DataFrame): (Set[(Any, Any, Int)], Option[(Long, Long)]) = {
+      events.clear()
+      val got = pairs.collect().map(r => (r.get(0), r.get(1), r.getInt(2))).toSet
+      val metrics = Option(events.poll(10, java.util.concurrent.TimeUnit.SECONDS))
+        .getOrElse(fail("no query-execution event after the action"))
+      assert(metrics.size <= 1, s"more than one dropped-bucket observe: $metrics")
+      (got, metrics.values.headOption.map(r =>
+        (r.getAs[Long]("dropped_buckets"), r.getAs[Long]("dropped_rows"))))
+    }
+    def brute(sigs: Seq[(Long, Long)], budget: Int): Set[(Any, Any, Int)] =
+      (for {
+        (ia, sa) <- sigs; (ib, sb) <- sigs if ia < ib
+        d = java.lang.Long.bitCount(sa ^ sb) if d <= budget
+      } yield (ia, ib, d)).toSet
+    // The all-flat hash-0 class (12 rows) and a one-bit neighbour share the
+    // value-0 chunk buckets: (0, 0) holds 12 rows, (1..3, 0) hold 13. A far
+    // pair at distance 1 lives in buckets of its own.
+    val zeros = (1L to 12L).map(i => (i, 0L))
+    val sigs = zeros ++ Seq((20L, 1L), (30L, 0x0F0F0F0F0F0F0F0FL), (31L, 0x0F0F0F0F0F0F0F0EL))
+    spark.listenerManager.register(listener)
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    try {
+      // over the cap: the four value-0 buckets are dropped whole, so the
+      // zeros and their neighbour pair with nothing; the aggregate cap
+      // reported 4 buckets of 12 + 13 + 13 + 13 rows
+      val (capped, cappedDrops) = run(NearDedup.hammingPairs64(sigs.toDF("id", "sig"),
+        maxHamming = 3, maxBucketSize = 10))
+      assert(capped == Set[(Any, Any, Int)]((30L, 31L, 1)), s"capped pairs $capped")
+      assert(cappedDrops.contains((4L, 51L)), s"capped dropped-bucket metrics $cappedDrops")
+      // within the cap: the uncapped result, nothing dropped
+      val (uncapped, uncappedDrops) = run(NearDedup.hammingPairs64(sigs.toDF("id", "sig"),
+        maxHamming = 3, maxBucketSize = 13))
+      assert(uncapped == brute(sigs, 3), s"uncapped pairs ${uncapped -- brute(sigs, 3)}")
+      assert(uncapped.size == 66 + 12 + 1)
+      assert(uncappedDrops.contains((0L, 0L)), s"uncapped dropped-bucket metrics $uncappedDrops")
+      // every bucket dropped: AQE's empty-relation propagation may prune
+      // the observe, so this case runs with AQE off (as in LlmOpsSpec)
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+      val (none, noneDrops) = run(NearDedup.hammingPairs64(zeros.toDF("id", "sig"),
+        maxHamming = 3, maxBucketSize = 10))
+      assert(none.isEmpty, s"all-dropped pairs $none")
+      assert(noneDrops.contains((4L, 48L)), s"all-dropped dropped-bucket metrics $noneDrops")
+    } finally {
+      spark.conf.set("spark.sql.adaptive.enabled", aqe)
+      spark.listenerManager.unregister(listener)
+    }
+    // a repeated id pairs with the other ids, never with itself
+    val repeated = NearDedup.hammingPairs64(Seq((5L, 0L), (5L, 1L), (6L, 3L)).toDF("id", "sig"))
+      .as[(Long, Long, Int)].collect().toSet
+    assert(repeated == Set((5L, 6L, 2), (5L, 6L, 1)), s"repeated-id pairs $repeated")
+    // string ids order as strings: "10" < "9"
+    val strings = NearDedup.hammingPairs64(Seq(("9", 0L), ("10", 1L), ("a", -1L)).toDF("id", "sig"))
+      .as[(String, String, Int)].collect().toSet
+    assert(strings == Set(("10", "9", 1)), s"string-id pairs $strings")
+    // a null signature, a null id and a null text appear in no pair
+    val nulls = NearDedup.hammingPairs64(
+        Seq((Some(7L), None), (Some(8L), Some(0L)), (Some(9L), Some(0L)), (None, Some(0L)))
+          .toDF("id", "sig"))
+      .as[(Long, Long, Int)].collect().toSet
+    assert(nulls == Set((8L, 9L, 0)), s"null-signature pairs $nulls")
+    val texts = NearDedup.simhashPairs(
+        Seq((1L, Some("a b")), (2L, None), (3L, Some("a b"))).toDF("id", "text"), "id", "text")
+      .as[(Long, Long, Int)].collect().toSet
+    assert(texts == Set((1L, 3L, 0)), s"null-text pairs $texts")
+  }
+
   test("topKPerGroup keeps exactly k under a deterministic order") {
     val df = Seq(("a", 1L, 10L), ("a", 2L, 30L), ("a", 3L, 30L), ("a", 4L, 5L),
       ("b", 5L, 1L)).toDF("g", "id", "score")

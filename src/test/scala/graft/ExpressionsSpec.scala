@@ -487,6 +487,19 @@ class ExpressionsSpec extends SparkSpec {
                                 reference: Seq[Column] => Column,
                                 view: (Column, Seq[Column]) => Column = (k, _) => k)
 
+  /** The simhash64 kernel's reference: Spark's own split of the
+    * space-trimmed text, md5-prefix votes over 60 bits.
+    */
+  private def simhashRef(t: Column): Column = {
+    val toks = split(trim(t), "\\s+")
+    (0 until 60).map { j =>
+      val votes = aggregate(toks, lit(0), (acc, tok) => acc +
+        when(shiftrightunsigned(conv(substring(md5(tok), 1, 15), 16, 10).cast("long"), j)
+          .bitwiseAND(1L) === 1L, 1).otherwise(-1))
+      when(votes > 0, lit(1L << j)).otherwise(lit(0L))
+    }.reduce(_ bitwiseOR _)
+  }
+
   test("every compiled kernel matches its reference formulation (table, both codegen modes)") {
     import graft.expressions.Kernels
     import graft.operators.TimeParse
@@ -500,7 +513,13 @@ class ExpressionsSpec extends SparkSpec {
       """<html><head><title> T </title><style>p{}</style></head><body><p id="b" data-x="a>b">x &amp; y &lt;z&gt; &#65;&#x21; &#x1F600; &bogus; &#0; &#+65;</p><!-- c --><br/>tail</body></html>""",
       "<SCRIPT type=x>if (1 < 2) { '</p>' }</SCRIPT >after <scripture>v</scripture> 1 < 2",
       "<p>a<script>never closed", "a<p unclosed", "a<!-- unclosed", "<!DOCTYPE html><?xml?>x</ >y",
-      "<div>\t a \r\n\n b </div>&nbsp;&mdash;&hellip;&#x10FFFF;&#1114112;&#xD800;") ++
+      "<div>\t a \r\n\n b </div>&nbsp;&mdash;&hellip;&#x10FFFF;&#1114112;&#xD800;",
+      // whitespace edges of split(trim(t), "\\s+"): a leading tab, a
+      // trailing space before a newline, whitespace only, \x0B, \f
+      "\tlead tab", "trail space \n", "two\n\n", " \t\r\n\u000B\u000C ", "\u000B",
+      "v\u000Btab\u000Cfeed\rret",
+      // non-BMP tokens, and tokens past one md5 block (55 bytes)
+      "𝄞𝄞 😀x 𝄞𝄞", "x" * 56 + " y " + "é" * 40 + " " + "😀" * 30) ++
       Seq.fill(16)(Seq.fill(1 + rnd.nextInt(12))(vocab(rnd.nextInt(vocab.size))).mkString(" "))
     val strs: Seq[Seq[String]] = Seq(null, Seq.empty, Seq("a"), Seq("a", "a", "b"), Seq("b", "a"),
       Seq("😀 x", "𝄞"), Seq("")) ++
@@ -638,14 +657,7 @@ class ExpressionsSpec extends SparkSpec {
         when(union === 0, lit(Double.NaN))
           .otherwise(size(array_intersect(c(0), c(1))).cast("double") / union)
       }),
-      KernelCase("simhash64", "LongType", text, c => G.simhash64(c(0)), c => {
-        val toks = javaTrimTokens(c(0))
-        (0 until 64).map { j =>
-          val votes = aggregate(toks, lit(0), (acc, tok) =>
-            acc + when(shiftrightunsigned(xxhash64(tok), j).bitwiseAND(1L) === 1L, 1).otherwise(-1))
-          when(votes > 0, lit(1L << j)).otherwise(lit(0L))
-        }.reduce(_ bitwiseOR _)
-      }),
+      KernelCase("simhash64", "LongType", text, c => G.simhash64(c(0)), c => simhashRef(c(0))),
       KernelCase("shingles", "ArrayType(StringType,false)", text, c => G.shingles(c(0), 3), c => {
         val toks = javaTrimTokens(c(0))
         array_distinct(when(size(toks) < 3, array(concat_ws(" ", toks)))
@@ -835,6 +847,12 @@ class ExpressionsSpec extends SparkSpec {
       }
       val plan = df.select(GraftFunctions.shingles(col("t"), 3)).queryExecution.executedPlan.toString
       assert(plan.contains("*(") == (mode == "CODEGEN_ONLY"), s"$mode:\n$plan")
+      // the simhash kernel walks the same bytes: malformed text hashes
+      // the tokens Spark's split makes of its decoded form
+      val simBad = df.filter(col("t").isNotNull &&
+          !(GraftFunctions.simhash64(col("t")) <=> simhashRef(col("t"))))
+        .select("id").as[Long].collect()
+      assert(simBad.isEmpty, s"$mode: simhash64 differs on ids ${simBad.toSeq}")
     }
 
     // Shingles own their bytes: overwriting the input buffer (as the

@@ -518,15 +518,53 @@ class PlanShapeSpec extends SparkSpec {
       s"min aggregation in:\n$p")
   }
 
-  test("q178/q180 perceptual near-dup: chunk-bucketed candidates, never cartesian") {
-    for (q <- Seq("q178_image_neardup", "q180_audio_neardup")) {
-      val p = planOf(q)
-      assert(!p.contains("CartesianProduct"), s"cartesian in $q:\n$p")
-      // candidates meet on (chunk-index, chunk-value) — an equi-join whose
-      // key cardinality is linear in inputs (hammingPairs64's pigeonhole)
-      assert(p.contains("LeftAnti") || p.contains("SortMergeJoin") ||
-        p.contains("BroadcastHashJoin"), s"no bucket equi-join in $q:\n$p")
+  /** The hammingPairs64 shape: the (qi, qv) chunk rows are capped by one
+    * count window, which sits below the (qi, qv) collect_list aggregate
+    * whose id lists make the pairs; the cap is observed once; no join is
+    * left (no chunk self-join, no aggregate + anti-join cap, no signature
+    * rejoin); and the Hamming filter runs below the pair dedup, so only
+    * pairs within the budget reach its exchange.
+    */
+  private def assertHammingPairsShape(q: String, p: String): Unit = {
+    assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
+      s"$q pairwise join in:\n$p")
+    assert(!p.contains("LeftAnti"), s"$q anti-join cap in:\n$p")
+    assert(!p.contains("Join"), s"$q chunk-keyed join or signature rejoin in:\n$p")
+    assert(occurrences(p, "CollectMetrics lsh_dropped_buckets_") == 1,
+      s"$q dropped-bucket observe count in:\n$p")
+    assert(occurrences(p, "Window [count(1)") == 1, s"$q window-count cap count in:\n$p")
+    def lineIdx(re: String): Seq[Int] = re.r.findAllMatchIn(p).map(_.start).toSeq
+    val capIdx = lineIdx("(?m)^.*Window \\[count\\(1\\).*qi#\\d+, qv#\\d+.*$")
+    val aggIdx = lineIdx("(?m)^.*Aggregate\\(keys=\\[qi#\\d+, qv#\\d+L?\\].*collect_list.*$")
+    assert(capIdx.size == 1, s"$q no count-over-(qi, qv) window cap in:\n$p")
+    assert(aggIdx.nonEmpty, s"$q no (qi, qv)-keyed collect_list aggregate in:\n$p")
+    assert(capIdx.head > aggIdx.max, s"$q window cap not below the pair-feeding aggregate in:\n$p")
+    val dedupIdx = lineIdx("(?m)^.*HashAggregate\\(keys=\\[id_a#\\d+, id_b#\\d+\\].*$")
+    val hammingIdx = lineIdx("(?m)^.*Filter .*bit_count\\(.*$")
+    assert(dedupIdx.nonEmpty, s"$q no pair-dedup aggregate in:\n$p")
+    assert(hammingIdx.size == 1, s"$q Hamming filter count in:\n$p")
+    assert(hammingIdx.head > dedupIdx.max, s"$q Hamming filter above the pair dedup in:\n$p")
+  }
+
+  test("q49/q94 simhash: one kernel, window cap, no rejoin") {
+    // One pipeline on the md5 basis: the simhash is one kernel call per
+    // row (no token explode feeding a 60-sum vote aggregate), and the pairs
+    // carry their signatures through hammingPairs64's capped pair search.
+    for (q <- Seq("q49_simhash_pairs", "q94_simhash_portable")) {
+      val p = finalPlanOf(q)
+      assert(occurrences(p, "graft_simhash64(") == 1, s"$q simhash kernel count in:\n$p")
+      assert(!p.contains("Generate explode(split"), s"$q token explode in:\n$p")
+      assert(!"(?m)^.*HashAggregate.*\\bsum\\(".r.findFirstIn(p).isDefined,
+        s"$q vote aggregate in:\n$p")
+      assertHammingPairsShape(q, p)
     }
+  }
+
+  test("q178/q180 perceptual near-dup: chunk-bucketed candidates, never cartesian") {
+    // candidates meet in (chunk-index, chunk-value) buckets, whose key
+    // cardinality is linear in inputs (hammingPairs64's pigeonhole)
+    for (q <- Seq("q178_image_neardup", "q180_audio_neardup"))
+      assertHammingPairsShape(q, finalPlanOf(q))
   }
 
   test("non-broadcast regime: join family falls back to shuffle joins, still equi") {
