@@ -931,9 +931,8 @@ object SparkEntry {
         dim = 64, k = 5, bits = 4, tables = 16)
     }),
     "q52_ivf_topk" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-        .select(col("vec_id"), transform(col("embedding"), x => x.cast(DoubleType)).as("embedding"))
       // nProbe validated by RecallSpec: recall@5 >= 0.8 vs q50 on raw noise
+      val emb = t(s, d, "embeddings")
       VectorFunctions.ivfTopK(emb, emb.filter(col("vec_id") < 5), "vec_id", "embedding",
         k = 5, nCentroids = 32, nProbe = 20)
     }),
@@ -1012,7 +1011,7 @@ object SparkEntry {
     // every band/table/cell, so the approximate operator MUST surface every
     // injected pair — making the result deterministic and SQL-oracle-able
     // even though the machinery (minhash banding, simhash chunks, sign-LSH,
-    // IVF cells) is the same code the rows-only queries exercise.
+    // IVF cells) is the same code the full-result queries exercise.
     // ------------------------------------------------------------------
     "q61_minhash_exact_recall" -> ((s, d) => {
       val docs = t(s, d, "documents")
@@ -1369,13 +1368,6 @@ object SparkEntry {
       // signatures, bucket pairs, and cosine verify all oracle-replayed
       VectorFunctions.cosineNearDupPairs(t(s, d, "embeddings"),
         "vec_id", "embedding", dim = 64, threshold = 0.25, bits = 6)),
-    "q96_ivf_portable" -> ((s, d) => {
-      // portable IVF: systematic centroid seed (id % 25 == 0), cosine
-      // assignment + probing, exact verify — fully oracle-replayed
-      val emb = t(s, d, "embeddings")
-      VectorFunctions.ivfTopKPortable(emb, emb.filter(col("vec_id") < 5),
-        "vec_id", "embedding", k = 5)
-    }),
     "q97_dup_spans" -> ((s, d) =>
       // span-level duplication stats (Lee et al. 2022 shape): per doc, how
       // many word-8-grams also occur in other docs, and the longest
@@ -2777,39 +2769,6 @@ object SparkEntry {
           w => length(w) > 0)),
         budgets)
     }),
-    "q196_twin_gate" -> ((s, d) => {
-      // MACHINE-gate for the rows-only natives (round-12 verdict #6): the
-      // no-oracle IVF surface is correctness-gated through its
-      // oracle-green portable twin, and this query moves that pairing
-      // from prose into the driver's CORRECTNESS artifact itself — one
-      // row per (rows_only_query, twin), so a consumer mechanically joins
-      // each native's own artifact row (non-trivial row count) to its
-      // twin's row (bit-for-bit hash match) in the SAME file. The Spark
-      // side re-asserts the registry invariants (twin registered, twin
-      // oracle-checked, native genuinely oracle-less) and COMPOSES each
-      // native so a broken/renamed native errors this dump; a registry
-      // drift turns the row red against the oracle's replay of the
-      // pairing. NOT free: composing the budgeted natives runs their
-      // EAGER construction-time jobs (ivfTopK's centroid collect scans
-      // the corpus; budgeted Lloyd paths collect per training round), so
-      // a bench timing of this query re-pays those collects on top of
-      // the natives' own rows — the probe verifies wiring, it does not
-      // deduplicate work. Acceptable because the eager jobs are
-      // centroid-table-sized (bounded by the budget), not corpus-sized
-      // shuffles; if q196 ever matters at sf10, downgrade the probe to
-      // registry-membership assertions.
-      import s.implicits._
-      val rows = rowsOnlyTwins.toSeq.sortBy(_._1).map { case (q, twin) =>
-        require(queries.contains(twin) && oracleSql.contains(twin),
-          s"twin gate: $q twin $twin unregistered or oracle-less")
-        require(!oracleSql.contains(q),
-          s"twin gate: $q has an oracle — drop it from rowsOnlyTwins")
-        val composed = queries(q)(s, d) // wiring probe: must compose
-        require(composed.columns.nonEmpty, s"twin gate: $q composed empty schema")
-        (q, twin)
-      }
-      rows.toDF("rows_only_query", "twin")
-    }),
     "q197_tfidf_champion" -> ((s, d) => {
       // q130's doc-to-doc sparse serve on a CHAMPION-LIST index (round 14):
       // uncapped, every posting list on this fixture grows ∝ n/31 (the
@@ -2903,19 +2862,6 @@ object SparkEntry {
     "supplier", "part", "orders", "lineitem", "events", "documents",
     "embeddings")
 
-  /** The rows-only ↔ oracle-green twin pairing, machine-readable: each
-    * key is a registered query with NO DuckDB oracle (today only native
-    * IVF, whose results are judged by recall, not replayed); its value is
-    * the registered PORTABLE twin — the same search on an engine-neutral
-    * basis — that IS oracle-checked bit-for-bit. Verify
-    * dumps this as rows_only_twins.json next to oracle_sql.json so
-    * correctness consumers can verify the pairing automatically instead
-    * of trusting COVERAGE.md prose. A spec pins the invariants: every
-    * no-oracle query has a twin, every twin has an oracle.
-    */
-  val rowsOnlyTwins: Map[String, String] = Map(
-    "q52_ivf_topk" -> "q96_ivf_portable")
-
   /** q147 Misra-Gries parity constants — the ONLY definition; the oracle
     * SQL interpolates them so capacity/shard changes cannot desync the two
     * sides. Capacity is deliberately generous: exactness needs
@@ -2987,19 +2933,11 @@ object SparkEntry {
     .empty[String, (org.apache.spark.sql.types.StructType, Array[Row])]
 
   // =====================================================================
-  // DuckDB oracles — same column names, deterministic result sets.
-  // Omitted entries (hash-based LSH ops, stubs) get the driver's weaker
-  // rows-only check by design.
+  // DuckDB oracles — same column names, deterministic result sets; every
+  // registered query has one (PlanShapeSpec pins queries.keySet ==
+  // oracleSql.keySet).
   // =====================================================================
   def oracleSql: Map[String, String] = Map(
-    // twin-gate replay: the declared rows-only ↔ twin pairing, one row per
-    // pair — the Spark side re-derives it under registry-invariant
-    // requires and native composition probes, so a drifted registry or a
-    // broken native reddens/errors this row in the driver artifact (see
-    // q196 in queries).
-    "q196_twin_gate" -> rowsOnlyTwins.toSeq.sortBy(_._1).map { case (q, t) =>
-      s"SELECT '$q' AS rows_only_query, '$t' AS twin"
-    }.mkString(" UNION ALL "),
     "q01_filter_columns" ->
       "SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem",
     "q02_rename" ->
@@ -3135,6 +3073,7 @@ SELECT sentence, n_docs, n_total FROM agg
 ORDER BY n_docs DESC, n_total DESC, sentence ASC LIMIT 20""",
     "q50_cosine_topk" -> cosineTopkOracleSql,
     "q51_lsh_topk" -> lshTopKOracleSql(embVectorsSql, queriesBelow = 5, k = 5, bits = 4, tables = 16),
+    "q52_ivf_topk" -> ivfTopKOracleSql(nCentroids = 32, nProbe = 20, k = 5, queryFilter = "vec_id < 5"),
     "q53_cosine_neardup" -> lshPairsOracleSql(embWithCopiesSql, "0.95", bits = 8, tables = 4),
     "q54_flatten_json" ->
       ("SELECT * FROM (VALUES (48.8, 'flo', CAST(1 AS BIGINT)), (51.5, 'dou', CAST(2 AS BIGINT))) " +
@@ -3423,7 +3362,6 @@ FROM e JOIN c USING (g) GROUP BY doc_id"""),
     "q93_minhash_portable" -> minhashPairsOracleSql,
     "q94_simhash_portable" -> simhashPairsOracleSql,
     "q95_lsh_portable" -> lshPairsOracleSql(embVectorsSql, "0.25", bits = 6, tables = 4),
-    "q96_ivf_portable" -> ivfPortableOracleSql,
     "q97_dup_spans" ->
       """WITH tk AS (SELECT doc_id, regexp_split_to_array(trim(coalesce(text, '')), '\s+') AS toks FROM documents),
 g AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos, array_to_string(toks[CAST(i AS INTEGER):CAST(i + 7 AS INTEGER)], ' ') AS g
@@ -4615,35 +4553,32 @@ WHERE rank <= 5"""
       "SELECT vec_id, cid AS cell, CAST(rank AS BIGINT) AS proto_rank, " +
       "(rank - 1) * 100 < n * 50 AS kept FROM pr"
 
-  /** DuckDB replay of the portable IVF pipeline (systematic centroid seed,
-    * cosine assignment/probing with deterministic tie-breaks).
+  /** DuckDB replay of [[VectorFunctions.ivfTopK]]: the md5-spread seed
+    * (cid = 0-based rank by (portableHash60(vec_id), vec_id) among
+    * non-null vectors), argmax-cosine assignment and top-`nProbe` probing
+    * with (cosine desc, cid) tie rules, the exact-cosine verify ranked by
+    * (cosine desc, neighbor_id). Queries are the embeddings matching
+    * `queryFilter`.
     */
-  private lazy val ivfPortableOracleSql: String = {
-    def cos(a: String, b: String): String =
-      s"(CASE WHEN sqrt(list_sum(list_transform($a, x -> x * x))) * " +
-        s"sqrt(list_sum(list_transform($b, x -> x * x))) = 0.0 THEN 0.0 " +
-        s"ELSE list_sum(list_transform(list_zip($a, $b), p -> p[1] * p[2])) " +
-        s"/ (sqrt(list_sum(list_transform($a, x -> x * x))) * " +
-        s"sqrt(list_sum(list_transform($b, x -> x * x)))) END)"
-    // cents replays ivfTopKPortable's fixed centroid budget (the k
-    // smallest systematic seeds — DefaultMaxCentroids, the round-13
-    // default across the centroid family)
-    "WITH emb AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings), " +
-      "cents AS (SELECT vec_id AS cid, v AS cv FROM emb WHERE vec_id % 25 = 0 " +
-      s"ORDER BY vec_id LIMIT ${VectorFunctions.DefaultMaxCentroids}), " +
-      "assign0 AS (SELECT e.vec_id AS id, c.cid, e.v, " + cos("e.v", "c.cv") + " AS cs, " +
+  private def ivfTopKOracleSql(nCentroids: Int, nProbe: Int, k: Int,
+                               queryFilter: String): String = {
+    val cos = portableCosSql _
+    s"WITH emb AS ($embVectorsSql), " +
+      s"cents AS (SELECT row_number() OVER (ORDER BY ${portableHash60Sql("vec_id")}, vec_id) - 1 AS cid, " +
+      s"v AS cv FROM emb WHERE v IS NOT NULL ORDER BY cid LIMIT $nCentroids), " +
+      "assign0 AS (SELECT e.vec_id AS id, c.cid, e.v, " +
       "row_number() OVER (PARTITION BY e.vec_id ORDER BY " + cos("e.v", "c.cv") + " DESC, c.cid) AS rn " +
-      "FROM emb e CROSS JOIN cents c), " +
+      "FROM emb e CROSS JOIN cents c WHERE e.v IS NOT NULL), " +
       "assigned AS (SELECT id, cid AS cell, v FROM assign0 WHERE rn = 1), " +
       "probes0 AS (SELECT q.vec_id AS query_id, c.cid, q.v AS qv, " +
       "row_number() OVER (PARTITION BY q.vec_id ORDER BY " + cos("q.v", "c.cv") + " DESC, c.cid) AS rn " +
-      "FROM emb q CROSS JOIN cents c WHERE q.vec_id < 5), " +
-      "probes AS (SELECT query_id, qv, cid AS cell FROM probes0 WHERE rn <= 5), " +
+      s"FROM (SELECT * FROM emb WHERE $queryFilter) q CROSS JOIN cents c), " +
+      s"probes AS (SELECT query_id, qv, cid AS cell FROM probes0 WHERE rn <= $nProbe), " +
       "scored AS (SELECT p.query_id, a.id AS neighbor_id, " + cos("p.qv", "a.v") + " AS c " +
       "FROM probes p JOIN assigned a ON a.cell = p.cell WHERE a.id <> p.query_id) " +
       "SELECT query_id, neighbor_id, round(c, 6) AS cosine, " +
       "CAST(row_number() OVER (PARTITION BY query_id ORDER BY c DESC, neighbor_id) AS INTEGER) AS rank " +
-      "FROM scored QUALIFY rank <= 5"
+      s"FROM scored QUALIFY rank <= $k"
   }
 
   /** The embeddings as (vec_id, v DOUBLE[]) — the emb CTE of the sign-LSH

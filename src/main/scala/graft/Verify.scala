@@ -50,12 +50,6 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    // The rows-only ↔ portable-twin pairing, so the correctness consumer
-    // can check each no-oracle native against its oracle-green replay
-    // automatically (rows_only_twin: q49→q94 etc.).
-    val twins = SparkEntry.rowsOnlyTwins
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/rows_only_twins.json"), twins)
     spark.stop()
   }
 }

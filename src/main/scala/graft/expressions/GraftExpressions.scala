@@ -881,42 +881,6 @@ object Kernels {
     if (denom == 0.0) 0.0 else dot / denom
   }
 
-  /** Indices of the `n` nearest centroids to `vec` by squared L2 distance,
-    * nearest first, ties broken by lower index — parity with sorting
-    * (distance, index) structs via array_sort. One compiled loop over
-    * (dim × centroids) per row; the IVF assignment hot path.
-    */
-  def nearestCentroids(vec: ArrayData, cents: Array[Array[Double]], n: Int): ArrayData = {
-    val k = cents.length
-    val d = new Array[Double](k)
-    var i = 0
-    while (i < k) {
-      val c = cents(i)
-      var s = 0.0
-      var j = 0
-      val m = math.min(vec.numElements(), c.length)
-      while (j < m) { val diff = vec.getDouble(j) - c(j); s += diff * diff; j += 1 }
-      d(i) = s
-      i += 1
-    }
-    val idx = Array.tabulate(k)(identity)
-    val nn = math.min(n, k)
-    // partial selection sort: nn smallest distances to the front
-    var a = 0
-    while (a < nn) {
-      var best = a
-      var b = a + 1
-      while (b < k) {
-        if (d(idx(b)) < d(idx(best)) ||
-          (d(idx(b)) == d(idx(best)) && idx(b) < idx(best))) best = b
-        b += 1
-      }
-      val t = idx(a); idx(a) = idx(best); idx(best) = t
-      a += 1
-    }
-    new GenericArrayData(java.util.Arrays.copyOf(idx, nn))
-  }
-
   /** cid of the argmax-COSINE centroid, ties to the lowest cid — the
     * compiled quantized-Lloyd cell assignment (VectorFunctions'
     * SemDeDup/prototype-prune/cluster-balance core). The per-centroid
@@ -1288,9 +1252,6 @@ object GraftFunctions {
       Literal(0)))
   def planeSigs(c: Column, planes: Seq[Seq[Double]], bits: Int): Column =
     kernel("planeSigs", longs, e(c), const(planes.map(_.toArray).toArray), Literal(bits))
-  def nearestCentroids(c: Column, cents: Array[Array[Double]], n: Int): Column =
-    kernel("nearestCentroids", ArrayType(IntegerType, containsNull = false), e(c),
-      const(cents), Literal(n))
 
   /** Compiled quantized-Lloyd cell assignment: cid of the argmax-cosine
     * centroid, ties to the lowest cid (see Kernels.nearestCentroidCos).

@@ -566,81 +566,6 @@ object VectorFunctions {
       Seq.fill(bits)(Seq.fill(dim)(rnd.nextGaussian()))
     }
 
-  /** IVF top-k on a PORTABLE basis: centroids are the corpus vectors whose
-    * id ≡ 0 (mod centroidEvery) — a deterministic systematic seed any
-    * engine reproduces (the production `ivfTopK` uses the better
-    * hash-spread sample + native kernel). Cell assignment and probing rank
-    * by cosine with (cosine desc, id) tie-breaks, so an external SQL
-    * replay is bit-identical end to end.
-    */
-  def ivfTopKPortable(corpus: DataFrame, queries: DataFrame,
-                      idCol: String, vecCol: String, k: Int,
-                      centroidEvery: Int = 25, nProbe: Int = 5,
-                      maxCentroids: Int = DefaultMaxCentroids): DataFrame = {
-    val v = corpus.select(col(idCol).as("id"),
-      transform(col(vecCol), x => x.cast("double")).as("__v"))
-    val seeds = v.filter(col("id") % centroidEvery === 0)
-      .select(col("id").as("cid"), col("__v").as("__cv"))
-    // The same fixed budget as the quantized-Lloyd family (the bare
-    // systematic seed makes k ∝ n, so corpus assignment is n²/stride):
-    // the k smallest seed ids, replayed in SQL as ORDER BY…LIMIT. On the
-    // budgeted path the centroid table is bounded driver state: collect
-    // it ONCE — the corpus-side assignment runs as the compiled
-    // Kernels.nearestCentroidCos narrow map (bit-parity with the
-    // row_number-over-(cosine desc, cid) formulation — same kernel and
-    // tie rule as quantizedLloyd, asserted in ExpressionsSpec) and the
-    // query-side probing reads the same values as a local relation. The
-    // unbounded opt-in keeps the lazy broadcast-cross + window and never
-    // collects.
-    val (cents, assigned) =
-      if (maxCentroids <= 0) {
-        val wAssign = Window.partitionBy(col("id"))
-          .orderBy(col("__cs").desc, col("cid").asc)
-        val a = v.crossJoin(broadcast(seeds))
-          .withColumn("__cs", cosine(col("__v"), col("__cv")))
-          .withColumn("__rn", row_number().over(wAssign))
-          .filter(col("__rn") === 1)
-          .select(col("id"), col("cid").as("cell"), col("__v"))
-        (seeds, a)
-      } else {
-        val rows = seeds.orderBy(col("cid")).limit(maxCentroids).collect()
-          .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).sortBy(_._1)
-        require(rows.nonEmpty,
-          s"ivfTopKPortable: no centroid seeds (no $idCol % $centroidEvery == 0 ids)")
-        val spark = corpus.sparkSession
-        import spark.implicits._
-        val local = rows.toSeq.map { case (c, cv) => (c, cv.toSeq) }
-          .toDF("cid", "__cv")
-        val a = v.select(col("id"),
-          graft.expressions.GraftFunctions
-            .nearestCentroidCos(col("__v"), rows.map(_._2), rows.map(_._1))
-            .as("cell"),
-          col("__v"))
-        (local, a)
-      }
-    val qv = queries.select(col(idCol).as("query_id"),
-      transform(col(vecCol), x => x.cast("double")).as("__qv"))
-    // Query-side probing needs the top-nProbe cells (not just argmax) and
-    // the query set is broadcast-small — the cross+window stays.
-    val wProbe = Window.partitionBy(col("query_id"))
-      .orderBy(col("__cs").desc, col("cid").asc)
-    val probes = qv.crossJoin(broadcast(cents))
-      .withColumn("__cs", cosine(col("__qv"), col("__cv")))
-      .withColumn("__rn", row_number().over(wProbe))
-      .filter(col("__rn") <= nProbe)
-      .select(col("query_id"), col("__qv"), col("cid").as("cell"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    probes.join(assigned, Seq("cell"))
-      .filter(col("id") =!= col("query_id"))
-      .withColumnRenamed("id", "neighbor_id")
-      .withColumn("cosine", cosine(col("__qv"), col("__v")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"),
-        round(col("cosine"), 6).as("cosine"), col("rank"))
-  }
-
   /** (id, __v) rows of `df`, the vector widened to double element-wise
     * unless it is array<double> already.
     */
@@ -738,40 +663,60 @@ object VectorFunctions {
       .select(col("id_a"), col("id_b"), round(col("cosine"), 6).as("cosine"))
   }
 
-  /** IVF-style ANN: k-means-lite partitioning via nearest of `nCentroids`
-    * sampled corpus vectors (deterministic sample), then per-query search
-    * restricted to the query's `nProbe` closest centroids' inverted lists.
-    * The coarse quantizer is a broadcast literal; assignment is a narrow map.
+  /** IVF top-k: the coarse quantizer is the first `nCentroids` corpus
+    * vectors ordered by ([[graft.operators.Sampling.portableHash60]](id),
+    * id) — an md5-spread deterministic sample, decorrelated from the
+    * corpus's insertion/sort order, collected once; a centroid's cid is its
+    * 0-based seed rank, so ids of any type work. Corpus rows go to their
+    * argmax-cosine centroid through the compiled Kernels.nearestCentroidCos
+    * narrow map (ties to the lowest cid); each query probes its top
+    * `nProbe` cells by (cosine desc, cid) over a broadcast cross with the
+    * centroid table (queries × nCentroids rows), and the probe rows are
+    * broadcast against the corpus scan; candidates are verified by
+    * exact cosine and ranked by (cosine desc, neighbor_id). Every step has
+    * an explicit tie rule, so a SQL engine replays the pipeline
+    * bit-for-bit (SparkEntry's q52 oracle).
     */
   def ivfTopK(corpus: DataFrame, queries: DataFrame,
               idCol: String, vecCol: String, k: Int,
               nCentroids: Int = 64, nProbe: Int = 8): DataFrame = {
-    // Coarse centroids: a HASH-SPREAD deterministic sample of corpus vectors —
-    // ordering by xxhash64(id) decorrelates the sample from insertion/sort
-    // order (first-N-by-id seeds collapse to one region of a sorted corpus),
-    // and TakeOrderedAndProject keeps the pick a single linear scan + heap.
-    // (k-means|| at scale would refine these; nearest-of-a-spread-sample is
-    // the standard cheap IVF seed.)
-    val cents: Array[Array[Double]] = corpus
-      .select(col(vecCol).as("v"), xxhash64(col(idCol)).as("__h"))
-      .orderBy(col("__h")).limit(nCentroids)
-      .collect().map(_.getSeq[Any](0).map(_.toString.toDouble).toArray)
-    // Cell assignment is a native codegen'd kernel (one compiled
-    // dim×centroids loop per row) instead of interpreted HOF folds.
-    def nearestCentroids(vec: Column, n: Int): Column =
-      graft.expressions.GraftFunctions.nearestCentroids(vec, cents, n)
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("__cv"))
-      .withColumn("__cell", element_at(nearestCentroids(col("__cv"), 1), 1))
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv"))
-      .withColumn("__cell", explode(nearestCentroids(col("__qv"), nProbe)))
-    val scored = c.join(broadcast(q), Seq("__cell"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cosine", cosine(col("__qv"), col("__cv")))
+    val v = vectors(corpus, idCol, vecCol)
+    val seeds = v.filter(col("__v").isNotNull)
+      .orderBy(graft.operators.Sampling.portableHash60(col("id")), col("id"))
+      .limit(nCentroids).select(col("__v")).collect()
+      .map(_.getSeq[Double](0).toArray)
+    require(seeds.nonEmpty, "ivfTopK: no corpus vectors to seed centroids from")
+    val cids = seeds.indices.map(_.toLong).toArray
+    val spark = corpus.sparkSession
+    import spark.implicits._
+    val cents = cids.toSeq.zip(seeds.map(_.toSeq)).toDF("cid", "__cv")
+    // A null vector gets cell -1, which no probe matches. The non-null
+    // cell keeps Catalyst from inferring an isnotnull(cell) filter that
+    // would run the kernel a second time per row below the projection.
+    val assigned = v.select(col("id"),
+      coalesce(graft.expressions.GraftFunctions.nearestCentroidCos(col("__v"), seeds, cids),
+        lit(-1L)).as("cell"),
+      col("__v"))
+    val qv = vectors(queries, idCol, vecCol)
+      .select(col("id").as("query_id"), col("__v").as("__qv"))
+    val wProbe = Window.partitionBy(col("query_id"))
+      .orderBy(col("__cs").desc, col("cid").asc)
+    val probes = qv.crossJoin(broadcast(cents))
+      .withColumn("__cs", cosine(col("__qv"), col("__cv")))
+      .withColumn("__rn", row_number().over(wProbe))
+      .filter(col("__rn") <= nProbe)
+      .select(col("query_id"), col("__qv"), col("cid").as("cell"))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
+    // queries × nProbe probe rows are broadcast; the corpus is never moved
+    assigned.join(broadcast(probes), Seq("cell"))
+      .filter(col("id") =!= col("query_id"))
+      .withColumnRenamed("id", "neighbor_id")
+      .withColumn("cosine", cosine(col("__qv"), col("__v")))
+      .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), round(col("cosine"), 6).as("cosine"), col("rank"))
+      .select(col("query_id"), col("neighbor_id"),
+        round(col("cosine"), 6).as("cosine"), col("rank"))
   }
 
   /** SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning at
@@ -782,7 +727,7 @@ object VectorFunctions {
     * per-cell pair cost is bounded by cell size, never corpus size.
     *
     * Deterministic and externally replayable by construction (the
-    * q83/q93–q96 portable technique): components are quantized to integers
+    * q83/q93–q95 portable technique): components are quantized to integers
     * (floor(x·scale + 0.5), exact in doubles), so every Lloyd-round sum is
     * exact integer arithmetic — order-independent however Spark schedules
     * the aggregation — centroid means are one IEEE division + floor, and
@@ -800,8 +745,8 @@ object VectorFunctions {
     * bounds it against degenerate cells (oversized cells are excluded from
     * pair generation behind an observed dropped-cells/rows metric — the
     * minhash bucket-cap contract). Cells inherit the skew bound of the
-    * seed spacing — at 100 TB the seed would come from a hash-spread
-    * sample (ivfTopK's) and `rounds` Lloyd passes tighten cells without
+    * seed spacing — at 100 TB the seed would come from an md5-spread
+    * sample ([[ivfTopK]]'s) and `rounds` Lloyd passes tighten cells without
     * any new shuffle shape. The compiled kernel reproduces the
     * max_by-over-cosine arithmetic bit-for-bit (ExpressionsSpec), so the
     * pipeline stays externally replayable.
@@ -947,8 +892,8 @@ object VectorFunctions {
     } else {
       // Budgeted (default) path: the centroid table is ≤ maxCentroids×dim
       // doubles — bounded driver state — so assignment runs as the compiled
-      // Kernels.nearestCentroidCos narrow map (one dim×k loop per row, the
-      // ivfTopK :559 technique) instead of a corpus×k cross-join: no
+      // Kernels.nearestCentroidCos narrow map (one dim×k loop per row, as
+      // in ivfTopK) instead of a corpus×k cross-join: no
       // per-pair 64-dim array traffic, no join at all. Bit-parity with the
       // max_by-over-cosine formulation (and thus the DuckDB oracle replay)
       // is asserted in ExpressionsSpec. The per-round collect is the

@@ -125,26 +125,6 @@ class ExpressionsSpec extends SparkSpec {
     }
   }
 
-  test("nearestCentroids expression matches the HOF (distance, index) sort") {
-    val rnd = new scala.util.Random(5)
-    val cents: Array[Array[Double]] = Array.fill(10)(Array.fill(8)(rnd.nextGaussian()))
-    val centLit = typedLit(cents.map(_.toSeq).toSeq)
-    def hofNearest(vec: org.apache.spark.sql.Column, n: Int) = {
-      val scored = transform(
-        zip_with(centLit, sequence(lit(0), lit(cents.length - 1)), (c, i) => struct(c.as("c"), i.as("i"))),
-        s => struct(
-          aggregate(zip_with(vec, s.getField("c"), (x, y) => (x - y) * (x - y)),
-            lit(0.0d), (acc, v) => acc + v).as("d"),
-          s.getField("i").as("i")))
-      slice(transform(array_sort(scored), s => s.getField("i")), 1, n)
-    }
-    val vecs = Seq.fill(40)(Seq.fill(8)(rnd.nextGaussian())).toDF("v")
-    val out = vecs.select(
-      GraftFunctions.nearestCentroids(col("v"), cents, 3).as("native"),
-      hofNearest(col("v"), 3).as("hof"))
-    assert(out.filter(col("native") =!= col("hof")).count() == 0)
-  }
-
   test("nearestCentroidCos matches max_by over the cosine broadcast join bit-exactly") {
     // The compiled quantized-Lloyd assignment must reproduce the
     // max_by(cid, (cosine, -cid)) formulation the DuckDB oracles replay —
@@ -680,13 +660,6 @@ class ExpressionsSpec extends SparkSpec {
             when(dotHof(c(0), typedLit(planes(t * 3 + b))) >= 0, lit(1L << b)).otherwise(lit(0L))
           }.reduce(_ + _)
         }: _*)),
-      KernelCase("nearestCentroids", "ArrayType(IntegerType,false)", in => Seq(in.va),
-        c => G.nearestCentroids(c(0), centsDup, 3), c => {
-          val scored = transform(zip_with(typedLit(centsDup.map(_.toSeq).toSeq),
-            sequence(lit(0), lit(centsDup.length - 1)), (cv, i) => struct(cv.as("cv"), i.as("i"))),
-            s => struct(sqL2(c(0), s.getField("cv"), lit(0.0d)).as("d"), s.getField("i").as("i")))
-          slice(transform(array_sort(scored), s => s.getField("i")), 1, 3)
-        }),
       KernelCase("nearestCentroidCos", "LongType", in => Seq(in.va),
         c => G.nearestCentroidCos(c(0), centsDup, centIds), c => {
           val best = array_max(transform(typedLit(centIds.toSeq.zip(centsDup.map(_.toSeq).toSeq)), e => {

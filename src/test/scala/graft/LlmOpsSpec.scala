@@ -362,6 +362,13 @@ class LlmOpsSpec extends SparkSpec {
       k = 2, nCentroids = 5, nProbe = 5)
     assert(out.orderBy("rank").select("neighbor_id").as[Long].collect().toSeq ==
       Seq(5L, 2L))
+    // the cid is the seed rank, not the id: string ids seed, assign and
+    // probe the same way
+    val svecs = vecs.withColumn("id", concat(lit("v"), col("id").cast("string")))
+    val sout = VectorFunctions.ivfTopK(svecs, svecs.filter(col("id") === "v1"), "id", "v",
+      k = 2, nCentroids = 5, nProbe = 5)
+    assert(sout.orderBy("rank").select("neighbor_id").as[String].collect().toSeq ==
+      Seq("v5", "v2"))
   }
 
   test("cosine near-dup pairs recovers duplicate vectors") {

@@ -46,18 +46,11 @@ class PlanShapeSpec extends SparkSpec {
     "Exchange hashpartitioning[^\n]*".r.findAllIn(p)
       .count(m => !m.contains("REPARTITION_BY_NUM"))
 
-  test("rows-only twin registry: every no-oracle query has an oracle-green twin") {
+  test("every registered query has a DuckDB oracle") {
     val registered = SparkEntry.queries.keySet
     val withOracle = SparkEntry.oracleSql.keySet
-    val noOracle = registered -- withOracle
-    // the pairing covers EXACTLY the no-oracle set — a new rows-only query
-    // cannot land without declaring its portable twin
-    assert(SparkEntry.rowsOnlyTwins.keySet == noOracle,
-      s"twin keys ${SparkEntry.rowsOnlyTwins.keySet} != no-oracle set $noOracle")
-    SparkEntry.rowsOnlyTwins.foreach { case (k, twin) =>
-      assert(registered.contains(twin), s"$k twin $twin is not a registered query")
-      assert(withOracle.contains(twin), s"$k twin $twin has no oracle SQL")
-    }
+    assert(registered == withOracle,
+      s"no oracle: ${registered -- withOracle}; no query: ${withOracle -- registered}")
   }
 
   test("q192 sharded JDBC pull scans through 4 partitioned connections") {
@@ -98,17 +91,20 @@ class PlanShapeSpec extends SparkSpec {
     }
   }
 
-  test("q96 budgeted IVF-portable assignment is the compiled kernel") {
-    // Same round-13 rule as the Lloyd/PQ family: the budgeted path's
-    // CORPUS-side cell assignment must be the graft_nearest_centroid_cos
-    // narrow map, never the broadcast-cross + row_number window (which
-    // only the explicit maxCentroids=0 opt-in keeps). The QUERY-side
-    // probing legitimately keeps a queries×centroids broadcast cross
-    // (top-nProbe cells over a BUDGET-BOUNDED table), so kernel presence
-    // is the pin — it cannot coexist with the corpus×k assignment join.
-    val p = planOf("q96_ivf_portable")
-    assert(p.contains("graft_nearest_centroid_cos"),
-      s"q96 assignment not on the compiled kernel:\n$p")
+  test("q52 IVF assignment is the compiled cosine kernel on the md5 seed") {
+    // Same rule as the Lloyd/PQ family: the CORPUS-side cell assignment is
+    // the graft_nearest_centroid_cos narrow map, never a broadcast-cross +
+    // row_number window. The QUERY-side probing legitimately keeps a
+    // queries×centroids broadcast cross (top-nProbe cells over an
+    // nCentroids-row table), so kernel presence is the pin — once per row:
+    // an inferred isnotnull(cell) filter would call it again below the
+    // projection. The L2 kernel and the xxhash64 seed, which no SQL engine
+    // replays, must not return.
+    val p = finalPlanOf("q52_ivf_topk")
+    assert(occurrences(p, "graft_nearest_centroid_cos(") == 1,
+      s"q52 assignment not one compiled kernel call:\n$p")
+    assert(!p.contains("graft_nearest_centroids"), s"q52 plans the L2 kernel:\n$p")
+    assert(!p.contains("xxhash64"), s"q52 plans xxhash64:\n$p")
   }
 
   test("q46 exact jaccard plans no cartesian / nested-loop join, df cap present") {

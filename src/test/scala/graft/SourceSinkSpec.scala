@@ -296,10 +296,11 @@ class SourceSinkSpec extends SparkSpec {
     val cents = Array.fill(10)(Array.fill(8)(rnd.nextGaussian()))
     val books = Array.fill(2)(Array.fill(4)(Array.fill(3)(rnd.nextInt(100).toLong)))
     val cids = Array.fill(2)(Array.tabulate(4)(_.toLong))
+    val centIds = Array.tabulate(10)(_.toLong)
     val vecs = Seq((Seq.fill(8)(0.5), 0L, Seq(1L, 2L, 3L))).toDF("v", "sub", "sv")
     def fp(c: Array[Array[Double]], b: Array[Array[Array[Long]]]) =
       Memoize.planFingerprint(vecs.select(
-        GraftFunctions.nearestCentroids(col("v"), c, 2).as("nc"),
+        GraftFunctions.nearestCentroidCos(col("v"), c, centIds).as("nc"),
         GraftFunctions.nearestCodeL2(col("sv"), col("sub"), b, cids).as("code")))
     def copyOf(c: Array[Array[Double]]) = c.map(_.clone)
     def booksCopy = books.map(_.map(_.clone))

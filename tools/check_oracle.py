@@ -1,7 +1,8 @@
 #!/usr/bin/env python3
 """Local replica of the driver's DuckDB oracle compare: for each query dir in
 outDir, run the oracle SQL against the sf parquet tables and diff against the
-Spark result (columns sorted by name, rows sorted by all columns)."""
+Spark result (columns sorted by name, rows sorted by all columns). A query
+dir without oracle SQL is a FAIL; exits 1 when any FAIL remains."""
 import json, sys, glob
 import duckdb
 import pandas as pd
@@ -30,12 +31,12 @@ def norm_cell(v):
     return v
 
 ok = fail = 0
-rows_only = []
 for qdir in sorted(glob.glob(f"{out_dir}/q*")):
     name = qdir.split("/")[-1]
     spark_df = con.execute(f"SELECT * FROM '{qdir}/*.parquet'").fetchdf()
     if name not in oracle:
-        rows_only.append((name, len(spark_df)))
+        print(f"FAIL {name}: no oracle SQL ({len(spark_df)} rows)")
+        fail += 1
         continue
     try:
         oracle_df = con.execute(oracle[name]).fetchdf()
@@ -66,20 +67,5 @@ for qdir in sorted(glob.glob(f"{out_dir}/q*")):
     print(f"ok   {name} ({len(a)} rows){note}")
     ok += 1
 
-twin_notes = []
-try:
-    twins = json.load(open(f"{out_dir}/rows_only_twins.json"))
-except Exception:
-    twins = {}
-for name, nrows in rows_only:
-    twin = twins.get(name)
-    if twin is None:
-        twin_notes.append(f"{name}: NO TWIN declared")
-    elif twin not in oracle:
-        twin_notes.append(f"{name}: twin {twin} has no oracle")
-    else:
-        twin_notes.append(f"{name}: twin {twin} oracle-checked above")
-
-print(f"\n{ok} ok, {fail} fail; rows-only (no oracle): {rows_only}")
-if twin_notes:
-    print("rows-only twin pairing: " + "; ".join(twin_notes))
+print(f"\n{ok} ok, {fail} fail")
+sys.exit(1 if fail else 0)
